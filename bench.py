@@ -608,11 +608,10 @@ def main() -> None:
         _adv_old = None
     spark.conf.set(_ADV_KEY, "1m")
     try:
+        # the replicated corpus both sections read is built OUTSIDE
+        # their try blocks, so each section fails with its own error
+        # (or, if the build itself fails, both record the build's)
         try:
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(
-                "scale lane: minhash+lsh x64"
-            )
             _docs = _sl_load(spark, sf_dir, "documents").select(
                 "doc_id", "text"
             )
@@ -633,19 +632,30 @@ def main() -> None:
                     ).alias("text"),
                 )
             )
-            _sl_noop(_sl_lsh(_sl_minhash(_sl_shingles(_docs_rep))))
-            timings["scale_minhash_lsh"] = round(time.time() - t0, 3)
+            _rep_err = None
         except Exception as exc:  # noqa: BLE001
-            errors["scale_minhash_lsh"] = repr(exc)
-        try:
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(
-                "scale lane: substring postings x64"
-            )
-            _sl_noop(_sl_postings(_docs_rep))
-            timings["scale_substring_postings"] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001
-            errors["scale_substring_postings"] = repr(exc)
+            _docs_rep, _rep_err = None, exc
+        for _name, _desc, _plan in (
+            (
+                "scale_minhash_lsh",
+                "scale lane: minhash+lsh x64",
+                lambda d: _sl_lsh(_sl_minhash(_sl_shingles(d))),
+            ),
+            (
+                "scale_substring_postings",
+                "scale lane: substring postings x64",
+                _sl_postings,
+            ),
+        ):
+            try:
+                if _rep_err is not None:
+                    raise _rep_err
+                t0 = time.time()
+                spark.sparkContext.setJobDescription(_desc)
+                _sl_noop(_plan(_docs_rep))
+                timings[_name] = round(time.time() - t0, 3)
+            except Exception as exc:  # noqa: BLE001
+                errors[_name] = repr(exc)
     finally:
         if _adv_old is None:
             spark.conf.unset(_ADV_KEY)

@@ -44,7 +44,10 @@ Design-for-scale notes:
 from __future__ import annotations
 
 import json
+import logging
+import math
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -54,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lintdb_spark.cache import tag_broadcasts, tag_cached
-from lintdb_spark.index import coarse
+from lintdb_spark.index import coarse, kernels, serve
 from lintdb_spark.index.query import (
     AndQuery,
     MatchQuery,
@@ -70,7 +73,7 @@ from lintdb_spark.index.quantizers import (
     quantizer_from_json,
     quantizer_to_json,
 )
-from lintdb_spark.index.schema import FieldType, QuantizerType, Schema
+from lintdb_spark.index.schema import DataType, FieldType, QuantizerType, Schema
 from lintdb_spark.index.store import SegmentStore
 
 
@@ -140,6 +143,32 @@ def _tags_broadcasts(fn):
 
 _POSTINGS_CACHE_MAX = 64  # serve-postings LRU slots (fields x tenants)
 
+# TERM values the driver-local path compares exactly like Spark's
+# ``col == lit(value)``; any other (field type, value type) pair keeps
+# the Spark plan and its casting rules
+_LOCAL_TERM_TYPES = {
+    DataType.INTEGER.value: (int,),
+    DataType.FLOAT.value: (int, float),
+    DataType.TEXT.value: (str,),
+}
+
+
+def _local_term_ok(data_type, value) -> bool:
+    """True when a TERM on a field of ``data_type`` compares ``value``
+    in Arrow exactly as Spark's equality does. Not so, and left to the
+    Spark plan: bools, ints outside int64, and on FLOAT fields NaN
+    (Spark SQL has NaN = NaN, Arrow does not) and ints beyond +-2^53
+    (Arrow refuses to cast them to float64)."""
+    if not isinstance(value, _LOCAL_TERM_TYPES.get(data_type, ())) or isinstance(
+        value, bool
+    ):
+        return False
+    if data_type == DataType.FLOAT.value:
+        return (
+            abs(value) <= 2**53 if isinstance(value, int) else not math.isnan(value)
+        )
+    return not isinstance(value, int) or -(2**63) <= value < 2**63
+
 
 class Index(SegmentStore):
     def __init__(self, spark: SparkSession, path: str, schema: Schema):
@@ -152,12 +181,23 @@ class Index(SegmentStore):
         # only while that thread is inside a @_tags_broadcasts serve
         # entry point (see _bc); thread-local because the HTTP server
         # issues concurrent searches against one shared Index
-        import threading
-
         self._bcast_tls = threading.local()
         # guards the _postings_serve LRU (lookup/insert/evict) against
         # concurrent server threads
         self._postings_cache_lock = threading.Lock()
+        # the driver-local serve state (serve.ServeState): one slot, for
+        # the (tenant, field) searched last; read lock-free, built and
+        # installed under _serve_lock
+        self._serve_slot = None
+        self._serve_lock = threading.Lock()
+
+    @property
+    def _exact_schema_tables(self) -> tuple[str, ...]:
+        # docs and vector-postings segments are written from exactly the
+        # columns _docs() / _postings() read them with
+        return ("docs",) + tuple(
+            f"postings/{f.name}" for f in self.schema.colbert_fields()
+        )
 
     def _on_meta_reloaded(self) -> None:
         # an external commit may have RE-TRAINED (new centroid
@@ -328,43 +368,6 @@ class Index(SegmentStore):
             + [f"postings/{f.name}" for f in sch.colbert_fields()]
             + [f"postings_text/{f.name}" for f in sch.analyzed_text_fields()]
         )
-
-    def _collect_doc_blobs(self, docs: DataFrame, codes_c, res_c, nt_c) -> dict:
-        """Materialize the serve-blob map {doc_id: (codes, residual
-        bytes, n_tokens)} on the driver. Arrow-batched toPandas when
-        available (the blob table is the largest driver transfer in the
-        serve path — measured 0.6 s vs 3.1 s for the row-at-a-time
-        py4j collect on the sf10 corpus, 50k docs x 8 KB residuals);
-        the conf is flipped only for this transfer and restored, and
-        any Arrow failure (unsupported type change, disabled conf
-        policy) falls back to collect()."""
-        sel = docs.select("doc_id", codes_c, res_c, nt_c)
-        key = "spark.sql.execution.arrow.pyspark.enabled"
-        try:
-            old = self.spark.conf.get(key, None)
-            self.spark.conf.set(key, "true")
-            try:
-                pdf = sel.toPandas()
-            finally:
-                if old is None:
-                    self.spark.conf.unset(key)
-                else:
-                    self.spark.conf.set(key, old)
-            return {
-                int(d): (np.asarray(c, dtype=np.int64), bytes(r), int(n))
-                for d, c, r, n in zip(
-                    pdf["doc_id"], pdf[codes_c], pdf[res_c], pdf[nt_c]
-                )
-            }
-        except Exception:  # noqa: BLE001 — Arrow path is an optimization only
-            return {
-                int(r["doc_id"]): (
-                    np.asarray(r[codes_c], dtype=np.int64),
-                    bytes(r[res_c]),
-                    int(r[nt_c]),
-                )
-                for r in sel.collect()
-            }
 
     def _write_postings(self, postings: DataFrame, path: str) -> None:
         """THE vector-postings segment layout, shared by add / rewrite
@@ -969,202 +972,76 @@ class Index(SegmentStore):
     def _top_centroids_batch(
         self, field: str, qmats: dict[int, np.ndarray], opts: SearchOptions
     ) -> list[tuple[int, int]]:
-        """Probe selection for a WHOLE query batch in a few vectorized
-        numpy passes — returns [(qid, centroid_id), ...] in per-query
-        rank order. The per-query Python loop this replaces was the
-        single largest cost of the warm sf10 batch (measured 5.8 s of
-        the 8.6 s wall for 1000 x 8-token queries at 8000 centroids —
-        driver-side and single-threaded, it dwarfed the distributed
-        cascade it fed).
-
-        Selection semantics are IDENTICAL to the sequential form (the
-        declarative twin ann.top_centroids and the oracle pin them):
-        float64 scores, per-token nomination ranked on round(score, 6)
-        with ascending-centroid_id tie-breaks, per-query centroid score
-        = max over its nominations' RAW scores, positives only, top
-        n_probe by (round(high, 6) desc, centroid_id asc). Tie-breaks
-        survive vectorization exactly: rounded scores live on the 1e-6
-        grid, so rint(r6 * 1e6) is an exact integer image of r6, and
-        the composite integer key ``K6 * M + (M - 1 - cid)`` is a
-        strict total order equal to (r6 desc, cid asc) — argpartition
-        over it selects precisely the stable-argsort head, with no
-        float-boundary ambiguity.
-
-        Memory: queries are processed in ~64 MB score-matrix chunks, so
-        a 10k-query batch never materializes a (total_tokens x M)
-        matrix."""
-        C = self.centroids[field].astype(np.float64)
-        M = C.shape[0]
-        k_top = min(max(opts.k_top_centroids, 1), M)
-        cid_tail = (M - 1 - np.arange(M, dtype=np.int64))[None, :]
-        qids = list(qmats)
-        chunk_tokens = max(1, (64 << 20) // (8 * max(M, 1)))
-        out: list[tuple[int, int]] = []
-        i = 0
-        while i < len(qids):
-            j, tok = i, 0
-            while j < len(qids) and (
-                tok == 0 or tok + np.asarray(qmats[qids[j]]).shape[0] <= chunk_tokens
-            ):
-                tok += np.asarray(qmats[qids[j]]).shape[0]
-                j += 1
-            chunk_q = qids[i:j]
-            i = j
-            Qall = np.concatenate(
-                [np.asarray(qmats[q], dtype=np.float64) for q in chunk_q], axis=0
-            )
-            scores = Qall @ C.T  # (tok, M)
-            # rint(x * 1e6) == rint(round(x, 6) * 1e6): numpy's round
-            # IS scale-rint-unscale, so the integer image is computed
-            # directly without materializing the rounded matrix
-            key = np.rint(scores * 1e6).astype(np.int64) * M + cid_tail
-            nom = np.argpartition(-key, k_top - 1, axis=1)[:, :k_top]
-            vals = np.take_along_axis(scores, nom, axis=1)
-            pos = 0
-            for q in chunk_q:
-                t = np.asarray(qmats[q]).shape[0]
-                c_ids = nom[pos : pos + t].ravel()
-                v = vals[pos : pos + t].ravel()
-                pos += t
-                order = np.argsort(c_ids, kind="stable")
-                c_s, v_s = c_ids[order], v[order]
-                uniq, first = np.unique(c_s, return_index=True)
-                high = np.maximum.reduceat(v_s, first)
-                m = high > 0
-                # final ranking uses Python round() like the sequential
-                # form always did (candidate sets are <= n_tok * k_top
-                # entries — negligible)
-                ranked = sorted(
-                    zip(uniq[m].tolist(), high[m].tolist()),
-                    key=lambda e: (-round(float(e[1]), 6), e[0]),
-                )
-                out.extend((int(q), int(c)) for c, _ in ranked[: opts.n_probe])
-        return out
+        """Probe selection for a WHOLE query batch — returns [(qid,
+        centroid_id), ...] in per-query rank order (kernels.top_centroids
+        over this field's centroid matrix)."""
+        return kernels.top_centroids(
+            self.centroids[field].astype(np.float64),
+            qmats,
+            opts.k_top_centroids,
+            opts.n_probe,
+        )
 
     def _plaid_udf(self, field: str, qtok: np.ndarray, threshold: float):
-        """D3/D4 codes-only stage-1 scorer (plaid.cpp:38-95): per query
-        token max centroid score over the doc's unique codes, sum over
-        query tokens; centroids scoring below threshold (for all query
-        tokens) are skipped."""
-        C = self.centroids[field]
-        qc = qtok.astype(np.float32) @ C.T  # (n_tok, k)
-        bc = self._bc(qc)
+        """D3/D4 codes-only stage-1 scorer over the doc's codes column
+        (kernels.plaid_scores)."""
+        bc = self._bc(qtok.astype(np.float32) @ self.centroids[field].T)
         thr = float(threshold)
 
         @F.pandas_udf(T.DoubleType())
         def plaid(codes: pd.Series) -> pd.Series:
-            m = bc.value
-            if len(codes) == 0:
-                return pd.Series(np.empty(0, dtype=np.float64))
-            # vectorized: one gather + segment-max (reduceat) across
-            # the whole Arrow batch; duplicate codes within a doc don't
-            # change a per-token max, so the reference's unique() is
-            # unnecessary. The threshold prunes, never disables: a
-            # below-threshold centroid column becomes -inf for every
-            # query token (reference score_documents_by_codes skips
-            # such codes, plaid.cpp:39-63), and a doc with no surviving
-            # column scores 0.
-            code_arrs = [np.asarray(c, dtype=np.int64) for c in codes]
-            lens = np.fromiter(
-                (len(c) for c in code_arrs), dtype=np.int64, count=len(code_arrs)
+            return pd.Series(
+                kernels.plaid_scores(
+                    bc.value, [np.asarray(c, dtype=np.int64) for c in codes], thr
+                )
             )
-            starts = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            M = m[:, np.concatenate(code_arrs)]
-            if thr > 0.0:
-                M = np.where(M.max(axis=0, keepdims=True) >= thr, M, -np.inf)
-            s = np.maximum.reduceat(M, starts, axis=1).sum(axis=0)
-            s = np.where(np.isfinite(s), s, 0.0)
-            return pd.Series(s.astype(np.float64))
 
         return plaid
 
-    def _maxsim_udf(self, field: str, qtok: np.ndarray, normalize: bool = True):
-        """D6 stage-2 exact MaxSim (plaid.cpp:119-185 +
-        Scorer.cpp:11-63): decode residuals -> reconstruct tokens
-        (centroid + residual) -> L2-normalize (plaid.h:56's flag) ->
-        sum_q max_d <q, d>."""
+    def _stage2_udf(self, field: str, qtok: np.ndarray, normalize: bool, use_adc: bool):
+        """D6/D11 stage-2 MaxSim over (codes, residuals, num_tokens):
+        residual decode + MaxSim (kernels.maxsim), or PQ ADC lookup
+        tables (kernels.adc_maxsim) — the working version of the
+        reference's vestigial InvertedListScanner + PQDistanceTables
+        path, stage-2 work O(n_q*m) instead of O(n_q*dim) per doc
+        token. Both broadcast tiny per-query matrices only."""
         C = self.centroids[field]
-        q = self.quantizers[field]
-        bc_q = self._bc(qtok.astype(np.float32))
-        bc_c = self._bc(C)
-
-        @F.pandas_udf(T.DoubleType())
-        def maxsim(codes: pd.Series, residuals: pd.Series, num_tokens: pd.Series) -> pd.Series:
-            Q = bc_q.value
-            CC = bc_c.value
-            if len(codes) == 0:
-                return pd.Series(np.empty(0, dtype=np.float64))
-            # vectorized like the batch cascade: residual blobs are
-            # token-major fixed-row-size, so ONE concatenated decode +
-            # one (n_q_tok x total_tokens) matmul + segment-max
-            # (reduceat) scores the whole Arrow batch — no per-doc
-            # Python loop. Segments are non-empty (validateField
-            # rejects empty tensors).
-            nts = num_tokens.to_numpy().astype(np.int64)
-            toks = q.decode(b"".join(residuals), int(nts.sum())) + CC[
-                np.concatenate([np.asarray(c, dtype=np.int64) for c in codes])
-            ]
-            if normalize:
-                norms = np.linalg.norm(toks, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                toks = toks / norms
-            starts = np.zeros(len(nts), dtype=np.int64)
-            np.cumsum(nts[:-1], out=starts[1:])
-            out = np.maximum.reduceat(Q @ toks.T, starts, axis=1).sum(axis=0)
-            return pd.Series(out.astype(np.float64))
-
-        return maxsim
-
-    def _maxsim_adc_udf(self, field: str, qtok: np.ndarray):
-        """D11 stage-2 MaxSim via PQ ADC lookup tables — the working
-        version of the reference's vestigial InvertedListScanner +
-        PQDistanceTables path (PQDistanceTables.cpp:10-43,
-        InvertedListScanner.h:14-81): per query token an (m, 2^nbits)
-        inner-product table over the PQ sub-codebooks; a doc token's
-        score is <q, centroid> (the 'precomputed distance') plus the
-        m table lookups for its code bytes — never reconstructing
-        floats. Equals _maxsim_udf(normalize=False) exactly (up to
-        float association); skips the dim-wide decode+matmul, so
-        stage-2 work drops from O(n_q*dim) to O(n_q*m) per doc token.
-        IP-only, like the reference (PQDistanceTables.cpp:18)."""
-        from lintdb_spark.index.quantizers import ProductQuantizer
-
-        q = self.quantizers[field]
-        if not isinstance(q, ProductQuantizer):
-            raise ValueError("use_adc requires a ProductQuantizer field")
+        quant = self.quantizers[field]
         Q = np.asarray(qtok, dtype=np.float32)
-        # q x centroid precomputed distances + per-query ADC tables,
-        # both tiny: (n_q, n_centroids) and (n_q, m, 2^nbits)
-        bc_pre = self._bc(Q @ self.centroids[field].T)
-        bc_tab = self._bc(q.inner_prod_tables(Q))
+        bc = self._bc((Q @ C.T, quant.inner_prod_tables(Q)) if use_adc else (Q, C))
 
         @F.pandas_udf(T.DoubleType())
-        def maxsim_adc(
+        def stage2(
             codes: pd.Series, residuals: pd.Series, num_tokens: pd.Series
         ) -> pd.Series:
-            pre = bc_pre.value  # (n_q, n_centroids)
-            tab = bc_tab.value  # (n_q, m, k)
-            n_q, m, ksub = tab.shape
             if len(codes) == 0:
                 return pd.Series(np.empty(0, dtype=np.float64))
             nts = num_tokens.to_numpy().astype(np.int64)
-            total = int(nts.sum())
-            pqcodes = q.unpack_codes(b"".join(residuals), total)  # (N, m)
             cents = np.concatenate([np.asarray(c, dtype=np.int64) for c in codes])
-            # scores (n_q, N): centroid part is a gather of pre's
-            # columns; residual part accumulates the m per-subquantizer
-            # table lookups one at a time — a single (n_q, N, m)
-            # fancy-index would peak at m x the necessary memory
-            S = pre[:, cents].copy()
-            for i in range(m):
-                S += tab[:, i, :][:, pqcodes[:, i]]
-            starts = np.zeros(len(nts), dtype=np.int64)
-            np.cumsum(nts[:-1], out=starts[1:])
-            out = np.maximum.reduceat(S, starts, axis=1).sum(axis=0)
-            return pd.Series(out.astype(np.float64))
+            blob = b"".join(residuals)
+            if use_adc:
+                qc, tables = bc.value
+                out = kernels.adc_maxsim(qc, tables, quant, blob, cents, nts)
+            else:
+                Qv, Cv = bc.value
+                out = kernels.maxsim(Qv, Cv, quant, blob, cents, nts, normalize)
+            return pd.Series(out)
 
-        return maxsim_adc
+        return stage2
+
+    @staticmethod
+    def _use_adc(quant, opts: SearchOptions) -> bool:
+        """D11 routing: ADC decomposes the UNnormalized IP only and
+        needs PQ codes; auto-on exactly under those conditions. Every
+        serving path routes through here, so the same SearchOptions
+        score identically through search() and search_batch()."""
+        adc_ok = not opts.normalize and isinstance(quant, ProductQuantizer)
+        use_adc = adc_ok if opts.use_adc is None else bool(opts.use_adc)
+        if use_adc and not adc_ok:
+            raise ValueError(
+                "use_adc requires a ProductQuantizer field and normalize=False"
+            )
+        return use_adc
 
     @staticmethod
     def _analyze_text(text: str) -> list[str]:
@@ -1302,7 +1179,14 @@ class Index(SegmentStore):
         shape the reference can express — it wires a single
         ColBERTScorer per query, index.cpp:390) this is exact parity;
         multi-vector trees extend the same semantics. Trees without
-        vector nodes keep the stage-1 boolean score as final."""
+        vector nodes keep the stage-1 boolean score as final.
+
+        Physical paths: a bare VectorQuery, or an AND of TermQuery
+        nodes and one VectorQuery, over a tenant whose size estimate
+        fits the broadcast threshold (force_cogroup off) is scored in
+        the driver from the serve state — no Spark job; the returned
+        frame is a LocalRelation over the ranked rows. Every other tree
+        compiles to the Spark plan below."""
         self._refresh_meta_if_stale()
         opts = opts or SearchOptions()
         if opts.scoring_method == "xtr":
@@ -1315,18 +1199,20 @@ class Index(SegmentStore):
             )
         if opts.scoring_method != "plaid":
             raise ValueError(f"unknown scoring_method: {opts.scoring_method!r}")
+        local = self._local_search(tenant, query, k, opts)
+        if local is not None:
+            return local
         docs = self._docs().filter(F.col("tenant") == tenant)
         vecs = self._vector_nodes(query)
         stage1 = self._stage1(query, tenant, docs, opts)
+        log = logging.getLogger("lintdb_spark.index").info
 
         if opts.expected_id >= 0:
             # debug parity with the reference's expected_id trace
             # (SearchOptions.h:24-26): report the doc's stage-1 fate
-            import logging
-
             eid = int(opts.expected_id)
             hit = stage1.filter(F.col("doc_id") == eid).select("s1").collect()
-            logging.getLogger("lintdb_spark.index").info(
+            log(
                 "expected_id %d: %s",
                 eid,
                 f"stage-1 candidate, s1={hit[0]['s1']:.6f}"
@@ -1345,40 +1231,21 @@ class Index(SegmentStore):
             .join(docs, "doc_id")
         )
         if opts.expected_id >= 0:
-            import logging
-
-            eid = int(opts.expected_id)
             surv_hit = survivors.filter(F.col("doc_id") == eid).count()
-            logging.getLogger("lintdb_spark.index").info(
+            log(
                 "expected_id %d: %s num_second_pass=%d cut",
                 eid,
                 "survived" if surv_hit else "ELIMINATED by",
                 opts.num_second_pass,
             )
         out = survivors
-        from lintdb_spark.index.quantizers import ProductQuantizer
-
         for i, vec in enumerate(vecs):
-            # D11 routing: ADC decomposes the UNnormalized IP only, and
-            # needs PQ codes; auto-on exactly under those conditions
-            adc_ok = not opts.normalize and isinstance(
-                self.quantizers[vec.field], ProductQuantizer
+            maxsim = self._stage2_udf(
+                vec.field,
+                vec.query_tokens,
+                opts.normalize,
+                self._use_adc(self.quantizers[vec.field], opts),
             )
-            use_adc = adc_ok if opts.use_adc is None else opts.use_adc
-            if use_adc and not adc_ok:
-                raise ValueError(
-                    "use_adc requires a ProductQuantizer field and normalize=False"
-                )
-            if use_adc:
-                maxsim = self._maxsim_adc_udf(
-                    vec.field, np.asarray(vec.query_tokens, dtype=np.float32)
-                )
-            else:
-                maxsim = self._maxsim_udf(
-                    vec.field,
-                    np.asarray(vec.query_tokens, dtype=np.float32),
-                    normalize=opts.normalize,
-                )
             out = out.withColumn(
                 f"_ms{i}",
                 maxsim(
@@ -1394,6 +1261,163 @@ class Index(SegmentStore):
             *[f"_ms{i}" for i in range(len(vecs))]
         )
         return self._with_metadata(out, k)
+
+    def _local_search(self, tenant: int, query, k: int, opts: SearchOptions):
+        """The driver-local path of search(): the result frame when the
+        tree is a bare VectorQuery or an AND of TermQuery nodes and one
+        VectorQuery and the tenant's serve state is loaded (size
+        estimate within the broadcast threshold, force_cogroup off);
+        None sends the tree to the Spark plan. TERM nodes qualify only
+        when their value compares exactly like Spark's equality on the
+        field's type."""
+        if isinstance(query, VectorQuery):
+            children = [query]
+        elif isinstance(query, AndQuery):
+            children = list(query.children)
+        else:
+            return None
+        vecs = [c for c in children if isinstance(c, VectorQuery)]
+        if len(vecs) != 1 or getattr(self, "force_cogroup", False):
+            return None
+        vec = vecs[0]
+        if vec.field not in self.centroids or vec.field not in self.quantizers:
+            return None
+        types = {f.name: f.data_type for f in self.schema.scalar_fields()}
+        for c in children:
+            if c is not vec and not (
+                isinstance(c, TermQuery) and _local_term_ok(types.get(c.field), c.value)
+            ):
+                return None
+        use_adc = self._use_adc(self.quantizers[vec.field], opts)
+        state = self._serve_state(tenant, vec.field, load=True)
+        if not state.loaded or state.est_bytes > self._bcast_max():
+            return None
+        stored = self._stored_fields()
+        table = serve.local_search(
+            state, children, vec, k, opts, use_adc, stored,
+            log=logging.getLogger("lintdb_spark.index").info,
+        )
+        doc_schema = self.schema.doc_spark_schema()
+        return self.spark.createDataFrame(
+            table,
+            T.StructType(
+                [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
+                + [doc_schema[s] for s in stored]
+            ),
+        )
+
+    def _stored_fields(self) -> list[str]:
+        return [
+            f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
+        ]
+
+    def _bcast_max(self) -> int:
+        return _parse_byte_conf(
+            self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None),
+            default=32 * 1024 * 1024,
+        )
+
+    def _serve_estimate(self, docs: DataFrame, field: str, quant, scalars: bool = True) -> int:
+        """Driver-memory estimate of ``docs`` as serve data: per token
+        the code bytes, the int64 centroid id and its postings entry;
+        per doc 256 B of Python objects (code view, residual bytes, the
+        broadcast map's entry) and, with ``scalars``, the doc_id and
+        scalar columns as Arrow holds them (8 B per fixed-width value,
+        a 4 B offset plus the UTF-8 bytes per TEXT value). One
+        distributed job with no shuffle: the needed columns are scanned
+        into a noop sink while an Observation sums them (a global
+        aggregate would add a shuffle stage, and with AQE a second
+        job)."""
+        from pyspark.sql import Observation
+
+        nt_c = f"{field}__num_tokens"
+        fields = self.schema.scalar_fields() if scalars else []
+        texts = [f.name for f in fields if f.data_type == DataType.TEXT.value]
+        aggs = [F.sum(nt_c).alias("toks"), F.count(F.lit(1)).alias("nd")]
+        if texts:
+            aggs.append(
+                F.sum(sum((F.coalesce(F.octet_length(c), F.lit(0)) for c in texts), F.lit(0)))
+                .alias("text")
+            )
+        obs = Observation()
+        (
+            docs.select(nt_c, *texts)
+            .observe(obs, *aggs)
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
+        got = obs.get
+        nd = int(got["nd"] or 0)
+        per_doc = 256 + (8 + 8 * (len(fields) - len(texts)) + 4 * len(texts) if scalars else 0)
+        return (
+            int(got["toks"] or 0) * (quant.code_size + 16)
+            + nd * per_doc
+            + int(got.get("text") or 0)
+        )
+
+    def _serve_state(self, tenant: int, field: str, load: bool) -> serve.ServeState:
+        """The (tenant, field) serve state of the committed snapshot.
+
+        One slot holds the state of the (tenant, field) searched last.
+        It is current while its key matches, the meta object it was
+        built from is still ``self._meta`` and ``_meta_seq`` is
+        unchanged: every commit adopts a new meta dict and bumps the
+        sequence, so the first search after a commit rebuilds, lazily —
+        never inside the commit. ``load`` asks for the doc data as well
+        as the size estimate; data is only loaded when the estimate
+        fits the broadcast threshold, which so bounds the driver memory
+        the slot holds. Building takes at most two Spark jobs (the
+        estimate, then one Arrow collect of the tenant's doc rows).
+
+        Concurrency: the slot is read without a lock; builds run under
+        ``_serve_lock`` and are installed by one reference assignment,
+        so a concurrent search sees the old state or the new one, never
+        a partial build. The replaced state is released (its owned
+        broadcast unpersisted); a search still holding it keeps reading
+        its data. The docs plan is opened from a single meta generation
+        (retried if a commit lands while it is being opened)."""
+        key = (int(tenant), field)
+        bmax = self._bcast_max()
+
+        def usable(st):
+            return (
+                st is not None
+                and st.key == key
+                and st.meta is self._meta
+                and st.seq == getattr(self, "_meta_seq", 0)
+                and (st.loaded or not load or st.est_bytes > bmax)
+            )
+
+        st = self._serve_slot
+        if usable(st):
+            return st
+        with self._serve_lock:
+            st = self._serve_slot
+            if usable(st):
+                return st
+            while True:
+                meta, seq = self._meta, getattr(self, "_meta_seq", 0)
+                C, quant = self.centroids[field], self.quantizers[field]
+                docs = self._docs().filter(F.col("tenant") == int(tenant))
+                if self._meta is meta:
+                    break
+            same = st is not None and st.key == key and st.meta is meta and st.seq == seq
+            est = st.est_bytes if same else self._serve_estimate(docs, field, quant)
+            table = None
+            if load and est <= bmax:
+                table = docs.select(
+                    "doc_id",
+                    f"{field}__codes",
+                    f"{field}__residuals",
+                    f"{field}__num_tokens",
+                    *[f.name for f in self.schema.scalar_fields()],
+                ).toArrow()
+            new = serve.ServeState(key, meta, seq, est, C, quant, field, table)
+            self._serve_slot = new
+            if st is not None:
+                st.release()
+            return new
 
     @_tags_broadcasts
     def search_xtr(
@@ -1450,9 +1474,7 @@ class Index(SegmentStore):
             decoded, q_df, k=k, nearest_tokens_to_fetch=opts.nearest_tokens_to_fetch
         )
         # same return contract as search(): (doc_id, score, <stored>)
-        stored = [
-            f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
-        ]
+        stored = self._stored_fields()
         if not stored:
             return topk
         return tag_cached(
@@ -1486,12 +1508,9 @@ class Index(SegmentStore):
         bc_c = self._bc(self.centroids[field])
 
         def decode_tokens(batches):
-            # residual blobs are token-major fixed-row-size, so ONE
-            # concatenated decode + one gather + one normalize covers
-            # the whole Arrow batch — no per-doc Python loop (same
-            # vectorization as the cascade's stage-2 rerank above)
+            # one kernels.decode per Arrow batch — the cascade's
+            # stage-2 reconstruction, no per-doc Python loop
             for pdf in batches:
-                CC = bc_c.value
                 nts = pdf[nt_c].to_numpy(dtype=np.int64)
                 total = int(nts.sum())
                 if total == 0:
@@ -1500,12 +1519,9 @@ class Index(SegmentStore):
                 codes = np.concatenate(
                     [np.asarray(c, dtype=np.int64) for c in pdf[codes_c]]
                 )
-                toks = quant.decode(b"".join(pdf[res_c]), total) + CC[codes]
-                if normalize:
-                    norms = np.linalg.norm(toks, axis=1, keepdims=True)
-                    norms[norms == 0] = 1.0
-                    toks = toks / norms
-                toks = toks.astype(np.float64)
+                toks = kernels.decode(
+                    bc_c.value, quant, b"".join(pdf[res_c]), codes, nts, normalize
+                ).astype(np.float64)
                 starts = np.cumsum(nts) - nts
                 yield pd.DataFrame(
                     {
@@ -1587,9 +1603,7 @@ class Index(SegmentStore):
             k=k,
             nearest_tokens_to_fetch=opts.nearest_tokens_to_fetch,
         )
-        stored = [
-            f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
-        ]
+        stored = self._stored_fields()
         if not stored:
             return topk
         return tag_cached(
@@ -1691,6 +1705,7 @@ class Index(SegmentStore):
             raise ValueError(f"unknown scoring_method: {opts.scoring_method!r}")
         qmats = {int(qid): np.asarray(q, dtype=np.float32) for qid, q in queries.items()}
         quant = self.quantizers[field]
+        use_adc = self._use_adc(quant, opts)
         codes_c, res_c, nt_c = (
             f"{field}__codes",
             f"{field}__residuals",
@@ -1704,13 +1719,6 @@ class Index(SegmentStore):
             pd.DataFrame(probe_rows, columns=["qid", "centroid_id"]).astype("int64"),
             "qid long, centroid_id long",
         )
-        # serve-cache key SNAPSHOT taken BEFORE the docs plan below is
-        # built: if a concurrent commit lands in between, we at worst
-        # cache the NEW state's blobs under the OLD key (refreshed on
-        # the next call) — reading the seq after building the plan
-        # could cache the OLD state's blobs under the NEW key, serving
-        # stale results until the next mutation
-        cache_key = (tenant, field, getattr(self, "_meta_seq", 0))
         cand_ids = (
             self._postings_serve(field, tenant)
             .join(F.broadcast(probes_df), "centroid_id")
@@ -1725,97 +1733,24 @@ class Index(SegmentStore):
 
         n_parts = self.spark.sparkContext.defaultParallelism
         bc_c = self._bc(self.centroids[field])
-        thr = float(opts.centroid_score_threshold)
-        nsp = int(opts.num_second_pass)
-        kk = int(k)
-        # D11 routing, mirroring search(): ADC decomposes the
-        # UNnormalized IP only and needs PQ codes; auto-on exactly
-        # under those conditions. The same SearchOptions must score
-        # identically through search() and search_batch().
-        from lintdb_spark.index.quantizers import ProductQuantizer
-
-        adc_ok = not opts.normalize and isinstance(quant, ProductQuantizer)
-        use_adc = adc_ok if opts.use_adc is None else opts.use_adc
-        if use_adc and not adc_ok:
-            raise ValueError(
-                "use_adc requires a ProductQuantizer field and normalize=False"
-            )
-        normalize = bool(opts.normalize)
-
-        _EMPTY = {
-            "qid": pd.Series(dtype="int64"),
-            "doc_id": pd.Series(dtype="int64"),
-            "rank": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64"),
-        }
+        knobs = dict(
+            threshold=float(opts.centroid_score_threshold),
+            num_second_pass=int(opts.num_second_pass),
+            k=int(k),
+            use_adc=use_adc,
+            normalize=bool(opts.normalize),
+        )
 
         def score_group(qid, Q, doc_ids, code_arrs, blobs, nts):
-            # per-qid full cascade: PLAID codes-only (plaid.cpp:65-95)
-            # -> num_second_pass cut -> residual decode + exact MaxSim
-            # (plaid.cpp:119-185, Scorer.cpp:11-63) -> top-k
-            CC = bc_c.value
-            qc = Q @ CC.T  # (n_tok, num_centroids)
-
-            # stage 1, vectorized: one gather + segment-max
-            # (np.maximum.reduceat) over every candidate's tokens at
-            # once — no per-doc Python loop. Duplicate centroid ids
-            # within a doc don't change the per-token max, so the
-            # reference's unique() is unnecessary here. Docs always
-            # have >=1 token (validateField rejects empty tensors), so
-            # every reduceat segment is non-empty.
-            lens = np.fromiter(
-                (len(c) for c in code_arrs), dtype=np.int64, count=len(code_arrs)
+            r = kernels.cascade(
+                Q, bc_c.value, quant, doc_ids, code_arrs, blobs, nts, **knobs
             )
-            starts = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            M = qc[:, np.concatenate(code_arrs)]
-            if thr > 0.0:
-                # a centroid column contributes only if its best query-
-                # token score clears the threshold (plaid.cpp:78-84); a
-                # doc with no surviving column scores 0
-                M = np.where(M.max(axis=0, keepdims=True) >= thr, M, -np.inf)
-            s1 = np.maximum.reduceat(M, starts, axis=1).sum(axis=0)
-            s1 = np.where(np.isfinite(s1), s1, 0.0)
-            surv = np.lexsort((doc_ids, -s1))[:nsp]
-
-            # stage 2, vectorized: all survivors' packed residuals are
-            # token-major fixed-size rows, so one concatenated decode +
-            # one (n_q_tok x total_tokens) matmul + segment-max scores
-            # the whole second pass. In the ADC configuration the
-            # decode+matmul is replaced by qc-gather + table lookups
-            # (qc IS the precomputed <q, centroid> matrix).
-            nts_s = nts[surv]
-            cents_s = np.concatenate([code_arrs[i] for i in surv])
-            starts2 = np.zeros(len(surv), dtype=np.int64)
-            np.cumsum(nts_s[:-1], out=starts2[1:])
-            if use_adc:
-                tab = quant.inner_prod_tables(Q)  # (n_q, m, ksub)
-                n_q, m, ksub = tab.shape
-                pqcodes = quant.unpack_codes(
-                    b"".join(blobs[i] for i in surv), int(nts_s.sum())
-                )
-                # accumulate per subquantizer: O(n_q x N) peak memory
-                # instead of the (n_q, N, m) fancy-index intermediate
-                S = qc[:, cents_s].copy()
-                for i in range(m):
-                    S += tab[:, i, :][:, pqcodes[:, i]]
-            else:
-                toks = quant.decode(
-                    b"".join(blobs[i] for i in surv), int(nts_s.sum())
-                ) + CC[cents_s]
-                if normalize:
-                    norms = np.linalg.norm(toks, axis=1, keepdims=True)
-                    norms[norms == 0] = 1.0
-                    toks = toks / norms
-                S = Q @ toks.T
-            s2 = np.maximum.reduceat(S, starts2, axis=1).sum(axis=0)
-            keep = np.lexsort((doc_ids[surv], -s2))[:kk]
             return pd.DataFrame(
                 {
-                    "qid": np.full(len(keep), qid, dtype=np.int64),
-                    "doc_id": doc_ids[surv][keep],
-                    "rank": np.arange(1, len(keep) + 1, dtype=np.int64),
-                    "score": s2[keep],
+                    "qid": np.full(len(r.rows), qid, dtype=np.int64),
+                    "doc_id": doc_ids[r.rows],
+                    "rank": np.arange(1, len(r.rows) + 1, dtype=np.int64),
+                    "score": r.scores,
                 }
             )
 
@@ -1826,45 +1761,12 @@ class Index(SegmentStore):
         # group at a time — the 100 TB path). When the WHOLE doc blob
         # table fits the broadcast threshold, shipping it once to each
         # executor and shuffling only the tiny (qid, doc_id) pairs is
-        # strictly cheaper. The estimate reads only the num_tokens
-        # column (column-pruned scan): tokens * (code bytes + 8B
-        # centroid id) + per-doc overhead.
-        # Serve-state reuse: the size estimate (one aggregate job) and
-        # the doc-blob broadcast (full collect + re-broadcast) depend
-        # only on the committed index state for UNFILTERED calls — a
-        # server fielding per-request batches on an unchanged index
-        # must not re-pay them per call. Keyed on (tenant, field,
-        # _meta_seq) snapshotted above; any committed mutation bumps
-        # _meta_seq. Filtered calls bypass the cache entirely: absent
-        # map entries ARE the filter, so a filtered map must never be
-        # reused.
-        cached = getattr(self, "_serve_blob_cache", None)
-        if cached is not None and cached[0] != cache_key:
-            # stale entry (a commit bumped _meta_seq): evict NOW, not
-            # lazily on the next broadcast-path build — if the grown
-            # corpus routes every future call down the cogroup path,
-            # the replace branch below never runs and the old doc-blob
-            # broadcast (the largest serve object) would stay resident
-            # for the process lifetime
-            try:
-                cached[2].unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — best-effort
-                pass
-            self._serve_blob_cache = cached = None
-        est_bytes = bc_docs = None
-        if doc_filter is None and cached is not None and cached[0] == cache_key:
-            _, est_bytes, bc_docs = cached
-        if est_bytes is None:
-            est_row = docs.agg(
-                F.sum(nt_c).alias("toks"), F.count("*").alias("nd")
-            ).collect()[0]
-            tok_total = int(est_row["toks"] or 0)
-            est_bytes = tok_total * (quant.code_size + 8) + int(est_row["nd"]) * 128
-        bcast_max = _parse_byte_conf(
-            self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None),
-            default=32 * 1024 * 1024,
-        )
-
+        # strictly cheaper. Unfiltered calls read the estimate and the
+        # blob map from the tenant's serve state (built once per
+        # committed snapshot, see _serve_state); filtered calls build
+        # both per call — absent map entries ARE the filter, so a
+        # filtered map must never be reused.
+        #
         # force_cogroup (bench/ops knob, default off): route down the
         # cogrouped 100 TB fallback even when the blobs would fit the
         # broadcast threshold — the fallback must be MEASURABLE at any
@@ -1872,49 +1774,25 @@ class Index(SegmentStore):
         # candidate), and an operator can pin it when executor memory
         # is tighter than the threshold suggests.
         force_cg = bool(getattr(self, "force_cogroup", False))
-        if est_bytes <= bcast_max and not force_cg:
-            if bc_docs is None:
-                doc_map = self._collect_doc_blobs(docs, codes_c, res_c, nt_c)
-                # filtered maps are per-call (never cached) -> track
-                # for release; unfiltered maps are owned by the serve
-                # cache, freed by its unpersist-on-replace
-                bc_docs = (
-                    self._bc(doc_map)
-                    if doc_filter is not None
-                    else self.spark.sparkContext.broadcast(doc_map)
+        bmax = self._bcast_max()
+        if doc_filter is None:
+            state = self._serve_state(tenant, field, load=not force_cg)
+            fits = state.loaded and state.est_bytes <= bmax
+        else:
+            fits = self._serve_estimate(docs, field, quant, scalars=False) <= bmax
+        if fits and not force_cg:
+            if doc_filter is None:
+                bc_docs = state.broadcast(self.spark.sparkContext, self._bc)
+            else:
+                tbl = docs.select("doc_id", codes_c, res_c, nt_c).toArrow()
+                bc_docs = self._bc(
+                    serve.blob_map(
+                        tbl.column("doc_id").to_numpy(), *serve.blob_columns(tbl, field)
+                    )
                 )
-                if doc_filter is None:
-                    # re-read the LIVE slot, not the snapshot from the
-                    # top of the call: a concurrent thread racing a
-                    # commit may have installed a different-key entry
-                    # in between, and blindly overwriting would both
-                    # drop its broadcast without unpersist and pin our
-                    # stale key
-                    prev = getattr(self, "_serve_blob_cache", None)
-                    if prev is None or prev[0] == cache_key:
-                        if prev is not None and prev[2] is not bc_docs:
-                            try:
-                                # unpersist, NOT destroy: executors drop
-                                # their cached copies (the memory that
-                                # matters) but a concurrent request still
-                                # mid-job on the old broadcast can lazily
-                                # refetch it — destroy() would fail that
-                                # request's tasks
-                                prev[2].unpersist(blocking=False)
-                            except Exception:  # noqa: BLE001 — best-effort
-                                pass
-                        self._serve_blob_cache = (cache_key, est_bytes, bc_docs)
-                    else:
-                        # someone installed a newer snapshot: keep
-                        # theirs, and track OUR blob for release with
-                        # this call (lazy refetch keeps us correct if
-                        # executors drop it before our job finishes)
-                        pending = getattr(self._bcast_tls, "pending", None)
-                        if pending is not None:
-                            pending.append(bc_docs)
             bc_q = self._bc(qmats)
 
-            def serve(batches):
+            def serve_batches(batches):
                 dm = bc_docs.value
                 qm = bc_q.value
 
@@ -1928,16 +1806,15 @@ class Index(SegmentStore):
                         # (the broadcast map IS the filter) or deleted
                         if not ents:
                             continue
-                        dids = np.fromiter(
-                            (d for d, _ in ents), dtype=np.int64, count=len(ents)
-                        )
                         outs.append(
                             score_group(
                                 int(qid_val),
                                 qm[int(qid_val)],
-                                dids,
+                                np.fromiter(
+                                    (d for d, _ in ents), dtype=np.int64, count=len(ents)
+                                ),
                                 [e[0] for _, e in ents],
-                                np.array([e[1] for _, e in ents], dtype=object),
+                                [e[1] for _, e in ents],
                                 np.fromiter(
                                     (e[2] for _, e in ents),
                                     dtype=np.int64,
@@ -1975,7 +1852,9 @@ class Index(SegmentStore):
             topk = (
                 cand_ids.repartition(n_parts, "qid")
                 .sortWithinPartitions("qid")
-                .mapInPandas(serve, "qid long, doc_id long, rank long, score double")
+                .mapInPandas(
+                    serve_batches, "qid long, doc_id long, rank long, score double"
+                )
             )
         else:
             cand = cand_ids.join(
@@ -1999,10 +1878,16 @@ class Index(SegmentStore):
                 "qid long, q_id long, qvec array<float>",
             )
             queries_part = queries_df.repartition(n_parts, "qid")
+            empty = {
+                "qid": pd.Series(dtype="int64"),
+                "doc_id": pd.Series(dtype="int64"),
+                "rank": pd.Series(dtype="int64"),
+                "score": pd.Series(dtype="float64"),
+            }
 
             def cascade(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
                 if left.empty or right.empty:
-                    return pd.DataFrame(_EMPTY)
+                    return pd.DataFrame(empty)
                 Q = np.vstack(
                     right.sort_values("q_id")["qvec"].to_numpy()
                 ).astype(np.float32)
@@ -2022,9 +1907,7 @@ class Index(SegmentStore):
                     cascade, "qid long, doc_id long, rank long, score double"
                 )
             )
-        stored = [
-            f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
-        ]
+        stored = self._stored_fields()
         if not stored:
             return topk
         return tag_cached(
@@ -2043,9 +1926,11 @@ class Index(SegmentStore):
         One tiny search_batch per vector field drives the REAL serve
         path end to end, so everything the first user batch needs is
         resident afterwards: the persisted postings slice
-        (_postings_serve), the doc-blob size estimate + broadcast
-        (_serve_blob_cache), the centroid matrices, and the JVM's
-        codegen/Arrow lanes for the cascade plan. Measured at the sf10
+        (_postings_serve), the tenant's serve state (_serve_state: the
+        size estimate, the doc blobs and their broadcast, which the
+        driver-local point search also scores from), the centroid
+        matrices, and the JVM's codegen/Arrow lanes for the cascade
+        plan. Measured at the sf10
         probe: the first 1000-query batch drops from ~17-20 s to
         warm-path latency (~4 s), with prewarm itself costing the
         difference at load time — where a serving deployment wants it
@@ -2069,9 +1954,7 @@ class Index(SegmentStore):
 
     def _with_metadata(self, scored: DataFrame, k: int) -> DataFrame:
         """C9: order, truncate, project stored fields (index.cpp:407-449)."""
-        stored = [
-            f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
-        ]
+        stored = self._stored_fields()
         return (
             scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)

@@ -130,6 +130,11 @@ class SegmentStore:
     # False (Index): schema args are empty-fallback type pins and
     # readers may rely on inferred columns the pin omits.
     _project_reads_to_schema = False
+    # tables whose declared schema is exactly what their segments hold
+    # (written from those columns): a manifested segment opens with it
+    # instead of inferring it from a footer, which costs one Spark job
+    # per segment on every new snapshot
+    _exact_schema_tables: tuple[str, ...] = ()
 
     def __init__(self, spark: SparkSession, path: str):
         import threading
@@ -796,7 +801,9 @@ class SegmentStore:
                 self._meta = new_meta
             return added
 
-    def _read_manifest_files(self, root: str, files: list[str]) -> DataFrame:
+    def _read_manifest_files(
+        self, root: str, files: list[str], schema: T.StructType | None = None
+    ) -> DataFrame:
         """Open a segment from its manifest: explicit leaf files with
         ``basePath`` (hive partition columns still parse from the
         paths) and schema inferred from ONE footer (mergeSchema=false
@@ -814,12 +821,18 @@ class SegmentStore:
         could otherwise interleave and leave the threshold permanently
         pinned to one reader's file count. Relation resolution (the
         part the threshold affects) happens eagerly inside
-        spark.read.parquet, so the lock scope covers it fully."""
+        spark.read.parquet, so the lock scope covers it fully.
+
+        ``schema`` (tables in _exact_schema_tables) skips the footer
+        inference job altogether."""
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
         conf = self.spark.conf
+        reader = self.spark.read.option("basePath", root)
+        if schema is not None:
+            reader = reader.schema(schema)
         bump = len(files) < 100_000
         if not bump:
-            return self.spark.read.option("basePath", root).parquet(*files)
+            return reader.parquet(*files)
         with _DISCOVERY_CONF_LOCK:
             try:
                 old = conf.get(key)
@@ -827,7 +840,7 @@ class SegmentStore:
                 old = None
             conf.set(key, str(len(files) + 1))
             try:
-                return self.spark.read.option("basePath", root).parquet(*files)
+                return reader.parquet(*files)
             finally:
                 if old is None:
                     conf.unset(key)
@@ -910,7 +923,11 @@ class SegmentStore:
                         lroot = self.fs.spark_read_path(root)
                         frames.append(
                             self._read_manifest_files(
-                                lroot, [os.path.join(lroot, r) for r in rel]
+                                lroot,
+                                [os.path.join(lroot, r) for r in rel],
+                                schema
+                                if table in self._exact_schema_tables
+                                else None,
                             )
                         )
                         continue

@@ -18,6 +18,11 @@ Endpoints (parity with `lintdb/server/openapi.yaml` and
   -> ``{"ok": true}``
 - ``POST /v1/Index/remove/{tenant}`` — ``{"ids": [...]}`` -> ``{"ok": true}``
 
+Failures answer ``{"error": ...}``: 400 for a malformed request (a
+body that is not JSON, a query node the translator rejects, options
+that do not construct SearchOptions, a non-integer k), 500 for
+anything else.
+
 Query-node JSON translation mirrors
 `server/controllers/v1/query_node_translator.h:12-52` (TERM, TENSOR,
 AND — plus OR and MATCH, which the JSON grammar reserves but the
@@ -50,6 +55,10 @@ from lintdb_spark.index.query import (
 )
 
 
+class BadRequest(ValueError):
+    """A malformed request: answered with 400, not 500."""
+
+
 def query_node_from_json(node: dict):
     """JSON -> query tree (query_node_translator.h:12-52 parity)."""
     ntype = node.get("type")
@@ -74,12 +83,14 @@ class IndexServer:
         self.index = index
         # Mutations (add/update/remove) are read-modify-write of the
         # index meta + a meta-file flip; serialize them. Searches stay
-        # lock-free: Spark job submission is thread-safe, and commits
-        # adopt their meta via ONE dict assignment (built on a copy),
-        # so an in-process reader sees the whole pre- or post-commit
-        # segment map, never a per-table partial. A search spanning
-        # multiple _read calls can still straddle one commit — the
-        # usual read-committed (not snapshot) isolation.
+        # lock-free. A search on the driver-local path (a bare TENSOR
+        # or AND(TERM..., TENSOR) tree within the broadcast threshold)
+        # reads ONE snapshot: it scores from a serve state built from a
+        # single meta generation and installed by one reference
+        # assignment. Trees on the Spark plan remain read-committed:
+        # commits adopt their meta via ONE dict assignment, so a reader
+        # never sees a per-table partial, but a search spanning
+        # several _read calls can straddle one commit.
         self._write_lock = threading.Lock()
         outer = self
 
@@ -91,7 +102,10 @@ class IndexServer:
             def do_POST(self):
                 try:
                     length = int(self.headers.get("Content-Length", 0))
-                    payload = json.loads(self.rfile.read(length) or b"{}")
+                    try:
+                        payload = json.loads(self.rfile.read(length) or b"{}")
+                    except ValueError as exc:
+                        raise BadRequest(f"malformed JSON body: {exc}") from exc
                     body, status = outer._route(self.path, payload)
                     # serialize INSIDE the try: a non-JSON-native stored
                     # field (DATETIME -> datetime.datetime) must produce
@@ -99,7 +113,8 @@ class IndexServer:
                     # default=str covers datetime/date/Decimal.
                     data = json.dumps(body, default=str).encode()
                 except Exception as exc:  # -> {"error": ...} like Index.h
-                    body, status = {"error": str(exc)}, 500
+                    status = 400 if isinstance(exc, BadRequest) else 500
+                    body = {"error": str(exc)}
                     data = json.dumps(body, default=str).encode()
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
@@ -132,15 +147,21 @@ class IndexServer:
         return {"ok": False}, 404
 
     def _search(self, tenant: int, payload: dict) -> dict:
-        query = query_node_from_json(payload["query"])
-        k = int(payload.get("k", 10))
-        # the reference's body key is "options" (openapi.yaml); accept
-        # "search_options" as an alias. Unknown keys (e.g. the
-        # reference's colbert_field, which here lives on the query
-        # node's name) are ignored rather than 500ing.
-        raw = {**(payload.get("options") or {}), **(payload.get("search_options") or {})}
-        known = {f.name for f in dataclasses.fields(SearchOptions)}
-        opts = SearchOptions(**{k_: v for k_, v in raw.items() if k_ in known})
+        try:
+            query = query_node_from_json(payload["query"])
+            k = int(payload.get("k", 10))
+            # the reference's body key is "options" (openapi.yaml);
+            # accept "search_options" as an alias. Unknown keys (e.g.
+            # the reference's colbert_field, which here lives on the
+            # query node's name) are ignored rather than rejected.
+            raw = {
+                **(payload.get("options") or {}),
+                **(payload.get("search_options") or {}),
+            }
+            known = {f.name for f in dataclasses.fields(SearchOptions)}
+            opts = SearchOptions(**{k_: v for k_, v in raw.items() if k_ in known})
+        except (KeyError, TypeError, ValueError, AttributeError) as exc:
+            raise BadRequest(f"malformed search request: {exc!r}") from exc
         # materialize, then free any operator-persisted intermediates
         # (XTR's retrieval set, the cascade's token assignment) — a
         # long-lived server would otherwise accumulate one CacheManager

@@ -741,7 +741,17 @@ def test_release_frees_per_call_broadcasts(built_index):
     long-lived server does not accumulate one blob per request."""
     from lintdb_spark.cache import release
 
-    df = built_index.search(0, VectorQuery("colbert", doc_tokens(3)), k=3, opts=OPTS)
+    # the driver-local path broadcasts nothing; force_cogroup pins the
+    # Spark plan, whose per-call broadcasts this test is about
+    local = built_index.search(0, VectorQuery("colbert", doc_tokens(3)), k=3, opts=OPTS)
+    assert getattr(local, "_lintdb_broadcasts", ()) == ()
+    built_index.force_cogroup = True
+    try:
+        df = built_index.search(
+            0, VectorQuery("colbert", doc_tokens(3)), k=3, opts=OPTS
+        )
+    finally:
+        built_index.force_cogroup = False
     bcs = getattr(df, "_lintdb_broadcasts", ())
     assert len(bcs) >= 1  # plaid qc + maxsim q/c matrices
     df.collect()
@@ -769,9 +779,15 @@ def test_search_scan_prunes_to_tenant_partition(built_index):
     import contextlib
     import io
 
-    df = built_index.search(
-        1, VectorQuery("colbert", doc_tokens(101)), k=3, opts=OPTS
-    )
+    # force_cogroup pins the Spark plan (the driver-local path scores a
+    # per-tenant serve state and scans nothing)
+    built_index.force_cogroup = True
+    try:
+        df = built_index.search(
+            1, VectorQuery("colbert", doc_tokens(101)), k=3, opts=OPTS
+        )
+    finally:
+        built_index.force_cogroup = False
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -402,22 +402,23 @@ def test_batch_serve_cache_reuses_and_invalidates(spark, tmp_path):
     q = {1: doc_tokens(4)}
 
     idx.search_batch(0, "colbert", q, k=3, opts=OPTS).collect()
-    cache1 = idx._serve_blob_cache
+    cache1 = idx._serve_slot
+    assert cache1.key == (0, "colbert")
     idx.search_batch(0, "colbert", q, k=3, opts=OPTS).collect()
-    assert idx._serve_blob_cache is cache1  # reused, not rebuilt
+    assert idx._serve_slot is cache1  # reused, not rebuilt
 
     # a filtered call must not replace or serve from the cache
     res_f = idx.search_batch(
         0, "colbert", q, k=10, opts=OPTS,
         doc_filter=TermQuery("category", "even"),
     ).collect()
-    assert idx._serve_blob_cache is cache1
+    assert idx._serve_slot is cache1
     assert all(r["doc_id"] % 2 == 0 for r in res_f)
 
     # committed mutation invalidates: the new doc is immediately servable
     idx.add(make_docs(spark, range(100, 101)))
     res = idx.search_batch(0, "colbert", {2: doc_tokens(100)}, k=3, opts=OPTS).collect()
-    assert idx._serve_blob_cache is not cache1
+    assert idx._serve_slot is not cache1
     assert res and sorted(res, key=lambda r: r["rank"])[0]["doc_id"] == 100
 
 

@@ -5,6 +5,7 @@ update / remove over JSON), run against an in-process IndexServer."""
 from __future__ import annotations
 
 import json
+import urllib.error
 import urllib.request
 
 import numpy as np
@@ -105,8 +106,55 @@ def test_search_error_shape(server):
     )
     with pytest.raises(urllib.error.HTTPError) as e:
         urllib.request.urlopen(req, timeout=60)
-    assert e.value.code == 500
+    assert e.value.code == 400
     assert "error" in json.loads(e.value.read())
+
+
+def _post_status(port: int, path: str, data: bytes) -> tuple[int, dict]:
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}{path}",
+        data=data,
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            return resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+@pytest.mark.parametrize(
+    "mutate",
+    [
+        lambda b: b.pop("query"),
+        lambda b: b["query"].update(value=[0.0] * 5),  # not reshapable
+        lambda b: b.update(k="ten"),
+        lambda b: b.update(options={"n_probe": 4, "colbert_field": "x"}, k=None),
+        lambda b: b.update(query=[1, 2]),
+    ],
+    ids=["no-query", "bad-tensor", "bad-k", "null-k", "query-not-object"],
+)
+def test_malformed_search_answers_400(server, mutate):
+    body = _search_body(0)
+    mutate(body)
+    status, out = _post_status(
+        server.port, "/v1/Index/search/0", json.dumps(body).encode()
+    )
+    assert status == 400 and "error" in out
+    status, out = _post_status(server.port, "/v1/Index/search/0", b"{not json")
+    assert status == 400 and "error" in out
+
+
+def test_internal_search_failure_answers_500(server, monkeypatch):
+    def boom(*a, **kw):
+        raise RuntimeError("executor lost")
+
+    monkeypatch.setattr(server.index, "search", boom)
+    status, out = _post_status(
+        server.port, "/v1/Index/search/0", json.dumps(_search_body(0)).encode()
+    )
+    assert status == 500 and "executor lost" in out["error"]
 
 
 def test_query_node_translation():
