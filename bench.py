@@ -578,7 +578,7 @@ def main() -> None:
     # executor compute: their sec@8/sec@32 ratio is the driver-visible
     # scaling evidence (probe: minhash+lsh 10.0s@8 vs 3.7s@32 = 2.7x).
     # Timed with the noop sink (guide §1.4). Two calibration points
-    # measured during construction (scripts/scale_lane_probe.py):
+    # measured during construction (OPTIMIZATION_r16.md, verdict item 7):
     # (a) the base frame is repartitioned BEFORE replication — the
     #     documents scan is 1-2 input splits and a broadcast crossJoin
     #     keeps the left side's partitioning, so without it the heavy

@@ -62,7 +62,7 @@ def tag_broadcasts(out: DataFrame, *bcs) -> DataFrame:
     (the REST server, a driver loop issuing thousands of batches)
     otherwise accumulates one broadcast blob per request — the query
     matrices and centroid blobs the serve UDFs close over. Broadcasts
-    owned by a session-level cache (the serve-blob doc map) must NOT
+    owned by a session-level cache (the Index's serve state) must NOT
     be tagged; they are released by the cache's unpersist-on-replace."""
     prev = list(getattr(out, "_lintdb_broadcasts", ()))
     prev.extend(bcs)

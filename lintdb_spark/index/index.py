@@ -208,8 +208,8 @@ class Index(SegmentStore):
         """Broadcast ``obj``, registering the handle with the current
         serve call (if any) so cache.release can unpersist it after the
         result is materialized. Broadcasts owned by session-lifetime
-        caches (the serve-blob doc map) must use
-        ``sparkContext.broadcast`` directly instead."""
+        caches (the serve state's) must use ``sparkContext.broadcast``
+        directly instead."""
         b = self.spark.sparkContext.broadcast(obj)
         pending = getattr(self._bcast_tls, "pending", None)
         if pending is not None:
@@ -1277,7 +1277,7 @@ class Index(SegmentStore):
         else:
             return None
         vecs = [c for c in children if isinstance(c, VectorQuery)]
-        if len(vecs) != 1 or getattr(self, "force_cogroup", False):
+        if len(vecs) != 1:
             return None
         vec = vecs[0]
         if vec.field not in self.centroids or vec.field not in self.quantizers:
@@ -1288,10 +1288,10 @@ class Index(SegmentStore):
                 isinstance(c, TermQuery) and _local_term_ok(types.get(c.field), c.value)
             ):
                 return None
-        use_adc = self._use_adc(self.quantizers[vec.field], opts)
-        state = self._serve_state(tenant, vec.field, load=True)
-        if not state.loaded or state.est_bytes > self._bcast_max():
+        state = self._local_state(tenant, vec.field)
+        if state is None:
             return None
+        use_adc = self._use_adc(self.quantizers[vec.field], opts)
         stored = self._stored_fields()
         table = serve.local_search(
             state, children, vec, k, opts, use_adc, stored,
@@ -1306,6 +1306,15 @@ class Index(SegmentStore):
             ),
         )
 
+    def _local_state(self, tenant: int, field: str) -> serve.ServeState | None:
+        """The serve state the point search and the broadcast batch
+        path score from: loaded, its size estimate within the broadcast
+        threshold, and ``force_cogroup`` off. None otherwise."""
+        if getattr(self, "force_cogroup", False):
+            return None
+        state = self._serve_state(tenant, field)
+        return state if state.loaded and state.est_bytes <= self._bcast_max() else None
+
     def _stored_fields(self) -> list[str]:
         return [
             f.name for f in self.schema.scalar_fields() if f.has_role(FieldType.STORED)
@@ -1317,21 +1326,20 @@ class Index(SegmentStore):
             default=32 * 1024 * 1024,
         )
 
-    def _serve_estimate(self, docs: DataFrame, field: str, quant, scalars: bool = True) -> int:
-        """Driver-memory estimate of ``docs`` as serve data: per token
-        the code bytes, the int64 centroid id and its postings entry;
-        per doc 256 B of Python objects (code view, residual bytes, the
-        broadcast map's entry) and, with ``scalars``, the doc_id and
-        scalar columns as Arrow holds them (8 B per fixed-width value,
-        a 4 B offset plus the UTF-8 bytes per TEXT value). One
-        distributed job with no shuffle: the needed columns are scanned
-        into a noop sink while an Observation sums them (a global
-        aggregate would add a shuffle stage, and with AQE a second
-        job)."""
+    def _serve_estimate(self, docs: DataFrame, field: str, quant) -> int:
+        """Driver-memory estimate of ``docs`` as a serve state: per
+        token the code bytes, the int64 centroid id and its postings
+        entry; per doc 256 B of Python objects (code view, residual
+        bytes) plus the doc_id and scalar columns as Arrow holds them
+        (8 B per fixed-width value, a 4 B offset plus the UTF-8 bytes
+        per TEXT value). One distributed job with no shuffle: the
+        needed columns are scanned into a noop sink while an
+        Observation sums them (a global aggregate would add a shuffle
+        stage, and with AQE a second job)."""
         from pyspark.sql import Observation
 
         nt_c = f"{field}__num_tokens"
-        fields = self.schema.scalar_fields() if scalars else []
+        fields = self.schema.scalar_fields()
         texts = [f.name for f in fields if f.data_type == DataType.TEXT.value]
         aggs = [F.sum(nt_c).alias("toks"), F.count(F.lit(1)).alias("nd")]
         if texts:
@@ -1348,15 +1356,14 @@ class Index(SegmentStore):
             .save()
         )
         got = obs.get
-        nd = int(got["nd"] or 0)
-        per_doc = 256 + (8 + 8 * (len(fields) - len(texts)) + 4 * len(texts) if scalars else 0)
+        per_doc = 256 + 8 + 8 * (len(fields) - len(texts)) + 4 * len(texts)
         return (
             int(got["toks"] or 0) * (quant.code_size + 16)
-            + nd * per_doc
+            + int(got["nd"] or 0) * per_doc
             + int(got.get("text") or 0)
         )
 
-    def _serve_state(self, tenant: int, field: str, load: bool) -> serve.ServeState:
+    def _serve_state(self, tenant: int, field: str) -> serve.ServeState:
         """The (tenant, field) serve state of the committed snapshot.
 
         One slot holds the state of the (tenant, field) searched last.
@@ -1364,10 +1371,9 @@ class Index(SegmentStore):
         built from is still ``self._meta`` and ``_meta_seq`` is
         unchanged: every commit adopts a new meta dict and bumps the
         sequence, so the first search after a commit rebuilds, lazily —
-        never inside the commit. ``load`` asks for the doc data as well
-        as the size estimate; data is only loaded when the estimate
-        fits the broadcast threshold, which so bounds the driver memory
-        the slot holds. Building takes at most two Spark jobs (the
+        never inside the commit. The doc data is only loaded when the
+        size estimate fits the broadcast threshold, which so bounds the
+        driver memory the slot holds. Building takes at most two Spark jobs (the
         estimate, then one Arrow collect of the tenant's doc rows).
 
         Concurrency: the slot is read without a lock; builds run under
@@ -1386,7 +1392,7 @@ class Index(SegmentStore):
                 and st.key == key
                 and st.meta is self._meta
                 and st.seq == getattr(self, "_meta_seq", 0)
-                and (st.loaded or not load or st.est_bytes > bmax)
+                and (st.loaded or st.est_bytes > bmax)
             )
 
         st = self._serve_slot
@@ -1405,7 +1411,7 @@ class Index(SegmentStore):
             same = st is not None and st.key == key and st.meta is meta and st.seq == seq
             est = st.est_bytes if same else self._serve_estimate(docs, field, quant)
             table = None
-            if load and est <= bmax:
+            if est <= bmax:
                 table = docs.select(
                     "doc_id",
                     f"{field}__codes",
@@ -1651,11 +1657,9 @@ class Index(SegmentStore):
         opts: SearchOptions | None = None,
         doc_filter=None,
     ) -> DataFrame:
-        """Batch VECTOR search: N queries through ONE plan against the
-        index tables — the Spark-native upgrade over the reference's
-        per-query loop (QueryExecutor.cpp:14-71 re-opens posting lists
-        per query; here the postings scan is shared and every per-query
-        step is keyed by qid).
+        """Batch VECTOR search: N queries scored in one Spark job —
+        the batch form of the reference's per-query loop
+        (QueryExecutor.cpp:14-71).
 
         queries: {qid: (n_tokens, dim) float32}. ``doc_filter`` is an
         optional boolean node tree (Term/Match/And/Or, Match allowed at
@@ -1664,37 +1668,31 @@ class Index(SegmentStore):
         approximate-AND semantics. Returns (qid, doc_id, rank, score,
         <stored fields>).
 
-        Scale shape (no per-qid broadcast state): probes are computed
-        driver-side on the in-memory centroid matrix (a |queries| x
-        num_centroids matmul) and shipped as a small DataFrame; the
-        postings scan prunes to the union of probed partitions; the
-        whole two-phase cascade (PLAID -> num_second_pass cut ->
-        residual decode -> exact MaxSim -> top-k) runs in ONE
-        COGROUPED applyInPandas by qid — each query's tokens flow to
-        its group through the shuffle, so per-executor memory is one
-        group (that query's candidates + one query matrix),
-        independent of batch size. The only broadcast is the centroid
-        matrix itself (~32 MB at the reference's largest config).
-
         Physical strategy (the batch analogue of Spark's broadcast-vs-
-        shuffle join selection, decided by a column-pruned size
-        estimate against autoBroadcastJoinThreshold):
+        shuffle join selection), decided by the tenant's serve-state
+        size estimate against autoBroadcastJoinThreshold:
 
-        - doc blobs fit the broadcast threshold -> ship the blob table
-          ONCE per executor and shuffle only the (qid, doc_id) pairs;
-          the cascade runs as mapInPandas over qid partitions with
-          queries + blobs read from broadcasts (zero blob shuffle).
-        - else -> the cogrouped path: one qid shuffle carrying each
-          candidate's codes+residuals to its group. Per-executor
-          memory stays ONE group (that query's candidates), bounded
-          regardless of corpus size — the 100 TB path. One shuffle
-          stage beats three for any batch where candidates-per-query
-          is within ~100x of num_second_pass (measured 1.8x faster
-          end-to-end at bench scale); for corpora where probe pruning
-          still yields millions of candidates per query, the
-          declarative twin ``scoring.batch_two_phase_topk`` keeps
-          stage-1 codes-only and joins residual rows for survivors
-          alone — same semantics, shuffle-lean."""
+        - the state fits -> it is broadcast ONCE (owned by the state,
+          reused by every batch until the next commit) and the qids
+          are parallelized over the executors; each task scores its
+          qids with ``serve.local_search`` — the function the point
+          search runs in the driver — and emits the ranked rows with
+          their stored fields straight from the state. No shuffle, no
+          join. A ``doc_filter`` is collected once into a row mask the
+          scorer applies to each query's candidates.
+        - else (or ``force_cogroup``) -> the cogrouped path: probes
+          are computed driver-side and shipped as a small DataFrame,
+          the postings scan prunes to the probed partitions, and the
+          whole cascade (PLAID -> num_second_pass cut -> residual
+          decode -> exact MaxSim -> top-k) runs in ONE cogrouped
+          applyInPandas by qid — each candidate's codes+residuals flow
+          to its query's group through the shuffle, so per-executor
+          memory is one group, bounded regardless of corpus size — the
+          100 TB path. For corpora where probe pruning still yields
+          millions of candidates per query, the declarative twin
+          ``scoring.batch_two_phase_topk`` keeps stage-1 codes-only and
+          joins residual rows for survivors alone — same semantics,
+          shuffle-lean."""
         self._refresh_meta_if_stale()
         opts = opts or SearchOptions()
         if opts.scoring_method == "xtr":
@@ -1706,12 +1704,51 @@ class Index(SegmentStore):
         qmats = {int(qid): np.asarray(q, dtype=np.float32) for qid, q in queries.items()}
         quant = self.quantizers[field]
         use_adc = self._use_adc(quant, opts)
+        stored = self._stored_fields()
+        doc_schema = self.schema.doc_spark_schema()
+        out_fields = [
+            T.StructField("qid", T.LongType()),
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("rank", T.LongType()),
+            T.StructField("score", T.DoubleType()),
+        ]
+
+        # force_cogroup (bench/ops knob, default off): route down the
+        # cogrouped 100 TB fallback even when the state would fit the
+        # broadcast threshold — the fallback must be MEASURABLE at any
+        # corpus size (an unmeasured fallback is a latency cliff
+        # candidate), and an operator can pin it when executor memory
+        # is tighter than the threshold suggests.
+        state = self._local_state(tenant, field)
+        if state is not None:
+            sc = self.spark.sparkContext
+            mask = None
+            if doc_filter is not None:
+                keep = self._filter_doc_ids(tenant, doc_filter).toArrow()
+                mask = np.isin(state.doc_ids, keep.column("doc_id").to_numpy())
+            bc_state = state.broadcast(sc, self._bc)
+            bc_q = self._bc((qmats, mask))
+
+            def serve_qids(qids):
+                st, (qm, m) = bc_state.value, bc_q.value
+                for qid in qids:
+                    vec = VectorQuery(field, qm[qid])
+                    t = serve.local_search(st, [vec], vec, k, opts, use_adc, stored, mask=m)
+                    cols = [t.column(c).to_pylist() for c in t.column_names]
+                    for rank, (d, score, *rest) in enumerate(zip(*cols), 1):
+                        yield (qid, d, rank, score, *rest)
+
+            n = max(1, min(len(qmats), sc.defaultParallelism))
+            return self.spark.createDataFrame(
+                sc.parallelize(sorted(qmats), n).mapPartitions(serve_qids),
+                T.StructType(out_fields + [doc_schema[s] for s in stored]),
+            )
+
         codes_c, res_c, nt_c = (
             f"{field}__codes",
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-
         # driver-side frames go through pandas -> Arrow (fast path; the
         # tuple-list route serializes row-by-row via py4j)
         probe_rows = self._top_centroids_batch(field, qmats, opts)
@@ -1730,184 +1767,64 @@ class Index(SegmentStore):
             docs = docs.join(
                 self._filter_doc_ids(tenant, doc_filter), "doc_id", "left_semi"
             )
-
         n_parts = self.spark.sparkContext.defaultParallelism
         bc_c = self._bc(self.centroids[field])
-        knobs = dict(
-            threshold=float(opts.centroid_score_threshold),
-            num_second_pass=int(opts.num_second_pass),
-            k=int(k),
-            use_adc=use_adc,
-            normalize=bool(opts.normalize),
+        cand = cand_ids.join(docs.select("doc_id", codes_c, res_c, nt_c), "doc_id")
+        # explicit qid partitioning ahead of the cogroup: the Python
+        # cascade is CPU-bound per group, and AQE (which only sees
+        # bytes) would coalesce a small batch's shuffle into few
+        # partitions, serializing the groups. A user repartition is
+        # AQE-exempt and the cogroup reuses it.
+        cand = cand.repartition(n_parts, "qid")
+        queries_df = self.spark.createDataFrame(
+            pd.DataFrame(
+                [
+                    (qid, j, tok.astype(np.float32))
+                    for qid, q in qmats.items()
+                    for j, tok in enumerate(q)
+                ],
+                columns=["qid", "q_id", "qvec"],
+            ),
+            "qid long, q_id long, qvec array<float>",
         )
+        queries_part = queries_df.repartition(n_parts, "qid")
+        empty = {
+            "qid": pd.Series(dtype="int64"),
+            "doc_id": pd.Series(dtype="int64"),
+            "rank": pd.Series(dtype="int64"),
+            "score": pd.Series(dtype="float64"),
+        }
 
-        def score_group(qid, Q, doc_ids, code_arrs, blobs, nts):
+        def cascade(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            if left.empty or right.empty:
+                return pd.DataFrame(empty)
+            Q = np.vstack(right.sort_values("q_id")["qvec"].to_numpy()).astype(np.float32)
+            doc_ids = left["doc_id"].to_numpy()
             r = kernels.cascade(
-                Q, bc_c.value, quant, doc_ids, code_arrs, blobs, nts, **knobs
+                Q, bc_c.value, quant, doc_ids,
+                [np.asarray(c, dtype=np.int64) for c in left[codes_c]],
+                left[res_c].to_numpy(),
+                left[nt_c].to_numpy().astype(np.int64),
+                threshold=float(opts.centroid_score_threshold),
+                num_second_pass=int(opts.num_second_pass),
+                k=int(k),
+                use_adc=use_adc,
+                normalize=bool(opts.normalize),
             )
             return pd.DataFrame(
                 {
-                    "qid": np.full(len(r.rows), qid, dtype=np.int64),
+                    "qid": np.full(len(r.rows), int(left["qid"].iloc[0]), dtype=np.int64),
                     "doc_id": doc_ids[r.rows],
                     "rank": np.arange(1, len(r.rows) + 1, dtype=np.int64),
                     "score": r.scores,
                 }
             )
 
-        # ---- physical strategy selection, the batch analogue of
-        # Spark's broadcast-vs-shuffle join choice ----
-        # The qid-cogroup path ships every candidate's codes+residual
-        # blobs through the shuffle (bounded per-executor memory: one
-        # group at a time — the 100 TB path). When the WHOLE doc blob
-        # table fits the broadcast threshold, shipping it once to each
-        # executor and shuffling only the tiny (qid, doc_id) pairs is
-        # strictly cheaper. Unfiltered calls read the estimate and the
-        # blob map from the tenant's serve state (built once per
-        # committed snapshot, see _serve_state); filtered calls build
-        # both per call — absent map entries ARE the filter, so a
-        # filtered map must never be reused.
-        #
-        # force_cogroup (bench/ops knob, default off): route down the
-        # cogrouped 100 TB fallback even when the blobs would fit the
-        # broadcast threshold — the fallback must be MEASURABLE at any
-        # corpus size (an unmeasured fallback is a latency cliff
-        # candidate), and an operator can pin it when executor memory
-        # is tighter than the threshold suggests.
-        force_cg = bool(getattr(self, "force_cogroup", False))
-        bmax = self._bcast_max()
-        if doc_filter is None:
-            state = self._serve_state(tenant, field, load=not force_cg)
-            fits = state.loaded and state.est_bytes <= bmax
-        else:
-            fits = self._serve_estimate(docs, field, quant, scalars=False) <= bmax
-        if fits and not force_cg:
-            if doc_filter is None:
-                bc_docs = state.broadcast(self.spark.sparkContext, self._bc)
-            else:
-                tbl = docs.select("doc_id", codes_c, res_c, nt_c).toArrow()
-                bc_docs = self._bc(
-                    serve.blob_map(
-                        tbl.column("doc_id").to_numpy(), *serve.blob_columns(tbl, field)
-                    )
-                )
-            bc_q = self._bc(qmats)
-
-            def serve_batches(batches):
-                dm = bc_docs.value
-                qm = bc_q.value
-
-                def score_pdf(pdf):
-                    outs = []
-                    for qid_val, grp in pdf.groupby("qid", sort=False):
-                        ents = [
-                            (d, dm[d]) for d in grp["doc_id"].to_numpy() if d in dm
-                        ]
-                        # absent map entries = docs removed by doc_filter
-                        # (the broadcast map IS the filter) or deleted
-                        if not ents:
-                            continue
-                        outs.append(
-                            score_group(
-                                int(qid_val),
-                                qm[int(qid_val)],
-                                np.fromiter(
-                                    (d for d, _ in ents), dtype=np.int64, count=len(ents)
-                                ),
-                                [e[0] for _, e in ents],
-                                [e[1] for _, e in ents],
-                                np.fromiter(
-                                    (e[2] for _, e in ents),
-                                    dtype=np.int64,
-                                    count=len(ents),
-                                ),
-                            )
-                        )
-                    return outs
-
-                # Arrow batches are capped (arrow.maxRecordsPerBatch) and do
-                # NOT respect group boundaries: one qid's candidate rows can
-                # straddle batches, and scoring each fragment independently
-                # would emit duplicate ranks over partial candidate sets.
-                # Rows arrive qid-contiguous (sortWithinPartitions below), so
-                # hold back each batch's FINAL qid until a different qid (or
-                # end of partition) proves the group complete. Held memory is
-                # bounded by one group — the same bound the cogroup path has.
-                pending = None
-                for pdf in batches:
-                    if pending is not None:
-                        pdf = pd.concat([pending, pdf], ignore_index=True)
-                        pending = None
-                    if len(pdf) == 0:
-                        continue
-                    tail = pdf["qid"].to_numpy() == pdf["qid"].iloc[-1]
-                    pending = pdf[tail]
-                    outs = score_pdf(pdf[~tail]) if (~tail).any() else []
-                    if outs:
-                        yield pd.concat(outs)
-                if pending is not None and len(pending):
-                    outs = score_pdf(pending)
-                    if outs:
-                        yield pd.concat(outs)
-
-            topk = (
-                cand_ids.repartition(n_parts, "qid")
-                .sortWithinPartitions("qid")
-                .mapInPandas(
-                    serve_batches, "qid long, doc_id long, rank long, score double"
-                )
-            )
-        else:
-            cand = cand_ids.join(
-                docs.select("doc_id", codes_c, res_c, nt_c), "doc_id"
-            )
-            # explicit qid partitioning ahead of the cogroup: the
-            # Python cascade is CPU-bound per group, and AQE (which
-            # only sees bytes) would coalesce a small batch's shuffle
-            # into few partitions, serializing the groups. A user
-            # repartition is AQE-exempt and the cogroup reuses it.
-            cand = cand.repartition(n_parts, "qid")
-            queries_df = self.spark.createDataFrame(
-                pd.DataFrame(
-                    [
-                        (qid, j, tok.astype(np.float32))
-                        for qid, q in qmats.items()
-                        for j, tok in enumerate(q)
-                    ],
-                    columns=["qid", "q_id", "qvec"],
-                ),
-                "qid long, q_id long, qvec array<float>",
-            )
-            queries_part = queries_df.repartition(n_parts, "qid")
-            empty = {
-                "qid": pd.Series(dtype="int64"),
-                "doc_id": pd.Series(dtype="int64"),
-                "rank": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-
-            def cascade(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if left.empty or right.empty:
-                    return pd.DataFrame(empty)
-                Q = np.vstack(
-                    right.sort_values("q_id")["qvec"].to_numpy()
-                ).astype(np.float32)
-                return score_group(
-                    int(left["qid"].iloc[0]),
-                    Q,
-                    left["doc_id"].to_numpy(),
-                    [np.asarray(c, dtype=np.int64) for c in left[codes_c]],
-                    left[res_c].to_numpy(),
-                    left[nt_c].to_numpy().astype(np.int64),
-                )
-
-            topk = (
-                cand.groupBy("qid")
-                .cogroup(queries_part.groupBy("qid"))
-                .applyInPandas(
-                    cascade, "qid long, doc_id long, rank long, score double"
-                )
-            )
-        stored = self._stored_fields()
+        topk = (
+            cand.groupBy("qid")
+            .cogroup(queries_part.groupBy("qid"))
+            .applyInPandas(cascade, T.StructType(out_fields))
+        )
         if not stored:
             return topk
         return tag_cached(
@@ -1925,16 +1842,17 @@ class Index(SegmentStore):
 
         One tiny search_batch per vector field drives the REAL serve
         path end to end, so everything the first user batch needs is
-        resident afterwards: the persisted postings slice
-        (_postings_serve), the tenant's serve state (_serve_state: the
-        size estimate, the doc blobs and their broadcast, which the
-        driver-local point search also scores from), the centroid
-        matrices, and the JVM's codegen/Arrow lanes for the cascade
-        plan. Measured at the sf10
-        probe: the first 1000-query batch drops from ~17-20 s to
-        warm-path latency (~4 s), with prewarm itself costing the
-        difference at load time — where a serving deployment wants it
-        (scripts/serve_profile.py records both)."""
+        resident afterwards: the tenant's serve state (_serve_state:
+        the size estimate and the doc blobs, postings and scalar
+        columns, which the driver-local point search also scores
+        from), its broadcast, and warm executor Python workers. Over
+        the broadcast threshold the batch takes the cogroup path and
+        warms the persisted postings slice (_postings_serve) instead;
+        under it, a Spark-plan search tree builds that slice on first
+        use, as it does after every commit. Measured on the sf10 index
+        (SCALE.md, "sf10 cold-batch bar"): the first 1000-query batch
+        took 10.6 s cold and 7.8 s after a 9.4 s prewarm — the cost
+        moves to load time, where a serving deployment wants it."""
         self._refresh_meta_if_stale()
         fields = (
             [field]

@@ -14,12 +14,13 @@ KnnNearestCentroids.cpp:38-110).
   candidates.
 
 Callers are thin adapters: the per-query pandas UDFs of the Spark
-plan, the broadcast and cogroup cascades of ``Index.search_batch``, and
-the driver-local point search (``index/serve.py``). Candidate docs come
-as aligned per-doc sequences: ``code_arrs`` (int64 centroid ids, one
-per token), ``blobs`` (packed residual bytes, token-major fixed-size
-rows) and ``nts`` (token counts). Docs always have >= 1 token
-(validateField rejects empty tensors), so every segment is non-empty.
+plan, the cogroup cascade of ``Index.search_batch``, and
+``serve.local_search``, which the driver-local point search and the
+broadcast batch path share. Candidate docs come as aligned per-doc
+sequences: ``code_arrs`` (int64 centroid ids, one per token),
+``blobs`` (packed residual bytes, token-major fixed-size rows) and
+``nts`` (token counts). Docs always have >= 1 token (validateField
+rejects empty tensors), so every segment is non-empty.
 """
 
 from __future__ import annotations

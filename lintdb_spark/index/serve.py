@@ -10,15 +10,16 @@ it on the tenant, the field, the meta object and ``_meta_seq``) and its
 data is never mutated after, so a search that grabbed one reads exactly
 one generation. It holds:
 
-- the tenant's doc blobs (codes, residual bytes, n_tokens per doc) —
-  their single owner on the driver; ``search_batch``'s broadcast path
-  ships them as the map ``{doc_id: (codes, residuals, n_tokens)}``
-  through ``broadcast()``, which builds that map on first use;
+- the tenant's doc blobs (codes, residual bytes, n_tokens per doc);
 - postings by centroid, inverted from the docs' codes (the postings
   table is written as the distinct ``explode(codes)``, so this is the
   same relation without another read);
 - the tenant's scalar columns, for TERM masks and the stored fields of
   results.
+
+``local_search`` scores one query against a state. The point search
+calls it in the driver; ``search_batch`` ships the state to executors
+once (``broadcast``) and calls it there once per query.
 """
 
 from __future__ import annotations
@@ -30,26 +31,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from lintdb_spark.index import kernels
-
-
-def blob_columns(table: pa.Table, field: str):
-    """Per-doc (code arrays, residual bytes, token counts) of ``field``
-    in an Arrow doc table, aligned with its rows. Code arrays are
-    zero-copy views into one flat buffer."""
-    codes = table.column(f"{field}__codes").combine_chunks()
-    flat = codes.flatten().to_numpy().astype(np.int64, copy=False)
-    offs = codes.offsets.to_numpy()
-    offs = offs - offs[0]
-    code_arrs = [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-    blobs = table.column(f"{field}__residuals").to_pylist()
-    nts = table.column(f"{field}__num_tokens").to_numpy().astype(np.int64)
-    return code_arrs, blobs, nts
-
-
-def blob_map(doc_ids, code_arrs, blobs, nts) -> dict:
-    """The doc-blob map {doc_id: (codes, residual bytes, n_tokens)} the
-    broadcast batch path ships to executors."""
-    return {int(d): (c, b, int(n)) for d, c, b, n in zip(doc_ids, code_arrs, blobs, nts)}
 
 
 class ServeState:
@@ -70,15 +51,21 @@ class ServeState:
             return
         table = table.sort_by("doc_id")
         self.doc_ids = table.column("doc_id").to_numpy().astype(np.int64)
-        self.code_arrs, self.blobs, self.nts = blob_columns(table, field)
+        # per-doc code arrays: zero-copy views into one flat buffer
+        codes = table.column(f"{field}__codes").combine_chunks()
+        flat = codes.flatten().to_numpy().astype(np.int64, copy=False)
+        offs = codes.offsets.to_numpy()
+        offs = offs - offs[0]
+        self.code_arrs = [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
+        self.blobs = table.column(f"{field}__residuals").to_pylist()
+        self.nts = table.column(f"{field}__num_tokens").to_numpy().astype(np.int64)
         self.scalars = table.drop_columns(
             [f"{field}__codes", f"{field}__residuals", f"{field}__num_tokens"]
         )
         # postings CSR: distinct (centroid, row) pairs, rows ascending
         # within each centroid's list
         n = len(self.doc_ids)
-        lens = np.fromiter((len(c) for c in self.code_arrs), dtype=np.int64, count=n)
-        flat = np.concatenate(self.code_arrs) if n else np.empty(0, dtype=np.int64)
+        lens = np.diff(offs)
         pairs = np.unique(flat * max(n, 1) + np.repeat(np.arange(n, dtype=np.int64), lens))
         cents = pairs // max(n, 1)
         self.post_rows = pairs % max(n, 1)
@@ -99,20 +86,27 @@ class ServeState:
         eq = pc.equal(col, pa.scalar(value, type=col.type))
         return pc.fill_null(eq, False).to_numpy(zero_copy_only=False)
 
+    def __getstate__(self):
+        # an executor needs the data only: not the driver-side lock and
+        # broadcast handle, nor the meta dict the state is keyed on
+        d = dict(self.__dict__)
+        for name in ("meta", "_bc", "_bc_lock"):
+            del d[name]
+        return d
+
     def broadcast(self, sc, per_call):
-        """The blob map as a Spark broadcast, created on first use and
-        owned by this state (``release`` unpersists it). Once the state
+        """This state as a Spark broadcast, created on first use and
+        owned by the state (``release`` unpersists it). Once the state
         is released — a commit or another tenant's search replaced it
         after the caller picked it up — a broadcast it created would
-        have no owner left to free it, so the map goes out through
+        have no owner left to free it, so it goes out through
         ``per_call`` (``Index._bc``: freed with the caller's result)."""
         with self._bc_lock:
             if self._bc is not None:
                 return self._bc
-            dm = blob_map(self.doc_ids, self.code_arrs, self.blobs, self.nts)
             if self._released:
-                return per_call(dm)
-            self._bc = sc.broadcast(dm)
+                return per_call(self)
+            self._bc = sc.broadcast(self)
             return self._bc
 
     def release(self) -> None:
@@ -129,14 +123,15 @@ class ServeState:
 
 
 def local_search(state: ServeState, children: list, vec, k: int, opts, use_adc: bool,
-                 stored: list[str], log=None) -> pa.Table:
+                 stored: list[str], log=None, mask=None) -> pa.Table:
     """Score a bare VectorQuery (``children == [vec]``) or an AND of
     TermQuery nodes and one VectorQuery from ``state``. The stage-1
     score sums the children's scores in child order (1.0 per TERM, the
     PLAID score for the vector), as the Spark plan's AND join does; the
-    final score is the MaxSim. Returns (doc_id, score, *stored) rows,
-    best first. ``log(msg, *args)``, when given, receives the
-    expected_id trace."""
+    final score is the MaxSim. ``mask``, when given, is a boolean per
+    state row: candidates outside it are dropped (search_batch's
+    doc_filter). Returns (doc_id, score, *stored) rows, best first.
+    ``log(msg, *args)``, when given, receives the expected_id trace."""
     Q = np.asarray(vec.query_tokens, dtype=np.float32)
     probes = [
         c for _, c in kernels.top_centroids(
@@ -144,6 +139,8 @@ def local_search(state: ServeState, children: list, vec, k: int, opts, use_adc: 
         )
     ]
     rows = state.candidates(probes)
+    if mask is not None:
+        rows = rows[mask[rows]]
     for node in children:
         if node is not vec:
             rows = rows[state.term_mask(rows, node.field, node.value)]

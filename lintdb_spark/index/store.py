@@ -486,8 +486,8 @@ class SegmentStore:
                 ) from exc
         else:
             self.fs.write_atomic(meta_path, payload)
-        # mutation counter for in-process serve caches (e.g.
-        # search_batch's doc-blob broadcast): every committed state
+        # mutation counter for in-process serve caches (e.g. the
+        # Index's serve state): every committed state
         # change bumps it, so caches key on it and never serve stale
         self._meta_seq = getattr(self, "_meta_seq", 0) + 1
         # snapshot the committed file's identity so

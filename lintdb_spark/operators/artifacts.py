@@ -614,8 +614,7 @@ class DedupArtifacts(SegmentStore):
         Readers never see them — segment reads project to the table's
         declared schema (_read_uncached drops undeclared columns) —
         and the per-table row contents, partition dirs and sort order
-        are unchanged. ``params.ARTIFACT_SINGLE_PASS_STAGE`` gates the
-        path; off restores the per-table writes unchanged."""
+        are unchanged."""
         import shutil as _shutil
         import uuid as _uuid
         from functools import reduce
@@ -964,8 +963,11 @@ class DedupArtifacts(SegmentStore):
     }
 
     def _minor_schema(self, table):
-        # signatures is the wide minhash table (m0..m{p-1}) — schema
-        # inferred from the files
+        # the declared schema also projects the subset read: files of
+        # single-pass-staged segments carry the commit's union columns
+        # (see _write_segments_one_pass), which a merge must not copy
+        if table == "signatures":
+            return self._sig_schema()
         return self._MINOR_SCHEMAS.get(table)
 
     def _minor_excluded(self, table):
@@ -1319,45 +1321,27 @@ class DedupArtifacts(SegmentStore):
         try:
             staged: list[tuple[str, str]] = []
             futures: list = []
-            one_pass = bool(params.ARTIFACT_SINGLE_PASS_STAGE)
             pending_pass: list[tuple[str, DataFrame, str]] = []
 
             def stage(table: str, df: DataFrame) -> None:
-                # reserve the segment name and SUBMIT the write to the
-                # staging pool immediately (round 15; previously the
-                # writes were deferred to one flush after the pair-
-                # stats phase). The 8-10 per-table writes a commit
-                # issues are independent of the sequential bookkeeping
-                # jobs the driver keeps running (counts, collision
-                # collects, pair verification staging), so eager
-                # submission overlaps the two phases outright — the
-                # guide §2.6 concurrent-jobs pattern; event-log
-                # profile: the write wave was ~1/3 of update wall and
-                # ran entirely AFTER the ~1/2-of-wall sequential
-                # phase it is independent of. Plans read only
-                # committed segments plus this batch's persisted
-                # frames (all unpersisted only after flush_stage
-                # joins), so submission time changes WHEN each plan
-                # executes, never what it computes; concurrent first
-                # materialization of a persisted frame is at most a
-                # duplicate cache fill. A mid-build exception leaves
+                # reserve the segment name and buffer the table for the
+                # next union write pass (_write_segments_one_pass: one
+                # write job for several tables, round 16). Passes are
+                # submitted to the staging pool in two waves, so the
+                # early wave overlaps the sequential bookkeeping jobs
+                # the driver keeps running (counts, collision collects,
+                # pair verification staging) — the guide §2.6
+                # concurrent-jobs pattern. Plans read only committed
+                # segments plus this batch's persisted frames (all
+                # unpersisted only after flush_stage joins), so
+                # submission time changes WHEN each plan executes,
+                # never what it computes. A mid-build exception leaves
                 # at worst in-flight staging writes, which the outer
                 # finally joins before any unpersist — the segments
-                # stay invisible staging orphans, exactly like a
-                # crash mid-staging (vacuum collects them).
+                # stay invisible staging orphans, exactly like a crash
+                # mid-staging (vacuum collects them).
                 seg, p = self._stage_path(table)
-                if one_pass:
-                    # round 16: buffer for the next union write pass
-                    # (_write_segments_one_pass) instead of one write
-                    # job per table — submitted in two waves, so the
-                    # early wave still overlaps the sequential
-                    # pair-stats spine exactly like the per-table
-                    # submissions did
-                    pending_pass.append((table, df, p))
-                else:
-                    futures.append(
-                        pool.submit(self._write_segment, table, df, p)
-                    )
+                pending_pass.append((table, df, p))
                 staged.append((table, seg))
 
             def submit_stage_pass() -> None:

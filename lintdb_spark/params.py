@@ -43,7 +43,7 @@ NUM_SECOND_PASS = 32  # reference: 1024
 # per-q-token retrieved tokens (k'). The reference ships 100
 # (SearchOptions.h:34); the XTR paper uses corpus-relative k' (40k at
 # their scale). Round-13 sweep over the golden fixture
-# (scripts/xtr_sweep_probe.py, .scale_probe/results_xtr_sweep.json):
+# (SCALE.md §13, .scale_probe/results_xtr_sweep.json):
 # Success@10 converges 0.90 (k'=64) -> 0.9688 (256) -> 0.9844 (384)
 # -> 1.0 (all tokens) at flat wall time — the old 64 undersized
 # retrieval, not an intrinsic XTR bound. 256 keeps the retrieved set
@@ -206,10 +206,10 @@ ARTIFACT_AUTOCOMPACT_FLIP_ROWS = 600_000
 # pre-endpoint-restriction value let a 38.9 s serve exposure through
 # because restricted rows match ~3x more pairs each), and any future
 # volume-shifting change would silently re-expose it. Calibrated on
-# the sf10 replay tail (scripts/fold_cost_replay.py, observe mode —
-# SCALE.md §12): degree ≈ 112 at the 500k-doc corpus (17.2M pair rows
-# / 306k endpoint rows), serve 9-14 s through cost ≈ 63M and 23.3 s at
-# 145M against a ~3 s flip-free baseline; 60M both preserves the
+# the sf10 replay tail (observe mode, SCALE.md §12): degree ≈ 112 at
+# the 500k-doc corpus (17.2M pair rows / 306k endpoint rows), serve
+# 9-14 s through cost ≈ 63M and 23.3 s at 145M against a ~3 s
+# flip-free baseline; 60M both preserves the
 # r11-measured 600k-row firing point (600k x (1+112) ≈ 68M) and sits
 # under the measured degradation knee.
 ARTIFACT_FOLD_COST_ROWS = 60_000_000
@@ -259,14 +259,6 @@ ARTIFACT_PREFILTER_SHINGLES = 500_000
 # doc repeats its shingles) no longer spills bounded batches onto the
 # distributed general path.
 ARTIFACT_PREFILTER_SHINGLE_ROWS = 1_000_000
-# Round 16: stage a batch commit's coarse segment tables as ONE union
-# write job (partitionBy(__t, tenant) into a staging root, rename into
-# the per-table segment dirs) instead of one write job per table — a
-# commit staged 9 table writes on a 4-wide pool, each paying job
-# submission plus a full parquet commit-protocol pass. Directory
-# layout, row contents and in-file sort keys are unchanged (see
-# _write_segments_one_pass); False restores the per-table writes.
-ARTIFACT_SINGLE_PASS_STAGE = True
 
 # English/German/French/Spanish stopword lists for the n-gram-free
 # language-ID heuristic (tiny, deterministic; good enough for synthetic

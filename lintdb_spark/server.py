@@ -19,9 +19,12 @@ Endpoints (parity with `lintdb/server/openapi.yaml` and
 - ``POST /v1/Index/remove/{tenant}`` — ``{"ids": [...]}`` -> ``{"ok": true}``
 
 Failures answer ``{"error": ...}``: 400 for a malformed request (a
-body that is not JSON, a query node the translator rejects, options
-that do not construct SearchOptions, a non-integer k), 500 for
-anything else.
+body that is not JSON, a non-integer tenant; for search a query node
+the translator rejects, options that do not construct SearchOptions, a
+non-integer k; for mutations ``documents`` or ``ids`` that is not a
+list, a document without an integer ``id``, an unknown field name, a
+tensor whose length is not a multiple of the field's dimensions), 500
+for anything else.
 
 Query-node JSON translation mirrors
 `server/controllers/v1/query_node_translator.h:12-52` (TERM, TENSOR,
@@ -57,6 +60,22 @@ from lintdb_spark.index.query import (
 
 class BadRequest(ValueError):
     """A malformed request: answered with 400, not 500."""
+
+
+def _int(value, what: str) -> int:
+    """A JSON integer (booleans and floats refused)."""
+    if isinstance(value, bool) or not isinstance(value, int):
+        raise BadRequest(f"{what} must be an integer, got {value!r}")
+    return value
+
+
+def _list(payload: dict, key: str) -> list:
+    if not isinstance(payload, dict):
+        raise BadRequest(f"body must be a JSON object, got {type(payload).__name__}")
+    value = payload.get(key, [])
+    if not isinstance(value, list):
+        raise BadRequest(f"{key!r} must be a list, got {type(value).__name__}")
+    return value
 
 
 def query_node_from_json(node: dict):
@@ -132,17 +151,22 @@ class IndexServer:
         parts = [p for p in path.split("/") if p]
         if len(parts) != 4 or parts[0] != "v1" or parts[1] != "Index":
             return {"ok": False}, 404
-        op, tenant = parts[2], int(parts[3])
+        op = parts[2]
+        try:
+            tenant = int(parts[3])
+        except ValueError as exc:
+            raise BadRequest(f"tenant must be an integer, got {parts[3]!r}") from exc
         if op == "search":
             return self._search(tenant, payload), 200
         if op in ("add", "update"):
-            docs_df = self._documents_df(tenant, payload.get("documents", []))
+            docs_df = self._documents_df(tenant, _list(payload, "documents"))
             with self._write_lock:
                 getattr(self.index, op)(docs_df)
             return {"ok": True}, 200
         if op == "remove":
+            ids = [_int(i, "id") for i in _list(payload, "ids")]
             with self._write_lock:
-                self.index.remove(tenant, [int(i) for i in payload.get("ids", [])])
+                self.index.remove(tenant, ids)
             return {"ok": True}, 200
         return {"ok": False}, 404
 
@@ -195,13 +219,23 @@ class IndexServer:
         schema's declared dimensions."""
         schema = self.index.schema
         dims = {f.name: f.parameters.dimensions for f in schema.colbert_fields()}
+        names = {f.name for f in schema.scalar_fields()} | set(dims)
         rows = []
         for d in documents:
-            row = {"tenant": tenant, "doc_id": int(d["id"])}
+            if not isinstance(d, dict) or "id" not in d:
+                raise BadRequest(f"document without an id: {d!r:.80}")
+            row = {"tenant": tenant, "doc_id": _int(d["id"], "document id")}
             for f in d.get("fields", []):
                 name, value = f["name"], f["value"]
+                if name not in names:
+                    raise BadRequest(f"unknown field: {name!r}")
                 if name in dims:
                     flat = np.asarray(value, dtype=np.float32)
+                    if flat.size % dims[name]:
+                        raise BadRequest(
+                            f"tensor field {name!r} has {flat.size} values, not a "
+                            f"multiple of its {dims[name]} dimensions"
+                        )
                     row[name] = [
                         [float(x) for x in tok] for tok in flat.reshape(-1, dims[name])
                     ]
@@ -216,12 +250,12 @@ class IndexServer:
 
     def start(self, prewarm: bool = True, tenant: int = 0) -> "IndexServer":
         """Start serving. ``prewarm`` (default on) runs Index.prewarm
-        first — one tiny batch through the real serve path so postings
-        persist, the doc-blob broadcast, centroid matrices, and codegen
-        are resident BEFORE the port accepts traffic (measured at the
-        sf10 probe: first 1000-q batch 17-20 s cold vs ~4 s prewarmed).
-        Pass prewarm=False to trade first-request latency for startup
-        time."""
+        first — one tiny batch through the real serve path, so the
+        tenant's serve state, its broadcast and warm executor workers
+        are resident BEFORE the port accepts traffic (on the sf10
+        index the first 1000-q batch took 10.6 s cold vs 7.8 s
+        prewarmed, SCALE.md). Pass prewarm=False to trade
+        first-request latency for startup time."""
         if prewarm:
             self.index.prewarm(tenant)
         self._thread = threading.Thread(

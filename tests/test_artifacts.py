@@ -1303,6 +1303,45 @@ def test_legacy_flip_rev1_upgrades_on_compact(spark, tmp_path):
 # default-lane by the q_artifact_minor oracle row (driver-gated AND in
 # test_queries_vs_oracle) and by test_minor_compact_skips_pending
 @pytest.mark.slow
+def _file_columns(path, table, seg):
+    """Column names in the parquet files of one committed segment."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(path, table, seg, "**", "*.parquet"), recursive=True)
+    assert files
+    return set().union(*(pq.read_schema(f).names for f in files))
+
+
+def test_single_pass_segments_carry_union_columns_reads_drop_them(spark, tmp_path):
+    """A batch commit stages its tables in one union write
+    (_write_segments_one_pass): each staged segment's files carry the
+    other tables' columns as all-null chunks. No public read surfaces
+    them."""
+    from lintdb_spark.operators import artifacts as A
+
+    rows1, _ = _two_group_rows(n_a=12)
+    path = str(tmp_path / "store_union")
+    st = DedupArtifacts.create(spark, path)
+    st.update(spark.createDataFrame(rows1, "doc_id long, text string"))
+    reads = {
+        "doc_ids": (st.doc_ids(), A._DOCID_SCHEMA),
+        "signatures": (st.signatures(), st._sig_schema()),
+        "buckets": (st.buckets(), A._BUCKET_SCHEMA),
+        "df": (st.shingle_df(), A._DF_SCHEMA),
+        "simhash": (st.fingerprints(), A._SIMHASH_SCHEMA),
+        "cand_pairs": (st.candidate_pairs(), A._PAIR_SCHEMA),
+    }
+    for table, (df, schema) in reads.items():
+        (seg,) = st._segments(table)
+        extra = _file_columns(path, table, seg) - {f.name for f in schema.fields}
+        assert extra, table
+        assert not extra & set(df.columns), (table, df.columns)
+        assert df.count() > 0, table
+
+
 def test_minor_compact_merges_batch_tier_and_preserves_reads(
     spark, tmp_path, monkeypatch
 ):
@@ -1346,6 +1385,14 @@ def test_minor_compact_merges_batch_tier_and_preserves_reads(
     assert "v1" in doc_segs
     assert any(s.startswith("m1-") for s in doc_segs)
     assert sum(1 for s in doc_segs if s.startswith("seg-")) < 2
+    # the merged signatures segment holds the declared columns only,
+    # not the union columns its single-pass-staged members carry
+    merged_sigs = [s for s in st._segments("signatures") if s.startswith("m1-")]
+    assert merged_sigs
+    for seg in merged_sigs:
+        assert _file_columns(path, "signatures", seg) == {
+            f.name for f in st._sig_schema().fields
+        } - {"tenant"}  # a partition column, in the directory names
     # reads byte-equal to the from-scratch capped verify
     all_rows = [r for b in batches for r in b]
     cols = ["doc_a", "doc_b", "n_common", "jaccard"]

@@ -763,7 +763,7 @@ def test_release_frees_per_call_broadcasts(built_index):
 
     qm = {0: doc_tokens(3)}
     bdf = built_index.search_batch(0, "colbert", qm, k=3, opts=OPTS)
-    assert len(getattr(bdf, "_lintdb_broadcasts", ())) >= 1  # bc_c + bc_q
+    assert len(getattr(bdf, "_lintdb_broadcasts", ())) >= 1  # the query map
     bdf.collect()
     release(bdf)
     assert bdf.collect()

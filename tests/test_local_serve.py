@@ -23,14 +23,15 @@ from pyspark.sql import functions as F
 from lintdb_spark.index import (
     AndQuery,
     Index,
+    MatchQuery,
     OrQuery,
     SearchOptions,
     TermQuery,
     VectorQuery,
 )
-from lintdb_spark.index import kernels
+from lintdb_spark.index import kernels, serve
 from lintdb_spark.index.schema import DataType, IndexedField, Schema
-from tests.test_index_lifecycle import doc_tokens, make_docs, make_schema
+from tests.test_index_lifecycle import NUM_TOKENS, doc_tokens, make_docs, make_schema
 
 NUM = 24
 BASE = dict(n_probe=8, k_top_centroids=2, num_second_pass=50)
@@ -126,7 +127,7 @@ def test_local_matches_spark_plan(idx):
 def test_local_survivor_cut_below_candidate_count(spark, tmp_path):
     idx = build(spark, tmp_path / "cut", "binarizer")
     opts = SearchOptions(**{**BASE, "num_second_pass": 3}, centroid_score_threshold=0.0)
-    state = idx._serve_state(0, "colbert", load=True)
+    state = idx._serve_state(0, "colbert")
     probes = idx._top_centroids("colbert", doc_tokens(5), opts)
     assert len(state.candidates(probes)) > 3
     for name, q in trees().items():
@@ -202,13 +203,14 @@ def test_size_estimate_counts_scalar_columns(spark, tmp_path):
     idx = build(spark, tmp_path / "est", "none")
     quant = idx.quantizers["colbert"]
     docs = idx._docs().filter(F.col("tenant") == 0)
-    blobs = idx._serve_estimate(docs, "colbert", quant, scalars=False)
     full = idx._serve_estimate(docs, "colbert", quant)
     text = sum(len(f"doc-{d}") + len("even" if d % 2 == 0 else "odd") for d in range(NUM))
-    # doc_id and rank_i at 8 B, category and title at 4 B of offset each
-    assert full - blobs == text + NUM * (8 + 8 + 2 * 4)
-    # blobs within the threshold but the whole state over it: the
-    # state is not loaded and the search keeps the Spark plan
+    # per token the code bytes + 16; per doc 256 B of objects, doc_id
+    # and rank_i at 8 B, category and title at 4 B of offset each
+    tokens = NUM * NUM_TOKENS
+    assert full == tokens * (quant.code_size + 16) + NUM * (256 + 8 + 8 + 2 * 4) + text
+    # one byte over the threshold: the state is not loaded and the
+    # search keeps the Spark plan
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(full - 1))
     try:
@@ -221,8 +223,8 @@ def test_size_estimate_counts_scalar_columns(spark, tmp_path):
 def test_released_state_broadcasts_per_call(spark, tmp_path, monkeypatch):
     """A state replaced after search_batch picked it up (a commit, or a
     search of another tenant, took the one slot) must not create a
-    broadcast it owns: nothing would ever free it. Its blob map goes
-    out as a per-call broadcast, released with the result."""
+    broadcast it owns: nothing would ever free it. The state goes out
+    as a per-call broadcast, released with the result."""
     from lintdb_spark.cache import release
 
     idx = build(spark, tmp_path / "rel", "none")
@@ -231,9 +233,9 @@ def test_released_state_broadcasts_per_call(spark, tmp_path, monkeypatch):
     picked = []
     real = Index._serve_state
 
-    def replaced_after_pick(self, tenant, field, load):
-        picked.append(real(self, tenant, field, load))
-        real(self, 1, field, load=True)  # another tenant's search
+    def replaced_after_pick(self, tenant, field):
+        picked.append(real(self, tenant, field))
+        real(self, 1, field)  # another tenant's search
         return picked[-1]
 
     monkeypatch.setattr(Index, "_serve_state", replaced_after_pick)
@@ -242,18 +244,19 @@ def test_released_state_broadcasts_per_call(spark, tmp_path, monkeypatch):
     (state,) = picked
     assert idx._serve_slot.key == (1, "colbert") and idx._serve_slot is not state
     assert state._released and state._bc is None  # no owned broadcast
-    maps = [
+    payloads = [
         b for b in getattr(df, "_lintdb_broadcasts", ())
-        if isinstance(b.value, dict) and 4 in b.value
+        if isinstance(b.value, serve.ServeState)
     ]
-    assert len(maps) == 1  # the blob map, tagged on the result
+    assert len(payloads) == 1  # the state, tagged on the result
+    assert 4 in payloads[0].value.doc_ids
     got = df.collect()
     assert sorted(got, key=lambda r: r["rank"])[0]["doc_id"] == 4
     release(df)
     assert getattr(df, "_lintdb_broadcasts", ()) == ()
 
     # an unreleased state owns its one broadcast across calls
-    live = idx._serve_state(0, "colbert", load=True)
+    live = idx._serve_state(0, "colbert")
     b1 = live.broadcast(spark.sparkContext, idx._bc)
     assert live.broadcast(spark.sparkContext, idx._bc) is b1
     live.release()
@@ -261,7 +264,7 @@ def test_released_state_broadcasts_per_call(spark, tmp_path, monkeypatch):
 
 
 def test_postings_inverted_from_codes_equal_postings_table(idx):
-    state = idx._serve_state(0, "colbert", load=True)
+    state = idx._serve_state(0, "colbert")
     # the CSR: centroid c's posting list is post_rows[post_ptr[c]:post_ptr[c + 1]]
     cents = np.repeat(np.arange(len(state.post_ptr) - 1), np.diff(state.post_ptr))
     dids = state.doc_ids[state.post_rows]
@@ -360,6 +363,86 @@ def test_concurrent_searches_share_one_rebuild(spark, tmp_path, monkeypatch):
     # the state every thread read is the post-commit snapshot
     state = idx._serve_slot
     assert state.meta is idx._meta and 600 in state.doc_ids
+
+
+def is_batch_local(df) -> bool:
+    # the broadcast batch path parallelizes qids: an RDD, no cogroup
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "LogicalRDD" in plan and "CoGroup" not in plan
+
+
+def batch_rows(idx, queries, opts, doc_filter=None, local=True):
+    df = idx.search_batch(0, "colbert", queries, k=5, opts=opts, doc_filter=doc_filter)
+    assert is_batch_local(df) == local
+    return sorted(
+        (r["qid"], r["rank"], r["doc_id"], r["score"], r["title"]) for r in df.collect()
+    )
+
+
+def assert_same_rows(got, want):
+    assert [g[:3] + g[4:] for g in got] == [w[:3] + w[4:] for w in want]
+    np.testing.assert_allclose(
+        [g[3] for g in got], [w[3] for w in want], rtol=0, atol=1e-9
+    )
+
+
+def test_batch_scores_like_local_search(idx):
+    """Under the threshold search_batch scores each qid with the point
+    search's scorer: its rows equal per-query local Index.search."""
+    opts = SearchOptions(**BASE, centroid_score_threshold=0.0)
+    queries = {5: doc_tokens(5), 11: doc_tokens(11), 30: doc_tokens(30)}
+    got = batch_rows(idx, queries, opts)
+    want = []
+    for qid, q in queries.items():
+        single = idx.search(0, VectorQuery("colbert", q), k=5, opts=opts)
+        assert is_local(single)
+        want += [(qid, rank, *r) for rank, r in enumerate(rows(single), 1)]
+    assert len(got) == 15
+    assert_same_rows(got, sorted(want))
+
+
+def test_batch_doc_filter_matches_cogroup(spark, tmp_path):
+    schema = make_schema("binarizer")
+    idx = Index.create(
+        spark, str(tmp_path / "bf"),
+        Schema(schema.fields + [IndexedField("body", DataType.TEXT, analyzer="standard")]),
+    )
+    body = F.when(F.col("doc_id") % 3 == 0, "data pipelines").otherwise("other things")
+    docs = make_docs(spark, range(NUM)).withColumn("body", body)
+    idx.train(docs)
+    idx.add(docs)
+    opts = SearchOptions(**BASE, centroid_score_threshold=0.0)
+    queries = {1: doc_tokens(6), 2: doc_tokens(9), 3: doc_tokens(4)}
+    filters = {
+        "term": (TermQuery("category", "odd"), lambda d: d % 2 == 1),
+        "match": (MatchQuery("body", "data"), lambda d: d % 3 == 0),
+        "or": (
+            OrQuery([TermQuery("rank_i", 1), TermQuery("category", "even")]),
+            lambda d: d % 3 == 1 or d % 2 == 0,
+        ),
+    }
+    for name, (filt, holds) in filters.items():
+        got = batch_rows(idx, queries, opts, filt)
+        assert got and all(holds(r[2]) for r in got), name
+        idx.force_cogroup = True
+        try:
+            want = batch_rows(idx, queries, opts, filt, local=False)
+        finally:
+            idx.force_cogroup = False
+        assert_same_rows(got, want)
+
+
+def test_warm_batch_runs_one_job(spark, tmp_path):
+    idx = build(spark, tmp_path / "bj", "none")
+    opts = SearchOptions(**BASE, centroid_score_threshold=0.0)
+    queries = {1: doc_tokens(3), 2: doc_tokens(8), 3: doc_tokens(13)}
+    batch_rows(idx, queries, opts)  # builds the state and its broadcast
+    got, jobs = _jobs(spark, lambda: batch_rows(idx, queries, opts))
+    assert len(got) == 15 and jobs == 1
+    filt = TermQuery("category", "odd")
+    got, jobs = _jobs(spark, lambda: batch_rows(idx, queries, opts, filt))
+    assert got and all(r[2] % 2 == 1 for r in got)
+    assert 1 <= jobs <= 2  # the filter's doc ids, then the batch
 
 
 def _trace(idx, caplog, query, opts):

@@ -950,8 +950,8 @@ def test_simhash_wide_bits_real_entropy(spark, sf_dir):
     reason="sf0.1 corpus not present",
 )
 def test_lsh_default_config_recall_floor(spark):
-    """Round-8 recall pin (scripts/recall_probe.py records the full
-    sweep): at the DEFAULT knobs (16 perms, 4 bands) the LSH-verified
+    """Round-8 recall pin (SCALE.md §8, "LSH recall curves", records
+    the full sweep): at the DEFAULT knobs (16 perms, 4 bands) the LSH-verified
     tier must recover >= 0.95 of the exhaustive tier's jaccard >= 0.5
     pairs on the sf0.1 corpus (measured 0.9805; bands=2 degrades to
     0.926, bands=8 buys 0.996 for ~3x the candidates — the knob works

@@ -358,10 +358,9 @@ def test_batch_adc_parity_both_paths(spark, tmp_path):
 
 def test_batch_broadcast_path_survives_tiny_arrow_batches(spark, tmp_path):
     """Arrow batches don't respect group boundaries: with
-    maxRecordsPerBatch=3 every qid's candidate rows straddle batches,
-    and the broadcast serve path must still emit exactly one ranked
-    list per qid (the carry-over guard) — identical to results under
-    the default batch size."""
+    maxRecordsPerBatch=3 the broadcast serve path must still emit
+    exactly one ranked list per qid — identical to results under the
+    default batch size."""
     idx = Index.create(spark, str(tmp_path / "bidx_tiny"), make_schema("none"))
     docs = make_docs(spark, range(15))
     idx.train(docs)
@@ -390,9 +389,9 @@ def test_batch_broadcast_path_survives_tiny_arrow_batches(spark, tmp_path):
 
 
 def test_batch_serve_cache_reuses_and_invalidates(spark, tmp_path):
-    """Unfiltered batch serve reuses the doc-blob broadcast across
-    calls on an unchanged index and rebuilds it after any committed
-    mutation; filtered calls never touch the cache."""
+    """Batch serve reuses the serve state across calls on an unchanged
+    index and rebuilds it after any committed mutation; a filtered call
+    scores from the same state (its filter is a per-call row mask)."""
     from lintdb_spark.index import TermQuery
 
     idx = Index.create(spark, str(tmp_path / "bidx_cache"), make_schema("none"))
@@ -407,7 +406,7 @@ def test_batch_serve_cache_reuses_and_invalidates(spark, tmp_path):
     idx.search_batch(0, "colbert", q, k=3, opts=OPTS).collect()
     assert idx._serve_slot is cache1  # reused, not rebuilt
 
-    # a filtered call must not replace or serve from the cache
+    # a filtered call must not replace the state
     res_f = idx.search_batch(
         0, "colbert", q, k=10, opts=OPTS,
         doc_filter=TermQuery("category", "even"),

@@ -146,6 +146,63 @@ def test_malformed_search_answers_400(server, mutate):
     assert status == 400 and "error" in out
 
 
+def _doc(**over) -> dict:
+    doc = {
+        "id": 60001,
+        "fields": [
+            {"name": "colbert", "value": [float(x) for x in doc_tokens(1).ravel()]},
+            {"name": "title", "value": "t"},
+        ],
+    }
+    doc.update(over)
+    return doc
+
+
+@pytest.mark.parametrize(
+    "path, body",
+    [
+        ("/v1/Index/add/zero", {"documents": [_doc()]}),
+        ("/v1/Index/remove/1.5", {"ids": [1]}),
+        ("/v1/Index/add/0", {"documents": _doc()}),
+        ("/v1/Index/update/0", {"documents": "x"}),
+        ("/v1/Index/remove/0", {"ids": 3}),
+        ("/v1/Index/add/0", {"documents": [{"fields": []}]}),
+        ("/v1/Index/add/0", {"documents": ["not-a-doc"]}),
+        ("/v1/Index/add/0", {"documents": [_doc(id="7")]}),
+        ("/v1/Index/add/0", {"documents": [_doc(id=7.5)]}),
+        ("/v1/Index/remove/0", {"ids": [1, "two"]}),
+        ("/v1/Index/add/0", {"documents": [_doc(fields=[{"name": "nope", "value": 1}])]}),
+        (
+            "/v1/Index/update/0",
+            {"documents": [_doc(fields=[{"name": "colbert", "value": [0.5] * (DIM + 3)}])]},
+        ),
+        ("/v1/Index/remove/0", [1, 2]),
+    ],
+    ids=[
+        "tenant-word", "tenant-float", "documents-object", "documents-string",
+        "ids-int", "doc-no-id", "doc-not-object", "id-string", "id-float",
+        "ids-string", "unknown-field", "tensor-length", "body-not-object",
+    ],
+)
+def test_malformed_mutation_answers_400(server, path, body):
+    status, out = _post_status(server.port, path, json.dumps(body).encode())
+    assert status == 400 and "error" in out
+    # nothing was written: the malformed add's doc is not searchable
+    res = _post(server.port, "/v1/Index/search/0", _search_body(1, k=10))
+    assert all(r["id"] != 60001 for r in res["results"])
+
+
+def test_internal_mutation_failure_answers_500(server, monkeypatch):
+    def boom(*a, **kw):
+        raise RuntimeError("disk full")
+
+    monkeypatch.setattr(server.index, "remove", boom)
+    status, out = _post_status(
+        server.port, "/v1/Index/remove/0", json.dumps({"ids": [1]}).encode()
+    )
+    assert status == 500 and "disk full" in out["error"]
+
+
 def test_internal_search_failure_answers_500(server, monkeypatch):
     def boom(*a, **kw):
         raise RuntimeError("executor lost")
@@ -181,17 +238,19 @@ def test_query_node_translation():
 def test_start_prewarms_by_default(spark, tmp_path):
     """Round-10: IndexServer.start() runs Index.prewarm() BEFORE the
     port accepts traffic (the r09 verdict's missing wiring), so the
-    first request lands on the warm serve path — the postings-slice
-    cache is already resident. prewarm=False opts out."""
+    first request lands on the warm serve path — the tenant's serve
+    state and its broadcast are already resident. prewarm=False opts
+    out."""
     idx = Index.create(spark, str(tmp_path / "idx_warm"), make_schema("none"))
     docs = make_docs(spark, range(10))
     idx.train(docs)
     idx.add(docs)
-    assert not getattr(idx, "_postings_serve_cache", None)
+    assert idx._serve_slot is None
     srv = IndexServer(idx).start()
     try:
         # serve state resident before any request
-        assert getattr(idx, "_postings_serve_cache", None)
+        state = idx._serve_slot
+        assert state.loaded and state.meta is idx._meta and state._bc is not None
         r = _post(srv.port, "/v1/Index/search/0", _search_body(3))
         assert r["results"] and r["results"][0]["id"] == 3
     finally:
@@ -202,6 +261,6 @@ def test_start_prewarms_by_default(spark, tmp_path):
     idx2.add(docs)
     srv2 = IndexServer(idx2).start(prewarm=False)
     try:
-        assert not getattr(idx2, "_postings_serve_cache", None)
+        assert idx2._serve_slot is None
     finally:
         srv2.stop()
