@@ -28,13 +28,15 @@ Design-for-scale notes:
   RocksDB posting lists.
 - EVERY mutation commits through _meta.json — a poor-man's Delta log.
   A table's live state is the list of SEGMENT directories recorded in
-  meta["segments"][table]. add/merge stage each table's new rows into
-  a fresh seg-<uuid> directory and only then flip the meta (one
-  rename-atomic JSON write covering all tables at once); remove/update
-  write one consolidated v<N> segment and point the list at it. A
-  crash anywhere before the flip leaves orphan directories that no
-  reader ever sees — a retry cannot duplicate rows (the crash-injection
-  test asserts this). The reference gets the same guarantee from a
+  meta["segments"][table]. Every mutation has one writer (_stage) and
+  one commit (_commit_segments, one rename-atomic JSON write covering
+  all tables at once): add/merge stage each table's new rows into a
+  fresh seg-<uuid> directory; remove/compact stage each table's
+  survivors as one consolidated v<N> segment that replaces the list;
+  update stages both and publishes them in the same flip. A crash
+  anywhere before the flip leaves orphan directories that no reader
+  ever sees — a retry cannot duplicate rows (the crash-injection
+  tests assert this). The reference gets the same guarantee from a
   single RocksDB WriteBatch (lintdb/invlists/IndexWriter.cpp:22-58).
 - centroid matrices live in driver memory / broadcasts (num_centroids
   ~ sqrt(total tokens): 65536 x 128 fp32 = 32 MB at the reference's
@@ -249,8 +251,8 @@ class Index(SegmentStore):
         return idx
 
     def _normalize_meta(self, meta: dict | None = None) -> None:
-        # normalize once per (re)load: _version()/_rewrite_tables()
-        # index _meta['versions'] directly, so a legacy add-only meta
+        # normalize once per (re)load: _version() indexes
+        # _meta['versions'] directly, so a legacy add-only meta
         # without the key would load fine but KeyError on the first
         # mutation. super() also decodes the on-disk manifest coding.
         # Operates on `meta` (may be a not-yet-published dict from the
@@ -526,21 +528,19 @@ class Index(SegmentStore):
             if int(bid) <= self._meta.get("stream_batches", {}).get(key, -1):
                 return  # replay of a batch whose flip already committed
         self._validate_ingest(docs_df)
-        # empty-batch detection moved INTO _add_encoded (round 16): the
-        # old standalone docs_df.isEmpty() probe here was one full pass
-        # over the un-persisted ingest lineage per add — at bench scale
-        # the ingest aggregation ran once for the probe and again for
-        # the cache fill. _add_encoded's persist+count now doubles as
-        # the probe (0 rows -> return before any segment is staged, so
-        # a zero-row micro-batch still commits nothing and never breaks
-        # schema inference with a footerless segment).
+        self._ingest(docs_df, idempotency_token, auto_maintain)
 
-        out = docs_df
+    def _ingest(
+        self, docs_df, idempotency_token=None, auto_maintain=None, replace=False
+    ) -> None:
+        """Encode ``docs_df``, stage its rows as seg-* segments and
+        publish them in one flip — with ``replace``, together with
+        every table's survivors of the (tenant, doc_id) anti-join
+        against those rows, staged as its next v<N> (update)."""
         ingest_bcs = []  # centroid blobs the coarse UDFs broadcast;
-        # add() is synchronous, so they are released in the outer
-        # finally (a long-lived server must not leak one pair per
-        # ingest — including when UDF construction itself fails
-        # between fields, e.g. a missing quantizer sidecar)
+        # released in the finally (a long-lived server must not leak
+        # one pair per ingest — including when UDF construction itself
+        # fails between fields, e.g. a missing quantizer sidecar)
         with self._writer_lock():
             # re-check the replay watermark UNDER the lock: the refresh
             # inside _writer_lock may have pulled a concurrent
@@ -550,8 +550,35 @@ class Index(SegmentStore):
                 if int(bid) <= self._meta.get("stream_batches", {}).get(key, -1):
                     return
             try:
-                return self._add_encoded(
-                    out, ingest_bcs, idempotency_token, auto_maintain
+                # cache: the assign/encode UDF lineage feeds one docs
+                # write plus one postings write per colbert/text field
+                # (and update's anti-join keys) — without this every
+                # action re-runs the broadcast matmuls over the batch
+                out = self._encode(docs_df, ingest_bcs).persist()
+                try:
+                    # ONE count fills the cache AND is the empty-batch
+                    # probe: the ingest lineage (aggregation + assign/
+                    # encode UDFs) runs exactly once, every staged
+                    # write reads the cache, and a zero-row batch
+                    # commits nothing (no footerless segment to break
+                    # later schema inference)
+                    if out.count() == 0:
+                        return
+                    rewrites = []
+                    if replace:
+                        keys = out.select("tenant", "doc_id").distinct()
+                        rewrites = self._stage(
+                            [
+                                (t, df.join(keys, ["tenant", "doc_id"], "left_anti"))
+                                for t, df in self._committed()
+                            ],
+                            rewrite=True,
+                        )
+                    staged = self._stage(self._ingest_frames(out))
+                finally:
+                    out.unpersist()
+                self._commit_segments(
+                    staged, stream_batch=idempotency_token, replace=rewrites
                 )
             finally:
                 for b in ingest_bcs:
@@ -559,10 +586,20 @@ class Index(SegmentStore):
                         b.unpersist(blocking=False)
                     except Exception:  # noqa: BLE001 — best-effort
                         pass
+            # self-triggering tiered maintenance (shared SegmentStore
+            # machinery): a stream whose caller never configured
+            # compact_every must not walk into the segment-accretion
+            # serve cliff. Still under the writer lock (the re-entrant
+            # acquire); auto_compact=False opts out for
+            # explicitly-managed indexes, and ``auto_maintain=False``
+            # for THIS call only (stream_ingest's explicit cadence).
+            if auto_maintain is None or auto_maintain:
+                self._auto_maintain()
 
-    def _add_encoded(
-        self, out, ingest_bcs, idempotency_token, auto_maintain=None
-    ) -> None:
+    def _encode(self, docs_df: DataFrame, ingest_bcs: list) -> DataFrame:
+        """Per colbert field: the assigned centroid codes, encoded
+        residuals and token count replace the raw token column."""
+        out = docs_df
         for fld in self.schema.colbert_fields():
             C = self.centroids[fld.name]
             q = self.quantizers[fld.name]
@@ -583,204 +620,117 @@ class Index(SegmentStore):
                 .withColumn(f"{fld.name}__num_tokens", F.size(F.col(fld.name)).cast("int"))
                 .drop(fld.name)
             )
+        return out
 
-        # cache: the assign/encode UDF lineage feeds one docs write plus
-        # one postings write per colbert/text field — without this every
-        # action re-runs the broadcast matmuls over the full batch
-        out = out.persist()
-        staged: list[tuple[str, str]] = []
-        try:
-            # ONE count fills the cache AND is the empty-batch probe
-            # (round 16, guide §1.2 step 1 — one pass instead of
-            # three): previously the standalone isEmpty() ran the
-            # ingest lineage once, and then the concurrently submitted
-            # docs + postings writes EACH re-ran the encode lineage as
-            # racing first fills of the persisted frame. Now the
-            # lineage (ingest aggregation + assign/encode UDFs) runs
-            # exactly once; every staged write below reads the cache.
-            if out.count() == 0:
-                return
-            # the docs write plus one postings write per colbert/text
-            # field are independent until the meta flip — overlap
-            # them through the shared staging pool (round 12,
-            # SegmentStore._run_writes; 1 = sequential). All plans
-            # read the SAME persisted `out`, so concurrent first
-            # materialization is at most duplicate cache fill, never
-            # a different result.
-            writes = []
-            doc_cols = [f.name for f in self.schema.doc_spark_schema().fields]
-            seg, p = self._stage_path("docs")
-            writes.append(
-                lambda df=out.select(*doc_cols), lp=p: df.write.mode(
-                    "overwrite"
-                )
-                .partitionBy("tenant")
-                .parquet(self.fs.spark_write_path(lp))
-            )
-            staged.append(("docs", seg))
+    def _ingest_frames(self, out: DataFrame) -> list[tuple[str, DataFrame]]:
+        """The role fan-out of an encoded batch: its docs rows, one
+        posting row per (tenant, centroid, doc) per colbert field, and
+        token postings per analyzed TEXT field (the inverted text
+        index, the KeyBuilder.h:264-267 text-posting analogue at token
+        level)."""
+        from lintdb_spark.functions.text import analyze_standard
 
-            for fld in self.schema.colbert_fields():
-                table = f"postings/{fld.name}"
-                postings = (
+        doc_cols = [f.name for f in self.schema.doc_spark_schema().fields]
+        frames = [("docs", out.select(*doc_cols))]
+        for fld in self.schema.colbert_fields():
+            frames.append(
+                (
+                    f"postings/{fld.name}",
                     out.select(
                         "tenant",
                         F.explode(F.col(f"{fld.name}__codes")).alias("centroid_id"),
                         "doc_id",
-                    )
-                    .distinct()
+                    ).distinct(),
                 )
-                seg, p = self._stage_path(table)
-                writes.append(
-                    lambda df=postings, lp=p: self._write_postings(df, lp)
-                )
-                staged.append((table, seg))
-
-            # analyzed TEXT fields -> token postings (inverted text
-            # index, the KeyBuilder.h:264-267 text-posting analogue at
-            # token level)
-            from lintdb_spark.functions.text import analyze_standard
-
-            for fld in self.schema.analyzed_text_fields():
-                table = f"postings_text/{fld.name}"
-                tp = (
+            )
+        for fld in self.schema.analyzed_text_fields():
+            frames.append(
+                (
+                    f"postings_text/{fld.name}",
                     out.select(
                         "tenant",
                         F.explode(analyze_standard(F.col(fld.name))).alias("token"),
                         "doc_id",
                     )
-                    # one row per (token, doc) with its term frequency —
-                    # same distinct keys as before, plus tf for the
-                    # MatchQuery 'tf' scoring mode
+                    # one row per (token, doc) with its term frequency
+                    # (the MatchQuery 'tf' scoring mode)
                     .groupBy("tenant", "token", "doc_id")
-                    .agg(F.count("*").cast("bigint").alias("tf"))
+                    .agg(F.count("*").cast("bigint").alias("tf")),
                 )
-                seg, p = self._stage_path(table)
-                writes.append(
-                    lambda df=tp, lp=p: df.write.mode("overwrite")
-                    .partitionBy("tenant")
-                    .parquet(self.fs.spark_write_path(lp))
-                )
-                staged.append((table, seg))
-            self._run_writes(writes)
-        finally:
-            out.unpersist()
-        self._commit_segments(staged, stream_batch=idempotency_token)
-        # self-triggering tiered maintenance (round 11, shared
-        # SegmentStore machinery — the artifact store has had the
-        # always-full variant since round 10): a stream whose caller
-        # never configured compact_every must not walk into the
-        # segment-accretion serve cliff, and the answer to accretion
-        # is the batch-proportional minor merge, not a corpus rewrite
-        # per 16 micro-batches. Still under add()'s writer lock (the
-        # re-entrant acquire); auto_compact=False opts out for
-        # explicitly-managed indexes, and ``auto_maintain=False``
-        # opts out for THIS call only (stream_ingest's explicit
-        # cadence — a per-call override instead of a persistent
-        # attribute mutation that would outlive the stream and leave
-        # the object never self-maintaining, ADVICE r11).
-        if auto_maintain is None or auto_maintain:
-            self._auto_maintain()
+            )
+        return frames
+
+    def _committed(self, src: "Index | None" = None) -> list[tuple[str, DataFrame]]:
+        """(table, committed rows of ``src``, default this index) for
+        every table of this schema: docs and the vector postings
+        always, a text-postings table once ``src`` holds a segment of
+        it."""
+        src = src or self
+        out = [("docs", src._docs())] + [
+            (f"postings/{f.name}", src._postings(f.name))
+            for f in self.schema.colbert_fields()
+        ]
+        for f in self.schema.analyzed_text_fields():
+            if src._segments(f"postings_text/{f.name}"):
+                out.append((f"postings_text/{f.name}", src._text_postings(f.name)))
+        return out
+
+    def _stage(
+        self, frames: list[tuple[str, DataFrame]], rewrite: bool = False
+    ) -> list[tuple[str, str]]:
+        """THE segment writer of every Index mutation: write each
+        (table, rows) pair as one new segment in the table's layout
+        (_minor_write), all overlapped through _run_writes, and return
+        the staged (table, segment) pairs for _commit_segments. An
+        append is named seg-<uuid>; a ``rewrite`` (the table's whole
+        new contents) is its next v<N>. Nothing is visible until the
+        commit; a failure leaves orphans vacuum collects."""
+        staged, writes = [], []
+        for table, df in frames:
+            if rewrite:
+                v = self._version(table) + 1
+                seg, path = f"v{v}", self._table_path(table, v)
+            else:
+                seg, path = self._stage_path(table)
+            writes.append(lambda t=table, d=df, p=path: self._minor_write(t, d, p))
+            staged.append((table, seg))
+        self._run_writes(writes)
+        return staged
 
     def remove(self, tenant: int, doc_ids: list[int]) -> None:
-        """A6: delete postings + forward rows for ids — implemented as a
-        version-bumped rewrite (Delta-DELETE analogue). The doc->centroid
-        mapping (B6) is implicit in the codes column; posting deletion
-        filters by doc_id within the tenant partition."""
-        ids = set(int(i) for i in doc_ids)
-        cond = (F.col("tenant") == tenant) & F.col("doc_id").isin(list(ids))
-        self._remove_where(cond)
-
-    def _remove_where(self, cond) -> None:
-        """One version-bumped rewrite of every table excluding rows
-        matching ``cond`` (an IN/equality predicate — pushes down to
-        the parquet scan for point removals)."""
-        self._rewrite_tables(lambda df: df.filter(~cond))
-
-    def _remove_keys(self, keys_df: DataFrame) -> None:
-        """Version-bumped rewrite of every table dropping rows whose
-        (tenant, doc_id) appears in ``keys_df`` — the Delta
-        MERGE-delete analogue, fully distributed: nothing is collected
-        to the driver, so a bulk update with millions of keys is just a
-        join. AQE picks broadcast-hash for small key sets (the common
-        point-update case) and a shuffle join for genuinely bulk ones."""
-        keys = keys_df.select("tenant", "doc_id").distinct()
-        self._rewrite_tables(lambda df: df.join(keys, ["tenant", "doc_id"], "left_anti"))
-
-    def _rewrite_tables(self, drop_rows) -> None:
-        """Shared remove/update rewrite: apply ``drop_rows`` (DataFrame
-        -> DataFrame) to every table, write the survivors to ONE new
-        consolidated v<N> segment per table, then flip _meta.json once
-        for all tables (readers of the old segment lists are
-        unaffected; a crash before the flip changes nothing)."""
+        """A6: delete postings + forward rows for ids — every table's
+        survivors are staged as its next v<N> and published in one
+        flip (Delta-DELETE analogue). The doc->centroid mapping (B6) is
+        implicit in the codes column; the tenant + IN filter pushes
+        down to the parquet scan. No ids: nothing is committed."""
+        ids = sorted({int(i) for i in doc_ids})
+        if not ids:
+            return
+        cond = (F.col("tenant") == tenant) & F.col("doc_id").isin(ids)
         with self._writer_lock():
-            self._rewrite_tables_locked(drop_rows)
-
-    def _rewrite_tables_locked(self, drop_rows) -> None:
-        new_segs: dict[str, str] = {}
-        docs = drop_rows(self._docs())
-        new_v = self._version("docs") + 1
-        _docs_path = self._table_path("docs", new_v)
-        docs.write.mode("overwrite").partitionBy("tenant").parquet(
-            self.fs.spark_write_path(_docs_path)
-        )
-        self.fs.publish(_docs_path)
-        new_segs["docs"] = f"v{new_v}"
-
-        for fld in self.schema.colbert_fields():
-            table = f"postings/{fld.name}"
-            p = drop_rows(self._postings(fld.name))
-            new_v = self._version(table) + 1
-            self._write_postings(p, self._table_path(table, new_v))
-            new_segs[table] = f"v{new_v}"
-        for fld in self.schema.analyzed_text_fields():
-            table = f"postings_text/{fld.name}"
-            if self._segments(table):
-                p = drop_rows(self._text_postings(fld.name))
-                new_v = self._version(table) + 1
-                _tp_path = self._table_path(table, new_v)
-                p.write.mode("overwrite").partitionBy("tenant").parquet(
-                    self.fs.spark_write_path(_tp_path)
-                )
-                self.fs.publish(_tp_path)
-                new_segs[table] = f"v{new_v}"
-        # single commit point for every table — candidate meta built on
-        # a copy, adopted only after the durable flip (see
-        # _commit_segments)
-        import copy
-
-        new_meta = copy.deepcopy(self._meta)
-        segs = new_meta.setdefault("segments", {})
-        man = new_meta.setdefault("manifests", {})
-        for table, seg in new_segs.items():
-            new_meta["versions"][table] = int(seg[1:])
-            segs[table] = [seg]
-            # rewrite REPLACES the table's segment list, so the
-            # manifest map is rebuilt (superseded entries pruned)
-            man[table] = {}
-            self._record_manifest(
-                new_meta, table, seg, os.path.join(self.path, table, seg)
+            self._commit_segments(
+                [],
+                replace=self._stage(
+                    [(t, df.filter(~cond)) for t, df in self._committed()],
+                    rewrite=True,
+                ),
             )
-        self._save_meta(new_meta)
-        self._meta = new_meta
 
     def update(self, docs_df: DataFrame) -> None:
-        """A7: remove + add (index.cpp:501-510), with the removal done
-        as a distributed anti-join on (tenant, doc_id) — no driver-side
-        collect anywhere in the path, so bulk updates scale to key sets
-        that would OOM an IN-list.
-
-        The cheap add() preconditions (trained index, ingest schema)
-        are checked BEFORE the delete commits: otherwise a doomed add
-        would leave the old rows already removed on bad input. A
-        runtime failure mid-add (executor crash) can still land
-        between the two flips — remove+add is two commits, exactly
-        like the reference's sequential remove-then-add; re-running
-        the update is the recovery."""
+        """A7: remove + add (index.cpp:501-510) as ONE commit: under
+        one writer lock the new rows are encoded and persisted, every
+        table's survivors of the (tenant, doc_id) anti-join against
+        them are staged as its next v<N>, the new rows as seg-*
+        segments, and one meta flip publishes both — a reader sees the
+        old docs or the new ones, and a failure anywhere before the
+        flip leaves the index as it was. The keys come from the
+        persisted batch: no driver-side collect, so bulk updates scale
+        to key sets that would OOM an IN-list. A zero-row frame
+        commits nothing."""
         if not self._meta["trained"]:
             raise RuntimeError("index must be trained before add()")
         self._validate_ingest(docs_df)
-        self._remove_keys(docs_df)
-        self.add(docs_df)
+        self._ingest(docs_df, replace=True)
 
     def _minor_schema(self, table: str):
         """Pin the empty-union fallback's type for every index table
@@ -813,10 +763,10 @@ class Index(SegmentStore):
         return None
 
     def _minor_write(self, table: str, df, path: str) -> None:
-        """Merged-segment layout per table kind, identical to the
-        batch segments add() stages: vector postings go through THE
-        shared postings writer; docs and text postings are
-        tenant-partitioned parquet."""
+        """The segment layout per table kind, for every segment the
+        Index writes (_stage's seg-* and v<N>, minor_compact's m<L>-*):
+        vector postings go through THE shared postings writer; docs
+        and text postings are tenant-partitioned parquet."""
         if table.startswith("postings/"):
             self._write_postings(df, path)
         else:
@@ -833,13 +783,16 @@ class Index(SegmentStore):
         explicit). Streaming/micro-batch ingest accretes one staged
         segment per add(), and every read unions one scan per segment
         — after N small adds a search pays N scan branches and the
-        per-file footer overhead. Compaction is the same
-        read-survivors -> write-one-segment -> single-meta-flip
-        rewrite remove/update already use, with nothing dropped;
-        readers of the old segment list are untouched, and a crash
-        before the flip changes nothing. Run vacuum() afterwards (age
-        guard permitting) to reclaim the superseded segment dirs."""
-        self._rewrite_tables(lambda df: df)
+        per-file footer overhead. Compaction is remove's rewrite with
+        nothing dropped: every table staged as its next v<N>, one meta
+        flip; readers of the old segment list are untouched, and a
+        crash before the flip changes nothing. Run vacuum() afterwards
+        (age guard permitting) to reclaim the superseded segment
+        dirs."""
+        with self._writer_lock():
+            self._commit_segments(
+                [], replace=self._stage(self._committed(), rewrite=True)
+            )
 
     def get_mapping(self, tenant: int, doc_id: int, field: str | None = None) -> list[int]:
         """C10 doc->centroid mapping lookup (RocksdbInvertedList.cpp:
@@ -872,26 +825,7 @@ class Index(SegmentStore):
             if oq is None or quantizer_to_json(q) != quantizer_to_json(oq):
                 raise ValueError(f"merge requires identical quantizers (field {name})")
         with self._writer_lock():
-            staged: list[tuple[str, str]] = []
-            seg, p = self._stage_path("docs")
-            other._docs().write.mode("overwrite").partitionBy("tenant").parquet(
-                self.fs.spark_write_path(p)
-            )
-            staged.append(("docs", seg))
-            for fld in self.schema.colbert_fields():
-                table = f"postings/{fld.name}"
-                seg, p = self._stage_path(table)
-                self._write_postings(other._postings(fld.name), p)
-                staged.append((table, seg))
-            for fld in self.schema.analyzed_text_fields():
-                table = f"postings_text/{fld.name}"
-                if other._segments(table):
-                    seg, p = self._stage_path(table)
-                    other._text_postings(fld.name).write.mode("overwrite").partitionBy(
-                        "tenant"
-                    ).parquet(self.fs.spark_write_path(p))
-                    staged.append((table, seg))
-            self._commit_segments(staged)
+            self._commit_segments(self._stage(self._committed(other)))
 
     # ---------------- search (C1-C9, D1-D8) ----------------
 
@@ -1439,60 +1373,15 @@ class Index(SegmentStore):
         (`SearchOptions.h:34-35` ships the `nearest_tokens_to_fetch`
         knob; `scoring/Scorer.h:59` is the commented-out XTRScorer).
 
-        Retrieval pool = IVF candidates (probed posting lists), which
-        is the scale approximation of the paper's global token
-        retrieval; candidates' tokens are decoded ONCE into rows by an
-        Arrow-batched mapInPandas, and everything after — per-q-token
-        top-k' cut, missing-similarity imputation, sum, top-k — is the
-        declarative `operators.scoring.xtr_topk` plan (JVM-side
-        windows/aggregations). Exact-twin property: with n_probe
-        covering all centroids and a lossless quantizer this equals
-        xtr_topk on the raw corpus (tested)."""
-        self._refresh_meta_if_stale()
-        from lintdb_spark.operators import scoring as _scoring
-
-        opts = opts or SearchOptions()
-        Q = np.asarray(query_tokens, dtype=np.float32)
-        codes_c, res_c, nt_c = (
-            f"{field}__codes",
-            f"{field}__residuals",
-            f"{field}__num_tokens",
-        )
-        probes_df = self.spark.createDataFrame(
-            [(int(c),) for c in self._top_centroids(field, Q, opts)],
-            "centroid_id long",
-        )
-        cand_ids = (
-            self._postings_serve(field, tenant)
-            .join(F.broadcast(probes_df), "centroid_id")
-            .select("doc_id")
-            .distinct()
-        )
-        cand = cand_ids.join(
-            self._docs().filter(F.col("tenant") == tenant), "doc_id"
-        ).select("doc_id", codes_c, res_c, nt_c)
-        decoded = self._decoded_token_rows(field, cand, normalize=opts.normalize)
-        q_df = self.spark.createDataFrame(
-            [(j, [float(x) for x in Q[j]]) for j in range(len(Q))],
-            "q_id long, qvec array<double>",
-        )
-        topk = _scoring.xtr_topk(
-            decoded, q_df, k=k, nearest_tokens_to_fetch=opts.nearest_tokens_to_fetch
-        )
-        # same return contract as search(): (doc_id, score, <stored>)
-        stored = self._stored_fields()
-        if not stored:
-            return topk
+        The one-query batch: search_batch_xtr with {0: Q}, ordered by
+        rank and projected to search()'s (doc_id, score, <stored>)
+        contract. Exact-twin property: with n_probe covering all
+        centroids and a lossless quantizer this equals
+        ``operators.scoring.xtr_topk`` on the raw corpus (tested)."""
+        batch = self.search_batch_xtr(tenant, field, {0: query_tokens}, k=k, opts=opts)
         return tag_cached(
-            topk.join(
-                self._docs()
-                .filter(F.col("tenant") == tenant)
-                .select("doc_id", *stored),
-                "doc_id",
-            )
-            .select("doc_id", "score", *stored)
-            .orderBy(F.round(F.col("score"), 6).desc(), F.col("doc_id").asc()),
-            topk,
+            batch.orderBy("rank").select("doc_id", "score", *self._stored_fields()),
+            batch,
         )
 
     def _decoded_token_rows(
@@ -1568,9 +1457,8 @@ class Index(SegmentStore):
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-        probe_rows = self._top_centroids_batch(field, qmats, opts)
         probes_df = self.spark.createDataFrame(
-            pd.DataFrame(probe_rows, columns=["qid", "centroid_id"]).astype("int64"),
+            [(int(q), int(c)) for q, c in self._top_centroids_batch(field, qmats, opts)],
             "qid long, centroid_id long",
         )
         cand_ids = (
@@ -1590,17 +1478,14 @@ class Index(SegmentStore):
         cand_tokens = self._decoded_token_rows(
             field, uniq, normalize=opts.normalize
         ).join(cand_ids, "doc_id")
-        # pandas -> Arrow fast path (the tuple-list route serializes
-        # row-by-row via py4j: ~4M floats per 1000-query batch)
+        # tuple rows, not a pandas frame: a small Arrow-built frame is
+        # a LocalRelation, the shape only the driver-local path returns
         queries_df = self.spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (qid, j, q[j].astype(np.float64))
-                    for qid, q in qmats.items()
-                    for j in range(len(q))
-                ],
-                columns=["qid", "q_id", "qvec"],
-            ),
+            [
+                (qid, j, row)
+                for qid, q in qmats.items()
+                for j, row in enumerate(q.astype(np.float64).tolist())
+            ],
             "qid long, q_id long, qvec array<double>",
         )
         topk = _scoring.batch_xtr_topk(
@@ -1751,9 +1636,8 @@ class Index(SegmentStore):
         )
         # driver-side frames go through pandas -> Arrow (fast path; the
         # tuple-list route serializes row-by-row via py4j)
-        probe_rows = self._top_centroids_batch(field, qmats, opts)
         probes_df = self.spark.createDataFrame(
-            pd.DataFrame(probe_rows, columns=["qid", "centroid_id"]).astype("int64"),
+            [(int(q), int(c)) for q, c in self._top_centroids_batch(field, qmats, opts)],
             "qid long, centroid_id long",
         )
         cand_ids = (

@@ -383,8 +383,8 @@ class SegmentStore:
         this thread: refuse to flip _meta.json on a stolen lock (the
         thief may have committed meanwhile — our flip would silently
         drop its segments), and refresh the lock mtime so a hold that
-        spans several flips (merge, _rewrite_tables at sf10) never
-        crosses writer_lock_stale_s between them."""
+        spans several flips (an add, then its maintenance compaction)
+        never crosses writer_lock_stale_s between them."""
         state = getattr(self._wlock_tls, "state", None)
         if state is None:
             return
@@ -508,10 +508,16 @@ class SegmentStore:
         self,
         staged: list[tuple[str, str]],
         stream_batch: tuple[str, int] | None = None,
+        replace: list[tuple[str, str]] | tuple = (),
     ) -> None:
-        """THE commit point for multi-table appends: extend every
+        """THE commit point for multi-table mutations: extend every
         table's segment list and flip _meta.json once. Everything
         before this call is invisible staging.
+
+        ``replace`` holds staged ``(table, "v<N>")`` rewrites: each
+        replaces its table's whole segment list, manifest map and
+        version before the ``staged`` appends land, in the same flip
+        (update publishes its survivors and its new rows together).
 
         The new meta is built on a COPY and adopted only after the
         durable flip succeeds: a failed flip (ENOSPC, fsync error)
@@ -525,8 +531,12 @@ class SegmentStore:
 
         new_meta = copy.deepcopy(self._meta)
         segs = new_meta.setdefault("segments", {})
-        new_meta.setdefault("manifests", {})
-        for table, seg in staged:
+        man = new_meta.setdefault("manifests", {})
+        for table, seg in replace:
+            segs[table] = []
+            man[table] = {}
+            new_meta["versions"][table] = int(seg[1:])
+        for table, seg in [*replace, *staged]:
             segs.setdefault(table, []).append(seg)
             # leaf-file manifest (+ commit-time row count) rides in the
             # same atomic flip as the segment list — readers holding

@@ -2051,7 +2051,7 @@ class DedupArtifacts(SegmentStore):
 
     def _stage_pair_stats_point(
         self, sh, bdf, cand, tenant: int, cap: float, stage, t_lit,
-        prows=None,
+        prows=None, keep=None,
     ) -> int | None:
         """Minimal-job pair_stats maintenance for the streaming hot
         path: cap pinned (cap_old == cap_new) and a gate-bounded
@@ -2076,7 +2076,10 @@ class DedupArtifacts(SegmentStore):
         nothing to verify or flip, or None to fall back to the general
         path: pair set over ARTIFACT_PREFILTER_PAIRS, involved docs
         over ARTIFACT_PREFILTER_DOCS, or drift on a legacy (pair_rev
-        2) store whose rows lack sizes (those re-verify)."""
+        2) store whose rows lack sizes (those re-verify). ``keep``
+        defers the unpersist of the persisted involved-doc shingles
+        (which a staged legacy verify write reads) to the caller's
+        post-flush barrier, as in _stage_pair_stats."""
         max_pairs = params.ARTIFACT_PREFILTER_PAIRS
         if prows is None:
             # caller didn't pre-collect the pair set (flush_pairs, the
@@ -2326,7 +2329,7 @@ class DedupArtifacts(SegmentStore):
         finally:
             self._join_future(brows_f)
             if all_sh is not None:
-                all_sh.unpersist()
+                (keep or (lambda df: df.unpersist()))(all_sh)
 
     def _stage_pair_stats(
         self, sh, bdf, cand, tenant: int, nd_batch: int, stage, t_lit,
@@ -2381,7 +2384,8 @@ class DedupArtifacts(SegmentStore):
 
         if pre_batch and cap_new == cap_old:
             seq = self._stage_pair_stats_point(
-                sh, bdf, cand, tenant, cap_new, stage, t_lit, prows=prows
+                sh, bdf, cand, tenant, cap_new, stage, t_lit, prows=prows,
+                keep=keep,
             )
             if seq is not None:
                 return seq

@@ -379,7 +379,7 @@ def q_xtr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 XTR — the reference's declared-but-dead scoring enum,
     working. The retrieval pool is routed through the IVF probe path —
     candidates from probed posting lists, exactly as the real index
-    serves it (Index.search_xtr, index/index.py:949-1018) — instead of
+    serves it (Index.search_xtr / search_batch_xtr) — instead of
     a dense corpus cross-join; the oracle applies the identical
     candidate restriction, so both sides stay in lock-step. At 100 TB
     the dense twin would scan every token per query; the probe-bounded

@@ -627,6 +627,85 @@ def test_point_path_runs_and_matches_scratch(spark, tmp_path, monkeypatch):
         sh_all.unpersist()
 
 
+def test_point_path_defers_shingle_unpersist_past_flush(
+    spark, tmp_path, monkeypatch
+):
+    """On a legacy (pair_rev 2) store the point path stages the
+    distributed pair_stats verify, whose plan reads the persisted
+    involved-doc shingles. That write runs in the commit's staging
+    wave, after the point path returns, so the shingles may be
+    unpersisted only after it — an earlier unpersist makes the write
+    recompute their lineage."""
+    SparkDF = type(spark.range(1))  # the concrete (classic) DataFrame
+
+    st = DedupArtifacts.create(spark, str(tmp_path / "store_legacy_point"))
+    st._meta["pair_rev"] = 2
+    st._save_meta()
+    events, results, persisted, inside = [], [], set(), []
+    orig_point = DedupArtifacts._stage_pair_stats_point
+    orig_write = DedupArtifacts._write_segments_one_pass
+    orig_persist, orig_unpersist = SparkDF.persist, SparkDF.unpersist
+
+    def point(self, *a, **k):
+        events.append(("point", None))
+        inside.append(True)
+        try:
+            r = orig_point(self, *a, **k)
+        finally:
+            inside.pop()
+        results.append(r)
+        return r
+
+    def write(self, entries):
+        orig_write(self, entries)
+        if any(t == "pair_stats" for t, _df, _p in entries):
+            events.append(("pair_stats written", None))
+
+    def persist(self, *a, **k):
+        if inside:
+            persisted.add(id(self))
+        return orig_persist(self, *a, **k)
+
+    def unpersist(self, *a, **k):
+        if id(self) in persisted:
+            events.append(("unpersist", None))
+        return orig_unpersist(self, *a, **k)
+
+    monkeypatch.setattr(DedupArtifacts, "_stage_pair_stats_point", point)
+    monkeypatch.setattr(DedupArtifacts, "_write_segments_one_pass", write)
+    monkeypatch.setattr(SparkDF, "persist", persist)
+    monkeypatch.setattr(SparkDF, "unpersist", unpersist)
+    text = "quick brown fox jumps over the lazy dog pack my box with jugs"
+    st.update(
+        spark.createDataFrame(
+            [(i, f"w{i} w{i} {text} t{i}") for i in range(4)],
+            "doc_id long, text string",
+        )
+    )
+    events.clear()
+    results.clear()
+    # an exact clone: one candidate pair, no shingle crosses the cap
+    st.update(
+        spark.createDataFrame(
+            [(100, f"w0 w0 {text} t0")], "doc_id long, text string"
+        )
+    )
+    monkeypatch.undo()
+
+    kinds = [e for e, _ in events]
+    assert kinds[0] == "point" and len(results) == 1 and results[0] is not None
+    assert "pair_stats written" in kinds and "unpersist" in kinds
+    written = kinds.index("pair_stats written")
+    assert all(
+        i > written for i, e in enumerate(kinds) if e == "unpersist"
+    ), kinds
+    assert int(st._meta["pair_rev"]) == 2
+    assert (0, 100) in {
+        (r.doc_a, r.doc_b)
+        for r in st.verified_pairs(min_jaccard=0.0, min_overlap=1).collect()
+    }
+
+
 # slow lane (r12 budget): the remove/up-flip serve contract is
 # oracle-checked default-lane by test_queries_vs_oracle's
 # q_artifact_remove and q_artifact_fold_remove rows (fold_remove is in

@@ -208,7 +208,7 @@ def test_update_has_no_driver_collect(spark, tmp_path, monkeypatch):
     idx.train(docs)
     idx.add(docs)
 
-    from pyspark.sql import DataFrame as SparkDF
+    SparkDF = type(docs)  # the concrete (classic) DataFrame
 
     def boom(self, *a, **k):
         raise AssertionError("driver-side collect/toPandas in update path")
@@ -711,6 +711,111 @@ def test_update_validates_before_deleting(spark, tmp_path):
     with pytest.raises(ValueError, match="ingest schema mismatch"):
         idx.update(bad)
     assert idx._docs().filter("doc_id = 2").count() == 1  # not deleted
+
+
+def _meta_bytes(idx) -> bytes:
+    import os
+
+    with open(os.path.join(idx.path, "_meta.json"), "rb") as f:
+        return f.read()
+
+
+def test_update_crash_leaves_pre_update_state(spark, tmp_path, monkeypatch):
+    """update() is one commit: a crash while its new rows are staged —
+    after the survivors' v<N> segments were written — leaves the old
+    doc found with its old title and _meta.json byte-identical, and a
+    retry succeeds."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    idx = Index.create(spark, str(tmp_path / "upd_crash"), make_schema("none"))
+    docs = make_docs(spark, range(8))
+    idx.train(docs)
+    idx.add(docs)
+    meta = _meta_bytes(idx)
+
+    real_parquet = DataFrameWriter.parquet
+    written = []
+
+    def crash_on_new_rows(self, path, **kw):
+        if "/seg-" in path:
+            raise RuntimeError("injected crash staging the update's new rows")
+        written.append(path)
+        return real_parquet(self, path, **kw)
+
+    upd = make_docs(spark, [3]).withColumn("title", F.lit("updated"))
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_new_rows)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        idx.update(upd)
+    monkeypatch.undo()
+    assert any("/docs/v1" in p for p in written)  # survivors staged first
+
+    assert _meta_bytes(idx) == meta
+    for reader in (idx, Index.load(spark, idx.path)):
+        top = reader.search(0, VectorQuery("colbert", doc_tokens(3)), k=1, opts=OPTS)
+        row = top.collect()[0]
+        assert (row["doc_id"], row["title"]) == (3, "doc-3")
+        assert reader._docs().count() == 8
+
+    idx.update(upd)
+    row = idx.search(0, VectorQuery("colbert", doc_tokens(3)), k=1, opts=OPTS).collect()[0]
+    assert (row["doc_id"], row["title"]) == (3, "updated")
+    assert idx._docs().count() == 8
+    assert idx._docs().filter("doc_id = 3").count() == 1
+
+
+def test_update_publishes_in_one_flip(spark, tmp_path, monkeypatch):
+    """update() flips _meta.json exactly once: every table's survivors
+    replace its segment list as v<N+1> and the new rows ride the same
+    flip as a seg-* segment."""
+    idx = Index.create(spark, str(tmp_path / "upd_flip"), make_schema("none"))
+    docs = make_docs(spark, range(6))
+    idx.train(docs)
+    idx.add(docs)
+
+    flips = []
+    real_save = Index._save_meta
+
+    def counting_save(self, meta=None):
+        flips.append(meta)
+        return real_save(self, meta)
+
+    monkeypatch.setattr(Index, "_save_meta", counting_save)
+    idx.update(make_docs(spark, [2, 5]).withColumn("title", F.lit("new")))
+    monkeypatch.undo()
+
+    assert len(flips) == 1
+    for table in ("docs", "postings/colbert"):
+        segs = idx._segments(table)
+        assert segs[0] == "v1" and len(segs) == 2 and segs[1].startswith("seg-")
+        assert idx._version(table) == 1
+        assert set(idx._meta["manifests"][table]) == set(segs)
+    titles = {r["doc_id"]: r["title"] for r in idx._docs().collect()}
+    assert titles == {d: ("new" if d in (2, 5) else f"doc-{d}") for d in range(6)}
+    assert idx._postings("colbert").filter("doc_id = 2").count() == (
+        len(idx.get_mapping(0, 2))
+    )
+
+
+def test_mutations_with_nothing_to_do_commit_nothing(spark, tmp_path):
+    """remove() of no ids and update() of a zero-row frame leave
+    _meta.json, the commit sequence, the docs version and the serve
+    state as they were."""
+    idx = Index.create(spark, str(tmp_path / "noop"), make_schema("none"))
+    docs = make_docs(spark, range(6))
+    idx.train(docs)
+    idx.add(docs)
+    assert search_ids(idx, VectorQuery("colbert", doc_tokens(4)))[0] == 4
+    state = idx._serve_slot
+
+    def snapshot():
+        return (_meta_bytes(idx), idx._meta_seq, idx._version("docs"), idx._meta)
+
+    before = snapshot()
+    idx.remove(0, [])
+    assert snapshot() == before
+    idx.update(spark.createDataFrame([], docs.schema))
+    assert snapshot() == before
+    assert idx._serve_state(0, "colbert") is state
 
 
 def test_serve_follows_external_commit(spark, tmp_path):

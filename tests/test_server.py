@@ -95,6 +95,23 @@ def test_add_update_remove_roundtrip(server):
     assert all(r["id"] != 50001 for r in res["results"])
 
 
+def test_empty_mutations_commit_nothing(server):
+    """A remove of no ids and an update of no documents answer ok and
+    leave _meta.json and the commit sequence untouched."""
+    import os
+
+    meta_path = os.path.join(server.index.path, "_meta.json")
+
+    def snapshot():
+        with open(meta_path, "rb") as f:
+            return f.read(), server.index._meta_seq
+
+    before = snapshot()
+    assert _post(server.port, "/v1/Index/remove/0", {"ids": []})["ok"]
+    assert _post(server.port, "/v1/Index/update/0", {"documents": []})["ok"]
+    assert snapshot() == before
+
+
 def test_search_error_shape(server):
     body = _search_body(0)
     body["query"]["type"] = "BOGUS"
