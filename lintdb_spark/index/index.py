@@ -1478,14 +1478,17 @@ class Index(SegmentStore):
         cand_tokens = self._decoded_token_rows(
             field, uniq, normalize=opts.normalize
         ).join(cand_ids, "doc_id")
-        # tuple rows, not a pandas frame: a small Arrow-built frame is
-        # a LocalRelation, the shape only the driver-local path returns
+        # pandas -> Arrow fast path (the tuple-list route serializes
+        # row-by-row via py4j: ~4M floats per 1000-query batch)
         queries_df = self.spark.createDataFrame(
-            [
-                (qid, j, row)
-                for qid, q in qmats.items()
-                for j, row in enumerate(q.astype(np.float64).tolist())
-            ],
+            pd.DataFrame(
+                [
+                    (qid, j, tok)
+                    for qid, q in qmats.items()
+                    for j, tok in enumerate(q.astype(np.float64))
+                ],
+                columns=["qid", "q_id", "qvec"],
+            ),
             "qid long, q_id long, qvec array<double>",
         )
         topk = _scoring.batch_xtr_topk(
@@ -1634,8 +1637,8 @@ class Index(SegmentStore):
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-        # driver-side frames go through pandas -> Arrow (fast path; the
-        # tuple-list route serializes row-by-row via py4j)
+        # probes are a few rows per query: a tuple list is fine here;
+        # the query tokens below go through pandas -> Arrow
         probes_df = self.spark.createDataFrame(
             [(int(q), int(c)) for q, c in self._top_centroids_batch(field, qmats, opts)],
             "qid long, centroid_id long",

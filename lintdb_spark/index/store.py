@@ -5,7 +5,13 @@ A store is a directory of TABLES, each table a list of immutable
 SEGMENT directories recorded in `_meta.json` (a poor-man's Delta log).
 Mutations stage new segment dirs and then flip the meta atomically —
 one rename-atomic JSON write covering all tables at once — so a crash
-anywhere before the flip leaves orphans no reader ever sees. Writers
+anywhere before the flip leaves orphans no reader ever sees. Every
+commit of either store (the Index's add/merge/remove/update/compact,
+the artifact store's batch commits, fold, migration and compaction,
+and both stores' minor compaction) goes through `_commit_segments`:
+it builds the candidate meta on a copy — appends, retired segments,
+rewrites and top-level counters alike — flips it and only then adopts
+it, so no caller writes the live meta before its flip. Writers
 across processes serialize via an O_EXCL lockfile with ownership
 tokens and stale takeover; readers follow external commits by statting
 the meta file per serve call. Each commit also records its segments'
@@ -509,29 +515,42 @@ class SegmentStore:
         staged: list[tuple[str, str]],
         stream_batch: tuple[str, int] | None = None,
         replace: list[tuple[str, str]] | tuple = (),
+        retire: dict[str, list[str]] | None = None,
+        meta: dict | None = None,
     ) -> None:
-        """THE commit point for multi-table mutations: extend every
-        table's segment list and flip _meta.json once. Everything
-        before this call is invisible staging.
+        """THE commit point of both stores: every mutation and every
+        maintenance rewrite builds its candidate meta here, flips
+        _meta.json once and adopts the result. Everything before this
+        call is invisible staging.
 
-        ``replace`` holds staged ``(table, "v<N>")`` rewrites: each
-        replaces its table's whole segment list, manifest map and
-        version before the ``staged`` appends land, in the same flip
-        (update publishes its survivors and its new rows together).
+        ``retire`` maps a table to segments that leave its list and
+        manifest map (a minor-merge group, the flip/tombstone tables a
+        fold or compact absorbed). ``replace`` holds staged
+        ``(table, "v<N>")`` rewrites: each replaces its table's whole
+        segment list, manifest map and version. The ``staged`` appends
+        land after both, in the same flip (update publishes its
+        survivors and its new rows together). ``meta`` holds top-level
+        keys that ride the same flip (counters, revisions, coverage
+        lists); ``stream_batch`` (add's idempotency token) likewise —
+        segments, counters and replay watermark commit together or
+        not at all.
 
-        The new meta is built on a COPY and adopted only after the
-        durable flip succeeds: a failed flip (ENOSPC, fsync error)
-        leaves self._meta equal to disk, so a retry cannot double-
-        commit the failed batch's segments; and in-process readers see
-        the old or the new dict via one atomic assignment, never a
-        per-table partial view. ``stream_batch`` (add's idempotency
-        token) rides in the same flip — segments and replay watermark
-        commit together or not at all."""
+        The candidate is a COPY, adopted only after the durable flip
+        succeeds: a failed flip (ENOSPC, fsync error) leaves self._meta
+        equal to disk, so a retry cannot double-commit, and callers
+        never write the live meta — a lock-free reader sees the old or
+        the new dict via one atomic assignment, never the next
+        commit's counters beside the previous commit's segments."""
         import copy
 
         new_meta = copy.deepcopy(self._meta)
         segs = new_meta.setdefault("segments", {})
         man = new_meta.setdefault("manifests", {})
+        for table, gone in (retire or {}).items():
+            if gone:
+                segs[table] = [s for s in segs[table] if s not in gone]
+                for s in gone:
+                    man.get(table, {}).pop(s, None)
         for table, seg in replace:
             segs[table] = []
             man[table] = {}
@@ -549,6 +568,8 @@ class SegmentStore:
         if stream_batch is not None:
             key, bid = stream_batch
             new_meta.setdefault("stream_batches", {})[key] = int(bid)
+        if meta:
+            new_meta.update(copy.deepcopy(meta))
         self._save_meta(new_meta)
         self._meta = new_meta
 
@@ -1092,7 +1113,11 @@ class SegmentStore:
     #   _minor_reduce       exact per-table reduction applied on merge
     #   _minor_write        the table's batch-segment physical layout
     #   _minor_excluded     segment names referenced elsewhere in meta
+    #   _minor_companion    segments + meta keys riding a merge's flip
     #   _extra_full_compact_due   store-specific debt (e.g. tombstones)
+    # Both compactions publish through _commit_segments: a minor merge
+    # retires its group and stages the merged segment, a full compact
+    # stages one v<N> rewrite per table.
 
     _MINOR_SKIP: tuple = ()
     _TIER_BYTES_SKIP: tuple = ()
@@ -1349,17 +1374,17 @@ class SegmentStore:
         return set()
 
     def _minor_companion(
-        self, table: str, merged: list, seg: str, new_meta: dict
-    ) -> None:
-        """Hook: stage companion segments / meta updates that must
-        ride the SAME flip as a minor merge of ``table`` (e.g. the
-        artifact store's inverted shingle sliver + coverage advance).
-        Runs after the merged segment is written and recorded in
-        ``new_meta`` but before the meta flip — companion writes are
-        staged-and-published like the merge itself, so a crash before
-        the flip leaves only vacuum-collectable orphans. Default:
-        none."""
-        return
+        self, table: str, merged: list, seg: str, meta: dict
+    ) -> tuple[list[tuple[str, str]], dict]:
+        """Hook: companion segments and top-level meta keys that must
+        ride the SAME flip as a minor merge of ``table`` into ``seg``
+        (e.g. the artifact store's inverted shingle sliver + coverage
+        advance). ``meta`` is the top-level meta as this minor_compact
+        call has updated it so far (read-only). Returns ``(staged,
+        meta_updates)``: companion writes are staged like the merge
+        itself, so a crash before the flip leaves only
+        vacuum-collectable orphans. Default: none."""
+        return [], {}
 
     def minor_compact(self, force: bool = False) -> dict:
         """Merge per-batch segments into ONE segment per (table,
@@ -1375,30 +1400,37 @@ class SegmentStore:
         is rewritten at most log_fanout(batches) times between full
         compacts instead of once per count trip.
 
+        Every merge group is retired and its merged segment staged in
+        ONE _commit_segments flip; a merged segment that a cascade
+        merges again within the call is never published (vacuum
+        collects its dir).
+
         Returns {table: number_of_segments_merged}; {} if nothing
         qualified. ``force=True`` merges every level with >= 2
         mergeable segments regardless of the fanout — for explicitly
         managed stores (a stream calling it on its own cadence). Run
         vacuum() afterwards to reclaim the superseded per-batch dirs
         (same grace contract as the full compact)."""
-        import copy
         import uuid
 
         fanout = int(params.ARTIFACT_MINOR_FANOUT)
         backstop = int(params.ARTIFACT_AUTOCOMPACT_SEGMENTS)
         merged: dict[str, int] = {}
-        dropped = 0
+        staged: list[tuple[str, str]] = []
+        retire: dict[str, list[str]] = {}
+        meta: dict = {}
         with self._writer_lock():
-            new_meta = copy.deepcopy(self._meta)
-            segs_map = new_meta.setdefault("segments", {})
-            man_map = new_meta.setdefault("manifests", {})
+            man_map = self._meta.get("manifests", {})
             for table in self._all_tables():
                 if table in self._MINOR_SKIP:
                     continue
                 excluded = self._minor_excluded(table)
-                current = list(segs_map.get(table, []))
-                man = man_map.setdefault(table, {})
-                total = len(current)
+                # companion segments staged earlier in this call (an
+                # inverted sliver) are merge candidates like any other
+                fresh = {s for t, s in staged if t == table}
+                current = self._segments(table) + sorted(fresh)
+                man = man_map.get(table, {})
+                gone = retire.setdefault(table, [])
                 # iterate levels ascending so a merge that fills the
                 # next level can cascade within one call
                 lv = 0
@@ -1413,22 +1445,17 @@ class SegmentStore:
                     # a read could miss: drop them from the list
                     # outright instead of feeding an all-empty group to
                     # the subset read (whose empty-union fallback needs
-                    # a schema a wide table doesn't pin)
+                    # a schema a wide table doesn't pin). Not counted in
+                    # `merged`: a drop is bookkeeping, and reporting it
+                    # as a merge would mask _auto_maintain's
+                    # nothing-was-mergeable backstop fallback
                     empty = [s for s in group if man.get(s) == []]
                     if empty:
-                        # not counted in `merged`: a drop is bookkeeping,
-                        # and reporting it as a merge would mask
-                        # _auto_maintain's nothing-was-mergeable
-                        # backstop fallback
-                        eset = set(empty)
-                        group = [s for s in group if s not in eset]
-                        current = [s for s in current if s not in eset]
-                        for s in empty:
-                            man.pop(s, None)
-                        dropped += len(empty)
-                        total = len(current)
+                        group = [s for s in group if s not in empty]
+                        current = [s for s in current if s not in empty]
+                        gone.extend(empty)
                     if len(group) >= 2 and (
-                        force or len(group) >= fanout or total >= backstop
+                        force or len(group) >= fanout or len(current) >= backstop
                     ):
                         df = self._minor_reduce(
                             table,
@@ -1437,17 +1464,23 @@ class SegmentStore:
                             ),
                         )
                         seg = f"m{lv + 1}-{uuid.uuid4().hex[:12]}"
-                        dst = os.path.join(self.path, table, seg)
-                        self._minor_write(table, df, dst)
-                        current = [
-                            s for s in current if s not in set(group)
-                        ] + [seg]
+                        self._minor_write(
+                            table, df, os.path.join(self.path, table, seg)
+                        )
+                        current = [s for s in current if s not in group] + [seg]
                         for s in group:
-                            man.pop(s, None)
-                        self._record_manifest(new_meta, table, seg, dst)
+                            if s in fresh:
+                                staged.remove((table, s))
+                            else:
+                                gone.append(s)
+                        staged.append((table, seg))
+                        fresh.add(seg)
                         merged[table] = merged.get(table, 0) + len(group)
-                        total = len(current)
-                        self._minor_companion(table, group, seg, new_meta)
+                        extra, up = self._minor_companion(
+                            table, group, seg, {**self._meta, **meta}
+                        )
+                        staged.extend(extra)
+                        meta.update(up)
                     # advance past levels with nothing to do; stop
                     # once no segment sits at or above this level
                     if not any(
@@ -1457,11 +1490,9 @@ class SegmentStore:
                     ):
                         break
                     lv += 1
-                segs_map[table] = current
-            if not merged and not dropped:
-                return {}
-            self._save_meta(new_meta)
-            self._meta = new_meta
+            if not staged and not any(retire.values()):
+                return {}  # nothing merged, nothing dropped
+            self._commit_segments(staged, retire=retire, meta=meta)
         return merged
 
     def _auto_maintain(self) -> dict:

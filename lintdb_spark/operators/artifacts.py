@@ -92,6 +92,7 @@ the argument and see the exact single-corpus behavior.
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 
@@ -504,6 +505,15 @@ class DedupArtifacts(SegmentStore):
             F.xxhash64(shingle_col), F.lit(int(self._meta["shingle_parts"]))
         ).cast("int")
 
+    def _stage_one(
+        self, staged: list, table: str, df: DataFrame, fine: bool = False
+    ) -> None:
+        """Write ``df`` as a fresh seg-* segment of ``table`` and note
+        it in ``staged`` for the commit's _commit_segments call."""
+        seg, p = self._stage_path(table)
+        self._write_segment(table, df, p, fine=fine)
+        staged.append((table, seg))
+
     def _write_segment(
         self, table: str, df: DataFrame, path: str, fine: bool = False
     ) -> None:
@@ -525,8 +535,7 @@ class DedupArtifacts(SegmentStore):
         ``path`` is the LOGICAL segment root; Spark writes through
         fs.spark_write_path (identity locally, a staging dir for
         non-local schemes) and fs.publish uploads staged files —
-        _commit_segments / compact() then manifest the published
-        segment."""
+        _commit_segments then manifests the published segment."""
         logical = path
         path = self.fs.spark_write_path(path)
         if table == "buckets":
@@ -753,11 +762,7 @@ class DedupArtifacts(SegmentStore):
                     [], "shingle string, df long"
                 )
                 staged: list[tuple[str, str]] = []
-
-                def stage(table: str, df: DataFrame) -> None:
-                    seg, p = self._stage_path(table)
-                    self._write_segment(table, df, p)
-                    staged.append((table, seg))
+                stage = functools.partial(self._stage_one, staged)
 
                 try:
                     new_seq = self._stage_pair_stats(
@@ -765,20 +770,16 @@ class DedupArtifacts(SegmentStore):
                     )
                 finally:
                     cand_v.unpersist()
-                new_meta_extra = {
-                    "pair_seq": new_seq,
-                    "pair_unverified": {
-                        **self._meta.get("pair_unverified", {}),
-                        tkey: [],
+                self._commit_segments(
+                    staged,
+                    meta={
+                        "pair_seq": new_seq,
+                        "pair_unverified": {
+                            **self._meta.get("pair_unverified", {}),
+                            tkey: [],
+                        },
                     },
-                }
-                old_vals = {k: self._meta[k] for k in new_meta_extra}
-                self._meta.update(new_meta_extra)
-                try:
-                    self._commit_segments(staged)
-                except BaseException:
-                    self._meta.update(old_vals)
-                    raise
+                )
                 flushed += 1
         return flushed
 
@@ -1018,12 +1019,12 @@ class DedupArtifacts(SegmentStore):
     def _minor_write(self, table, df, path):
         self._write_segment(table, df, path)
 
-    def _minor_companion(self, table, merged, seg, new_meta):
+    def _minor_companion(self, table, merged, seg, meta):
         """Extend shingle_docs coverage at minor-compact time
         (round 12, VERDICT r11 #1): when a group of shingles segments
         merges into an m<L>-* tier segment, build the INVERTED sliver
         (same rows, spart-keyed) for the group members NOT already in
-        shingle_docs_covers, commit it as a shingle_docs segment in
+        shingle_docs_covers, stage it as a shingle_docs segment for
         the same meta flip, and advance covers from the retired
         member names to the merged segment. This keeps the
         flip-commit lookup's uncovered doc-keyed read at ONE FANOUT
@@ -1039,14 +1040,15 @@ class DedupArtifacts(SegmentStore):
         the generic loop merges them at the same fanout, and the full
         compact's v* rewrite retires them wholesale."""
         if table != "shingles" or self._flip_rev < 2:
-            return
-        covers = new_meta.get("shingle_docs_covers")
+            return [], {}
+        covers = meta.get("shingle_docs_covers")
         if covers is None:
             # lockstep-legacy store (pre-covers): shingle_docs already
             # holds every shingles row; nothing to extend
-            return
+            return [], {}
         cset = set(covers)
         uncovered = [s for s in merged if s not in cset]
+        staged = []
         if uncovered:
             raw = self._read_table_segments(
                 "shingles", uncovered, _SHINGLE_SCHEMA
@@ -1061,16 +1063,12 @@ class DedupArtifacts(SegmentStore):
                 "shingle",
                 "doc_id",
             )
-            sseg, dst = self._stage_path("shingle_docs")
-            self._write_segment("shingle_docs", sliver, dst)
-            new_meta.setdefault("segments", {}).setdefault(
-                "shingle_docs", []
-            ).append(sseg)
-            self._record_manifest(new_meta, "shingle_docs", sseg, dst)
+            self._stage_one(staged, "shingle_docs", sliver)
         mset = set(merged)
-        new_meta["shingle_docs_covers"] = [
-            s for s in covers if s not in mset
-        ] + [seg]
+        return staged, {
+            "shingle_docs_covers": [s for s in covers if s not in mset]
+            + [seg]
+        }
 
     def _drop_empty_flip_segments(self, staged):
         """(staged', flip_rows): footer-count the staged flip_docs
@@ -1150,8 +1148,6 @@ class DedupArtifacts(SegmentStore):
         side at all. The row-granular pre-filter achieves the actual
         goal in the regime where it matters, and the estimator backs
         off to the full rewrite where it doesn't."""
-        import copy
-
         with self._writer_lock():
             if not self._segments("flip_docs"):
                 return
@@ -1180,9 +1176,8 @@ class DedupArtifacts(SegmentStore):
                 .cast("bigint")
                 .alias("seq"),
             ]
-            new_meta = copy.deepcopy(self._meta)
-            segs = new_meta.setdefault("segments", {})
-            man = new_meta.setdefault("manifests", {})
+            staged: list[tuple[str, str]] = []
+            replace: list[tuple[str, str]] = []
             if row_scoped:
                 folded = (
                     self._pair_current(
@@ -1191,25 +1186,23 @@ class DedupArtifacts(SegmentStore):
                     .filter(F.col("_touched"))
                     .select(*sel)
                 )
-                seg, dst = self._stage_path("pair_stats")
-                self._write_segment("pair_stats", folded, dst)
-                segs.setdefault("pair_stats", []).append(seg)
-                self._record_manifest(new_meta, "pair_stats", seg, dst)
+                self._stage_one(staged, "pair_stats", folded)
             else:
                 new_v = self._version("pair_stats") + 1
-                dst = self._table_path("pair_stats", new_v)
                 folded = self._pair_current(None).select(*sel)
-                self._write_segment("pair_stats", folded, dst, fine=True)
-                seg = f"v{new_v}"
-                new_meta["versions"]["pair_stats"] = new_v
-                segs["pair_stats"] = [seg]
-                man["pair_stats"] = {}
-                self._record_manifest(new_meta, "pair_stats", seg, dst)
-            segs["flip_docs"] = []
-            man.pop("flip_docs", None)
-            new_meta["flip_rows_live"] = 0
-            self._save_meta(new_meta)
-            self._meta = new_meta
+                self._write_segment(
+                    "pair_stats",
+                    folded,
+                    self._table_path("pair_stats", new_v),
+                    fine=True,
+                )
+                replace.append(("pair_stats", f"v{new_v}"))
+            self._commit_segments(
+                staged,
+                replace=replace,
+                retire={"flip_docs": self._segments("flip_docs")},
+                meta={"flip_rows_live": 0},
+            )
 
     def _staged_rows(self, root: str) -> int:
         """Row count of a freshly staged segment from its parquet
@@ -1404,17 +1397,6 @@ class DedupArtifacts(SegmentStore):
             # ALL parent exchanges — measured +5s on the bench's
             # 2000-doc batch when everything rode one job)
             submit_stage_pass()
-            if self._flip_rev >= 2 and "shingle_docs_covers" not in self._meta:
-                # first new-code batch on a store whose shingle_docs
-                # was maintained in LOCKSTEP (an inverted segment per
-                # commit): record that the inverted table covers
-                # everything committed so far — this batch's shingles
-                # segment lands outside the list, so the flip lookup
-                # reads it doc-keyed until the next compaction folds
-                # it in. Rides the batch's own meta flip.
-                self._meta["shingle_docs_covers"] = list(
-                    self._segments("shingles")
-                )
             # NO inverted shingle_docs segment per batch (round-11
             # probe: staging the inverted copy every commit cost +18%
             # on sf10 drift updates while per-batch coarse segments
@@ -1617,9 +1599,8 @@ class DedupArtifacts(SegmentStore):
 
             tkey = str(int(tenant))
             tstats = dict(self._meta["tenants"].get(tkey, {"n_docs": 0, "nd_shingled": 0}))
-            self._meta.setdefault("flip_rows_live", 0)
             staged, flip_rows = self._drop_empty_flip_segments(staged)
-            new_meta_extra = {
+            meta = {
                 "n_docs": int(self._meta["n_docs"]) + n_new,
                 "nd_shingled": int(self._meta["nd_shingled"]) + nd_batch,
                 "tenants": {
@@ -1632,26 +1613,28 @@ class DedupArtifacts(SegmentStore):
                 # outstanding-flip accounting for the auto-compact
                 # trigger: footer counts of the staged flip segments
                 # (driver-side metadata, no job); compact() resets it
-                "flip_rows_live": int(self._meta["flip_rows_live"])
+                "flip_rows_live": int(self._meta.get("flip_rows_live", 0))
                 + flip_rows,
             }
             if new_seq is not None:
-                new_meta_extra["pair_seq"] = new_seq
+                meta["pair_seq"] = new_seq
             if new_pending is not None:
-                new_meta_extra["pair_unverified"] = {
+                meta["pair_unverified"] = {
                     **self._meta.get("pair_unverified", {}),
                     tkey: new_pending,
                 }
-            # ride the counters in the same atomic flip as the
-            # segments: _commit_segments deep-copies self._meta, so
-            # mutate first and restore on failure
-            old_vals = {k: self._meta[k] for k in new_meta_extra}
-            self._meta.update(new_meta_extra)
-            try:
-                self._commit_segments(staged, stream_batch=idempotency_token)
-            except BaseException:
-                self._meta.update(old_vals)
-                raise
+            if self._flip_rev >= 2 and "shingle_docs_covers" not in self._meta:
+                # first new-code batch on a store whose shingle_docs
+                # was maintained in LOCKSTEP (an inverted segment per
+                # commit): record that the inverted table covers
+                # everything committed so far — this batch's shingles
+                # segment lands outside the list, so the flip lookup
+                # reads it doc-keyed until the next compaction folds
+                # it in
+                meta["shingle_docs_covers"] = list(self._segments("shingles"))
+            self._commit_segments(
+                staged, stream_batch=idempotency_token, meta=meta
+            )
             return {"docs": n_new, "pairs": n_pairs}
         finally:
             # join any in-flight staging writes BEFORE dropping the
@@ -3009,11 +2992,7 @@ class DedupArtifacts(SegmentStore):
             n_crossing = crossing.count()
 
             staged: list[tuple[str, str]] = []
-
-            def stage(table: str, df: DataFrame) -> None:
-                seg, p = self._stage_path(table)
-                self._write_segment(table, df, p)
-                staged.append((table, seg))
+            stage = functools.partial(self._stage_one, staged)
 
             stage(
                 "removed_ids",
@@ -3065,9 +3044,8 @@ class DedupArtifacts(SegmentStore):
                     tkey, {"n_docs": 0, "nd_shingled": 0}
                 )
             )
-            self._meta.setdefault("flip_rows_live", 0)
             staged, flip_rows = self._drop_empty_flip_segments(staged)
-            new_meta_extra = {
+            meta = {
                 "n_docs": int(self._meta["n_docs"]) - n_rm,
                 "nd_shingled": int(self._meta["nd_shingled"]) - nd_rem,
                 "tenants": {
@@ -3077,18 +3055,12 @@ class DedupArtifacts(SegmentStore):
                         "nd_shingled": int(tstats["nd_shingled"]) - nd_rem,
                     },
                 },
-                "flip_rows_live": int(self._meta["flip_rows_live"])
+                "flip_rows_live": int(self._meta.get("flip_rows_live", 0))
                 + flip_rows,
             }
             if new_seq is not None:
-                new_meta_extra["pair_seq"] = new_seq
-            old_vals = {k: self._meta[k] for k in new_meta_extra}
-            self._meta.update(new_meta_extra)
-            try:
-                self._commit_segments(staged)
-            except BaseException:
-                self._meta.update(old_vals)
-                raise
+                meta["pair_seq"] = new_seq
+            self._commit_segments(staged, meta=meta)
             return {"docs": n_rm}
         finally:
             rem_sh.unpersist()
@@ -3291,8 +3263,6 @@ class DedupArtifacts(SegmentStore):
         partitioned/sorted for pruned incremental joins), then bump
         schema_rev in the same atomic flip. Idempotent; further
         updates use the batch-proportional path."""
-        import copy
-
         with self._writer_lock():
             if self.schema_rev >= 2:
                 return
@@ -3321,9 +3291,7 @@ class DedupArtifacts(SegmentStore):
                     self._dpart_col(F.col("doc_id")).alias("dpart"),
                     "doc_id",
                 )
-                seg, p = self._stage_path("doc_ids")
-                self._write_segment("doc_ids", ids, p, fine=True)
-                staged.append(("doc_ids", seg))
+                self._stage_one(staged, "doc_ids", ids, fine=True)
             if self._segments("signatures"):
                 sig = self._read_t("signatures", self._sig_schema())
                 b = dedup.lsh_buckets_wide(
@@ -3338,9 +3306,7 @@ class DedupArtifacts(SegmentStore):
                     "bucket",
                     "doc_id",
                 )
-                seg, p = self._stage_path("buckets")
-                self._write_segment("buckets", b, p, fine=True)
-                staged.append(("buckets", seg))
+                self._stage_one(staged, "buckets", b, fine=True)
             # pair_stats backfill: ONE full verify at the migration
             # snapshot (the cost the incremental path then never pays
             # again); legacy stores are single-tenant — everything is
@@ -3370,9 +3336,7 @@ class DedupArtifacts(SegmentStore):
                     "jaccard",
                     F.lit(pair_seq).cast("bigint").alias("seq"),
                 )
-                seg, p = self._stage_path("pair_stats")
-                self._write_segment("pair_stats", rows, p)
-                staged.append(("pair_stats", seg))
+                self._stage_one(staged, "pair_stats", rows)
                 # pair-endpoint registry for the flip restriction:
                 # cand_pairs endpoints ⊇ the backfilled rows' endpoints
                 pd = (
@@ -3383,9 +3347,7 @@ class DedupArtifacts(SegmentStore):
                     )
                     .distinct()
                 )
-                seg, p = self._stage_path("pair_docs")
-                self._write_segment("pair_docs", pd, p)
-                staged.append(("pair_docs", seg))
+                self._stage_one(staged, "pair_docs", pd)
             if self._segments("shingles"):
                 sd = self._read_t("shingles", _SHINGLE_SCHEMA).select(
                     "tenant",
@@ -3393,31 +3355,22 @@ class DedupArtifacts(SegmentStore):
                     "shingle",
                     "doc_id",
                 )
-                seg, p = self._stage_path("shingle_docs")
-                self._write_segment("shingle_docs", sd, p, fine=True)
-                staged.append(("shingle_docs", seg))
-            new_meta = copy.deepcopy(self._meta)
-            segs = new_meta.setdefault("segments", {})
-            new_meta.setdefault("manifests", {})
-            for table, seg in staged:
-                segs.setdefault(table, []).append(seg)
-                self._record_manifest(
-                    new_meta, table, seg, os.path.join(self.path, table, seg)
-                )
-            new_meta["schema_rev"] = 2
-            new_meta["pair_rev"] = pair_rev
-            new_meta["pair_seq"] = pair_seq
-            new_meta["pair_stats_live"] = True
+                self._stage_one(staged, "shingle_docs", sd, fine=True)
             # the inverted table + endpoint registry above are complete
             # as of this snapshot — it covers every shingles segment
             # committed so far; later batch commits land outside the
             # covers list and are read doc-keyed until compaction
-            new_meta["flip_rev"] = 2
-            new_meta["shingle_docs_covers"] = list(
-                segs.get("shingles", [])
+            self._commit_segments(
+                staged,
+                meta={
+                    "schema_rev": 2,
+                    "pair_rev": pair_rev,
+                    "pair_seq": pair_seq,
+                    "pair_stats_live": True,
+                    "flip_rev": 2,
+                    "shingle_docs_covers": list(self._segments("shingles")),
+                },
             )
-            self._save_meta(new_meta)
-            self._meta = new_meta
 
     def compact(self) -> None:
         """Consolidate every table's per-batch segments into ONE
@@ -3434,8 +3387,6 @@ class DedupArtifacts(SegmentStore):
         Same stage-then-flip protocol as Index.compact: readers of the
         old list are untouched, a crash before the flip changes
         nothing; run vacuum() afterwards to reclaim superseded dirs."""
-        import copy
-
         with self._writer_lock():
             # deferred verifies must land first: the pending list
             # references cand_pairs segment names this rewrite retires,
@@ -3562,60 +3513,51 @@ class DedupArtifacts(SegmentStore):
                 "shingle_docs": upgrade_ok and bool(self._segments("shingles")),
                 "pair_docs": upgrade_ok and bool(self._segments("cand_pairs")),
             }
-            new_meta = copy.deepcopy(self._meta)
-            segs = new_meta.setdefault("segments", {})
-            man = new_meta.setdefault("manifests", {})
             # the ~10 per-table rewrites are independent until the
             # meta flip — run them through the same small pool as
             # batch staging (round 12): on a cluster the rewrites'
             # shuffles/IO overlap, locally the driver-side job
             # latency does. Version numbers and meta/manifest updates
             # stay sequential (the pool does writes only).
-            jobs = []
+            replace, writes = [], []
             for table, df in writers.items():
                 if not self._segments(table) and not force.get(table, False):
                     continue
                 if table in force and not upgrade_ok:
                     continue
                 new_v = self._version(table) + 1
-                jobs.append((table, df, new_v, self._table_path(table, new_v)))
-            self._run_writes(
-                [
-                    (
-                        lambda t=table, d=df, p=dst: self._write_segment(
-                            t, d, p, fine=True
-                        )
+                replace.append((table, f"v{new_v}"))
+                writes.append(
+                    lambda t=table, d=df, p=self._table_path(table, new_v): (
+                        self._write_segment(t, d, p, fine=True)
                     )
-                    for table, df, _v, dst in jobs
-                ]
-            )
-            for table, _df, new_v, dst in jobs:
-                seg = f"v{new_v}"
-                new_meta["versions"][table] = new_v
-                segs[table] = [seg]
-                man[table] = {}
-                self._record_manifest(new_meta, table, seg, dst)
+                )
+            self._run_writes(writes)
+            # every outstanding flip was folded into the pair rows
+            meta: dict = {"flip_rows_live": 0}
             if upgrade_ok:
-                new_meta["flip_rev"] = 2
+                meta["flip_rev"] = 2
                 # the inverted rewrite above reflects exactly the
                 # post-compaction shingles segment list — batch
                 # commits after this flip land outside it and are
                 # read doc-keyed until the next compaction
-                new_meta["shingle_docs_covers"] = list(
-                    segs.get("shingles", [])
+                meta["shingle_docs_covers"] = (
+                    [seg for t, seg in replace if t == "shingles"]
+                    or list(self._segments("shingles"))
                 )
             # the pair fold above absorbed every outstanding flip
-            # delta, and the rewrites purged tombstoned docs — drop
+            # delta, and the rewrites purged tombstoned docs — retire
             # both auxiliary tables' segments in the same flip (their
             # dirs become vacuum-collectable orphans)
-            for aux in ("flip_docs", "removed_ids"):
-                if self._segments(aux):
-                    segs[aux] = []
-                    man.pop(aux, None)
-            # every outstanding flip was folded into the pair rows
-            new_meta["flip_rows_live"] = 0
-            self._save_meta(new_meta)
-            self._meta = new_meta
+            self._commit_segments(
+                [],
+                replace=replace,
+                retire={
+                    aux: self._segments(aux)
+                    for aux in ("flip_docs", "removed_ids")
+                },
+                meta=meta,
+            )
 
     # ---------------- read side (exact vs from-scratch) ----------------
 

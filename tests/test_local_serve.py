@@ -74,7 +74,10 @@ def idx(request, spark, tmp_path_factory):
 
 
 def is_local(df) -> bool:
-    return "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+    # the local path returns a frame built from one Arrow table: its
+    # analyzed plan IS a LocalRelation. A Spark plan may contain one
+    # below its root (any small pandas/Arrow-built frame it joins).
+    return df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
 
 
 def rows(df):
