@@ -45,11 +45,11 @@ Design-for-scale notes:
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
 import threading
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -67,6 +67,7 @@ from lintdb_spark.index.query import (
     SearchOptions,
     TermQuery,
     VectorQuery,
+    check_k,
 )
 from lintdb_spark.index.quantizers import (
     Binarizer,
@@ -172,13 +173,20 @@ def _local_term_ok(data_type, value) -> bool:
     return not isinstance(value, int) or -(2**63) <= value < 2**63
 
 
+class _Snapshot(NamedTuple):
+    """One committed generation of an Index: its meta dict and the
+    centroids and quantizers published with it. Never changed after
+    adoption; a reader that captures one reads one generation."""
+
+    meta: dict
+    centroids: dict[str, np.ndarray]
+    quantizers: dict[str, object]
+
+
 class Index(SegmentStore):
     def __init__(self, spark: SparkSession, path: str, schema: Schema):
-        super().__init__(spark, path)  # segment-store core (meta, locks)
         self.schema = schema
-        self.centroids: dict[str, np.ndarray] = {}
-        self.quantizers: dict[str, object] = {}
-        self._meta = {"versions": {}, "trained": False}
+        super().__init__(spark, path, {"versions": {}, "trained": False}, ({}, {}))
         # per-call broadcast tracking: a THREAD-local list, non-None
         # only while that thread is inside a @_tags_broadcasts serve
         # entry point (see _bc); thread-local because the HTTP server
@@ -201,10 +209,17 @@ class Index(SegmentStore):
             f"postings/{f.name}" for f in self.schema.colbert_fields()
         )
 
-    def _on_meta_reloaded(self) -> None:
-        # an external commit may have RE-TRAINED (new centroid
-        # matrices / quantizer params), not just added segments
-        self._load_trained_sidecars()
+    # the adopted snapshot, read whole: the meta dict is the token every
+    # serve cache keys on, and the trained state is the one published
+    # with it
+    _meta = property(lambda self: self._snap.meta)
+    centroids = property(lambda self: self._snap.centroids)
+    quantizers = property(lambda self: self._snap.quantizers)
+
+    def _adopt(self, meta: dict, stat, sidecars=None) -> None:
+        self._meta_stat = stat
+        c, q = (self.centroids, self.quantizers) if sidecars is None else sidecars
+        self._snap = _Snapshot(meta, c, q)
 
     def _bc(self, obj):
         """Broadcast ``obj``, registering the handle with the current
@@ -226,7 +241,7 @@ class Index(SegmentStore):
         quantizers (lintdb/index.cpp:60-74)."""
         idx = cls(spark, path, schema)
         idx.fs.makedirs(path, exist_ok=False)
-        idx._save_sidecars()
+        idx._save_sidecars({}, {}, False)
         return idx
 
     @classmethod
@@ -240,24 +255,14 @@ class Index(SegmentStore):
         )
         idx = cls(spark, path, schema)
         idx._storefs = fs  # reuse (shares the staged-FS cache dir)
-        # stat BEFORE read (see DedupArtifacts.load): read-then-stat
-        # could pair stale meta bytes with a concurrent commit's
-        # identity, making the staleness check skip the reload and the
-        # CAS meta flip silently erase that commit
-        idx._meta_stat = idx._stat_meta()
-        idx._meta = json.loads(fs.open_read(os.path.join(path, "_meta.json")))
-        idx._normalize_meta()
-        idx._load_trained_sidecars()
+        idx._load_meta(idx._stat_meta())
         return idx
 
-    def _normalize_meta(self, meta: dict | None = None) -> None:
+    def _normalize_meta(self, meta: dict) -> None:
         # normalize once per (re)load: _version() indexes
         # _meta['versions'] directly, so a legacy add-only meta
         # without the key would load fine but KeyError on the first
         # mutation. super() also decodes the on-disk manifest coding.
-        # Operates on `meta` (may be a not-yet-published dict from the
-        # staleness refresh — see SegmentStore._normalize_meta).
-        meta = self._meta if meta is None else meta
         super()._normalize_meta(meta)
         if "segments" not in meta:
             # pre-segment layout: each table's live data is its v<N>
@@ -276,11 +281,11 @@ class Index(SegmentStore):
                 )
             }
 
-    def _load_trained_sidecars(self) -> None:
-        """(Re)load centroids + quantizers from disk — shared by
-        load() and the cross-process staleness refresh (an external
-        RE-TRAIN commit changes these, not just the segment lists;
-        scoring new postings against old centroid matrices would
+    def _on_meta_reloaded(self, meta: dict):
+        """Centroids + quantizers from disk, adopted with the loaded
+        meta — by load() and the cross-process staleness refresh (an
+        external RE-TRAIN commit changes these, not just the segment
+        lists; scoring new postings against old centroid matrices would
         return garbage or IndexError)."""
         # rebuilt from SCRATCH each (re)load: an external commit that
         # deleted or renamed a field's sidecar must drop that field's
@@ -302,31 +307,23 @@ class Index(SegmentStore):
                 new_q[fld.name] = quantizer_from_json(
                     self.fs.open_read(qpath).decode()
                 )
-        # swap via two reference assignments AFTER every file read
-        # succeeded: a concurrent search sees either the old dicts or
-        # the new ones, never a half-reloaded dict (a search reading
-        # centroids and quantizers across the swap boundary can still
-        # mix generations for one request — the window is two adjacent
-        # attribute reads; callers needing strict isolation should
-        # serve from a per-request Index.load)
-        self.centroids = new_c
-        self.quantizers = new_q
+        return new_c, new_q
 
     def copy_trained(self, path: str) -> "Index":
         """A3: clone trained state (centroids/quantizers) into a fresh
         writable index (index.cpp:76-90)."""
         idx = Index.create(self.spark, path, self.schema)
-        idx.centroids = dict(self.centroids)
-        idx.quantizers = dict(self.quantizers)
-        idx._meta["trained"] = self._meta["trained"]
-        idx._save_sidecars()
+        idx._save_sidecars(
+            dict(self.centroids), dict(self.quantizers), self._meta["trained"]
+        )
         return idx
 
-    def _save_sidecars(self) -> None:
-        """A9 save(): schema + meta + centroids + quantizer params
-        (index.cpp:317-357). Heavy (rewrites centroid matrices) — used
-        at create/train/set-quantizer time; the segment-commit hot path
-        uses the meta-only _save_meta."""
+    def _save_sidecars(self, centroids: dict, quantizers: dict, trained: bool) -> None:
+        """A9 save(): schema + centroids + quantizer params
+        (index.cpp:317-357), then ONE flip publishes ``trained`` and
+        adopts the new dicts with its meta — until then searches score
+        with the adopted snapshot's. Heavy (rewrites centroid
+        matrices): create/train/set-quantizer time only."""
         import io
 
         self.fs.write_atomic(
@@ -341,7 +338,7 @@ class Index(SegmentStore):
         # reload must already be durable when the flip lands (flipping
         # first let a racing reader load OLD or torn centroid files and
         # pin them until the next commit)
-        for name, C in self.centroids.items():
+        for name, C in centroids.items():
             buf = io.BytesIO()
             pd.DataFrame(
                 {"centroid_id": np.arange(len(C)), "vec": list(C)}
@@ -350,12 +347,14 @@ class Index(SegmentStore):
                 os.path.join(self.path, "centroids", f"{name}.parquet"),
                 buf.getvalue(),
             )
-        for name, q in self.quantizers.items():
+        for name, q in quantizers.items():
             self.fs.write_atomic(
                 os.path.join(self.path, "quantizers", f"{name}.json"),
                 quantizer_to_json(q).encode(),
             )
-        self._save_meta()
+        self._commit_segments(
+            [], meta={"trained": trained}, sidecars=(centroids, quantizers)
+        )
 
     # ---------------- table paths / segments ----------------
 
@@ -397,32 +396,19 @@ class Index(SegmentStore):
         )
         self.fs.publish(path)
 
-    def _docs(self) -> DataFrame:
-        return self._read("docs", self.schema.doc_spark_schema())
+    # the table readers open the snapshot ``meta`` a read captured
+    # (default: the live meta, for writers), typed by _minor_schema
 
-    def _postings(self, field: str) -> DataFrame:
-        return self._read(
-            f"postings/{field}",
-            T.StructType(
-                [
-                    T.StructField("tenant", T.LongType()),
-                    T.StructField("centroid_id", T.LongType()),
-                    T.StructField("doc_id", T.LongType()),
-                ]
-            ),
-        )
+    def _docs(self, meta: dict | None = None) -> DataFrame:
+        return self._read("docs", self._minor_schema("docs"), meta)
 
-    def _text_postings(self, field: str) -> DataFrame:
-        return self._read(
-            f"postings_text/{field}",
-            T.StructType(
-                [
-                    T.StructField("tenant", T.LongType()),
-                    T.StructField("token", T.StringType()),
-                    T.StructField("doc_id", T.LongType()),
-                ]
-            ),
-        )
+    def _postings(self, field: str, meta: dict | None = None) -> DataFrame:
+        t = f"postings/{field}"
+        return self._read(t, self._minor_schema(t), meta)
+
+    def _text_postings(self, field: str, meta: dict | None = None) -> DataFrame:
+        t = f"postings_text/{field}"
+        return self._read(t, self._minor_schema(t), meta)
 
     # ---------------- train (A4) ----------------
 
@@ -433,10 +419,9 @@ class Index(SegmentStore):
         it serializes via the writer lock like every other mutator — a
         retrain racing a cross-process add must not lose the add's
         _meta.json update. The heavy k-means runs OUTSIDE the lock
-        into locals; the lock covers only the install + sidecar
-        commit (lock acquisition re-syncs meta from disk, which can
-        rebuild self.centroids from sidecars — training into locals
-        keeps that refresh from clobbering the new matrices)."""
+        into locals; the lock covers only the sidecar commit, which
+        merges them into copies of the trained state the (re-synced)
+        meta was adopted with."""
         new_c: dict[str, np.ndarray] = {}
         new_q: dict[str, object] = {}
         for fld in self.schema.colbert_fields():
@@ -474,18 +459,19 @@ class Index(SegmentStore):
             else:
                 new_q[fld.name] = IdentityQuantizer(fld.parameters.dimensions)
         with self._writer_lock():
-            self.centroids.update(new_c)
-            self.quantizers.update(new_q)
-            self._meta["trained"] = True
-            self._save_sidecars()
+            self._save_sidecars(
+                {**self.centroids, **new_c}, {**self.quantizers, **new_q}, True
+            )
 
     def set_coarse_quantizer(self, field: str, centroids: np.ndarray) -> None:
         """A10: inject externally trained centroids (index.cpp:454-479).
         Lock-serialized for the same reason as train()."""
         with self._writer_lock():
-            self.centroids[field] = np.asarray(centroids, dtype=np.float32)
-            self._meta["trained"] = True
-            self._save_sidecars()
+            self._save_sidecars(
+                {**self.centroids, field: np.asarray(centroids, dtype=np.float32)},
+                dict(self.quantizers),
+                True,
+            )
 
     # ---------------- add / remove / update / merge (A5-A8) ----------------
 
@@ -829,9 +815,12 @@ class Index(SegmentStore):
 
     # ---------------- search (C1-C9, D1-D8) ----------------
 
-    def _postings_serve(self, field: str, tenant: int) -> DataFrame:
+    def _postings_serve(
+        self, field: str, tenant: int, meta: dict | None = None
+    ) -> DataFrame:
         """Serve-side postings slice (centroid_id, doc_id) for one
-        tenant, PERSISTED and keyed on the committed snapshot — the
+        tenant of the snapshot ``meta`` (default: the live meta),
+        PERSISTED and keyed on that meta's identity — the
         Spark analogue of the reference keeping posting lists hot in
         RocksDB's block cache (RocksdbInvertedList reads hit RAM after
         first touch). Re-reading the partitioned parquet per serve
@@ -849,7 +838,7 @@ class Index(SegmentStore):
         LRU-capped (_POSTINGS_CACHE_MAX slots) so a server fielding
         thousands of tenants doesn't accrete unbounded persisted
         lineage; any commit (local or external via the staleness
-        refresh) bumps _meta_seq and the next serve rebuilds.
+        refresh) adopts a new meta, and the next serve rebuilds.
 
         Thread safety: the multi-threaded server shares one Index, so
         lookup/insert/evict run under a lock — without it two threads
@@ -865,14 +854,14 @@ class Index(SegmentStore):
 
                 cache = self._postings_serve_cache = OrderedDict()
             key = (field, int(tenant))
-            seq = getattr(self, "_meta_seq", 0)
+            meta = meta or self._meta
             slot = cache.get(key)
-            if slot is not None and slot[0] == seq:
+            if slot is not None and slot[0] is meta:
                 cache.move_to_end(key)
                 return slot[1]
             n_parts = self.spark.sparkContext.defaultParallelism
             df = (
-                self._postings(field)
+                self._postings(field, meta)
                 .filter(F.col("tenant") == int(tenant))
                 .select("centroid_id", "doc_id")
                 .repartition(n_parts, "centroid_id")
@@ -884,7 +873,7 @@ class Index(SegmentStore):
                     slot[1].unpersist(blocking=False)
                 except Exception:  # noqa: BLE001 — best-effort
                     pass
-            cache[key] = (seq, df)
+            cache[key] = (meta, df)
             cache.move_to_end(key)
             while len(cache) > _POSTINGS_CACHE_MAX:
                 _, old = cache.popitem(last=False)
@@ -894,32 +883,23 @@ class Index(SegmentStore):
                     pass
             return df
 
-    def _top_centroids(self, field: str, qtok: np.ndarray, opts: SearchOptions) -> list[int]:
+    def _top_centroids(
+        self, field: str, qtok: np.ndarray, opts: SearchOptions, snap=None
+    ) -> list[int]:
         """C6/C7 KnnNearestCentroids (KnnNearestCentroids.cpp:38-110):
         each token nominates its top k_top_centroids; a centroid's score
         is the max over ONLY those nominations (a score outside a
         token's top-k never contributes); non-positive scores dropped;
-        top n_probe survive. Delegates to the batched implementation so
-        single-query and batch serve can never drift."""
-        return [c for _, c in self._top_centroids_batch(field, {0: qtok}, opts)]
+        top n_probe survive, over ``snap``'s centroids (default: the
+        adopted snapshot's) by kernels.top_centroids, as batches do."""
+        C = (snap or self._snap).centroids[field].astype(np.float64)
+        probed = kernels.top_centroids(C, {0: qtok}, opts.k_top_centroids, opts.n_probe)
+        return [c for _, c in probed]
 
-    def _top_centroids_batch(
-        self, field: str, qmats: dict[int, np.ndarray], opts: SearchOptions
-    ) -> list[tuple[int, int]]:
-        """Probe selection for a WHOLE query batch — returns [(qid,
-        centroid_id), ...] in per-query rank order (kernels.top_centroids
-        over this field's centroid matrix)."""
-        return kernels.top_centroids(
-            self.centroids[field].astype(np.float64),
-            qmats,
-            opts.k_top_centroids,
-            opts.n_probe,
-        )
-
-    def _plaid_udf(self, field: str, qtok: np.ndarray, threshold: float):
+    def _plaid_udf(self, C: np.ndarray, qtok: np.ndarray, threshold: float):
         """D3/D4 codes-only stage-1 scorer over the doc's codes column
-        (kernels.plaid_scores)."""
-        bc = self._bc(qtok.astype(np.float32) @ self.centroids[field].T)
+        (kernels.plaid_scores) against centroid matrix ``C``."""
+        bc = self._bc(qtok.astype(np.float32) @ C.T)
         thr = float(threshold)
 
         @F.pandas_udf(T.DoubleType())
@@ -932,15 +912,15 @@ class Index(SegmentStore):
 
         return plaid
 
-    def _stage2_udf(self, field: str, qtok: np.ndarray, normalize: bool, use_adc: bool):
+    def _stage2_udf(
+        self, C: np.ndarray, quant, qtok: np.ndarray, normalize: bool, use_adc: bool
+    ):
         """D6/D11 stage-2 MaxSim over (codes, residuals, num_tokens):
         residual decode + MaxSim (kernels.maxsim), or PQ ADC lookup
         tables (kernels.adc_maxsim) — the working version of the
         reference's vestigial InvertedListScanner + PQDistanceTables
         path, stage-2 work O(n_q*m) instead of O(n_q*dim) per doc
         token. Both broadcast tiny per-query matrices only."""
-        C = self.centroids[field]
-        quant = self.quantizers[field]
         Q = np.asarray(qtok, dtype=np.float32)
         bc = self._bc((Q @ C.T, quant.inner_prod_tables(Q)) if use_adc else (Q, C))
 
@@ -984,7 +964,7 @@ class Index(SegmentStore):
 
         return analyze_standard_py(text)
 
-    def _match_scores(self, tenant: int, mq: MatchQuery) -> DataFrame:
+    def _match_scores(self, tenant: int, mq: MatchQuery, meta: dict) -> DataFrame:
         """(doc_id, mscore). 'any' scores distinct query tokens matched
         per doc; 'all' additionally keeps only docs matching every
         token; 'tf' scores the summed term frequency of matched tokens
@@ -993,7 +973,7 @@ class Index(SegmentStore):
         inverted-index lookup: filter by tenant partition + token IN
         (...) predicate, then one aggregate per doc."""
         toks = sorted(set(self._analyze_text(mq.text)))
-        p = self._text_postings(mq.field).filter(
+        p = self._text_postings(mq.field, meta).filter(
             (F.col("tenant") == tenant) & F.col("token").isin(toks)
         )
         if mq.mode == "tf":
@@ -1039,8 +1019,11 @@ class Index(SegmentStore):
             return out
         return []
 
-    def _stage1(self, node, tenant: int, docs: DataFrame, opts: SearchOptions) -> DataFrame:
-        """Compile a query-tree node into a stage-1 (doc_id, s1) frame —
+    def _stage1(
+        self, node, tenant: int, docs: DataFrame, opts: SearchOptions, snap: _Snapshot
+    ) -> DataFrame:
+        """Compile a query-tree node into a stage-1 (doc_id, s1) frame
+        over the snapshot ``snap`` (``docs`` is opened from it) —
         the DataFrame analogue of the reference's DocIterator tree
         (QueryNode.cpp:15-121) with SUM score combination
         (NaryScoringMethod default, scoring_methods.cpp:60-97):
@@ -1060,25 +1043,27 @@ class Index(SegmentStore):
                 "doc_id", F.lit(1.0).alias("s1")
             )
         if isinstance(node, MatchQuery):
-            return self._match_scores(tenant, node).select(
+            return self._match_scores(tenant, node, snap.meta).select(
                 "doc_id", F.col("mscore").cast("double").alias("s1")
             )
         if isinstance(node, VectorQuery):
             qtok = np.asarray(node.query_tokens, dtype=np.float32)
-            probes = self._top_centroids(node.field, qtok, opts)
+            probes = self._top_centroids(node.field, qtok, opts, snap)
             cand_ids = (
-                self._postings_serve(node.field, tenant)
+                self._postings_serve(node.field, tenant, snap.meta)
                 .filter(F.col("centroid_id").isin(probes))
                 .select("doc_id")
                 .distinct()
             )
-            plaid = self._plaid_udf(node.field, qtok, opts.centroid_score_threshold)
+            plaid = self._plaid_udf(
+                snap.centroids[node.field], qtok, opts.centroid_score_threshold
+            )
             return (
                 docs.join(cand_ids, "doc_id")
                 .select("doc_id", plaid(F.col(f"{node.field}__codes")).alias("s1"))
             )
         if isinstance(node, AndQuery):
-            frames = [self._stage1(c, tenant, docs, opts) for c in node.children]
+            frames = [self._stage1(c, tenant, docs, opts, snap) for c in node.children]
             out = frames[0]
             for i, f2 in enumerate(frames[1:], 1):
                 out = out.join(
@@ -1086,7 +1071,7 @@ class Index(SegmentStore):
                 ).withColumn("s1", F.col("s1") + F.col(f"_s{i}")).drop(f"_s{i}")
             return out
         if isinstance(node, OrQuery):
-            frames = [self._stage1(c, tenant, docs, opts) for c in node.children]
+            frames = [self._stage1(c, tenant, docs, opts, snap) for c in node.children]
             out = frames[0]
             for f2 in frames[1:]:
                 out = out.unionByName(f2)
@@ -1120,9 +1105,12 @@ class Index(SegmentStore):
         fits the broadcast threshold (force_cogroup off) is scored in
         the driver from the serve state — no Spark job; the returned
         frame is a LocalRelation over the ranked rows. Every other tree
-        compiles to the Spark plan below."""
+        compiles to the Spark plan below. Either path reads ONE
+        snapshot, captured once: every table it opens and the trained
+        state it scores with come from the same commit."""
         self._refresh_meta_if_stale()
         opts = opts or SearchOptions()
+        check_k(k)
         if opts.scoring_method == "xtr":
             if not isinstance(query, VectorQuery):
                 raise NotImplementedError(
@@ -1133,12 +1121,13 @@ class Index(SegmentStore):
             )
         if opts.scoring_method != "plaid":
             raise ValueError(f"unknown scoring_method: {opts.scoring_method!r}")
-        local = self._local_search(tenant, query, k, opts)
+        snap = self._snap
+        local = self._local_search(tenant, query, k, opts, snap)
         if local is not None:
             return local
-        docs = self._docs().filter(F.col("tenant") == tenant)
+        docs = self._docs(snap.meta).filter(F.col("tenant") == tenant)
         vecs = self._vector_nodes(query)
-        stage1 = self._stage1(query, tenant, docs, opts)
+        stage1 = self._stage1(query, tenant, docs, opts, snap)
         log = logging.getLogger("lintdb_spark.index").info
 
         if opts.expected_id >= 0:
@@ -1174,11 +1163,13 @@ class Index(SegmentStore):
             )
         out = survivors
         for i, vec in enumerate(vecs):
+            quant = snap.quantizers[vec.field]
             maxsim = self._stage2_udf(
-                vec.field,
+                snap.centroids[vec.field],
+                quant,
                 vec.query_tokens,
                 opts.normalize,
-                self._use_adc(self.quantizers[vec.field], opts),
+                self._use_adc(quant, opts),
             )
             out = out.withColumn(
                 f"_ms{i}",
@@ -1196,10 +1187,12 @@ class Index(SegmentStore):
         )
         return self._with_metadata(out, k)
 
-    def _local_search(self, tenant: int, query, k: int, opts: SearchOptions):
-        """The driver-local path of search(): the result frame when the
-        tree is a bare VectorQuery or an AND of TermQuery nodes and one
-        VectorQuery and the tenant's serve state is loaded (size
+    def _local_search(
+        self, tenant: int, query, k: int, opts: SearchOptions, snap: _Snapshot
+    ):
+        """The driver-local path of search() over ``snap``: the result
+        frame when the tree is a bare VectorQuery or an AND of TermQuery
+        nodes and one VectorQuery and the tenant's serve state is loaded (size
         estimate within the broadcast threshold, force_cogroup off);
         None sends the tree to the Spark plan. TERM nodes qualify only
         when their value compares exactly like Spark's equality on the
@@ -1214,7 +1207,7 @@ class Index(SegmentStore):
         if len(vecs) != 1:
             return None
         vec = vecs[0]
-        if vec.field not in self.centroids or vec.field not in self.quantizers:
+        if vec.field not in snap.centroids or vec.field not in snap.quantizers:
             return None
         types = {f.name: f.data_type for f in self.schema.scalar_fields()}
         for c in children:
@@ -1222,10 +1215,10 @@ class Index(SegmentStore):
                 isinstance(c, TermQuery) and _local_term_ok(types.get(c.field), c.value)
             ):
                 return None
-        state = self._local_state(tenant, vec.field)
+        state = self._local_state(tenant, vec.field, snap)
         if state is None:
             return None
-        use_adc = self._use_adc(self.quantizers[vec.field], opts)
+        use_adc = self._use_adc(state.quant, opts)
         stored = self._stored_fields()
         table = serve.local_search(
             state, children, vec, k, opts, use_adc, stored,
@@ -1240,13 +1233,16 @@ class Index(SegmentStore):
             ),
         )
 
-    def _local_state(self, tenant: int, field: str) -> serve.ServeState | None:
-        """The serve state the point search and the broadcast batch
-        path score from: loaded, its size estimate within the broadcast
-        threshold, and ``force_cogroup`` off. None otherwise."""
+    def _local_state(
+        self, tenant: int, field: str, snap: _Snapshot
+    ) -> serve.ServeState | None:
+        """The serve state of ``snap`` the point search and the
+        broadcast batch path score from: loaded, its size estimate
+        within the broadcast threshold, and ``force_cogroup`` off. None
+        otherwise."""
         if getattr(self, "force_cogroup", False):
             return None
-        state = self._serve_state(tenant, field)
+        state = self._serve_state(tenant, field, snap)
         return state if state.loaded and state.est_bytes <= self._bcast_max() else None
 
     def _stored_fields(self) -> list[str]:
@@ -1297,15 +1293,17 @@ class Index(SegmentStore):
             + int(got.get("text") or 0)
         )
 
-    def _serve_state(self, tenant: int, field: str) -> serve.ServeState:
-        """The (tenant, field) serve state of the committed snapshot.
+    def _serve_state(
+        self, tenant: int, field: str, snap: _Snapshot | None = None
+    ) -> serve.ServeState:
+        """The (tenant, field) serve state of the snapshot ``snap``
+        (default: the adopted one).
 
         One slot holds the state of the (tenant, field) searched last.
-        It is current while its key matches, the meta object it was
-        built from is still ``self._meta`` and ``_meta_seq`` is
-        unchanged: every commit adopts a new meta dict and bumps the
-        sequence, so the first search after a commit rebuilds, lazily —
-        never inside the commit. The doc data is only loaded when the
+        It is current while its key matches and it was built from
+        ``snap``'s meta dict: every commit adopts a new one, so the
+        first search after a commit rebuilds, lazily — never inside
+        the commit. The doc data is only loaded when the
         size estimate fits the broadcast threshold, which so bounds the
         driver memory the slot holds. Building takes at most two Spark jobs (the
         estimate, then one Arrow collect of the tenant's doc rows).
@@ -1315,8 +1313,8 @@ class Index(SegmentStore):
         so a concurrent search sees the old state or the new one, never
         a partial build. The replaced state is released (its owned
         broadcast unpersisted); a search still holding it keeps reading
-        its data. The docs plan is opened from a single meta generation
-        (retried if a commit lands while it is being opened)."""
+        its data. Docs, centroids and quantizer all come from ``snap``."""
+        snap = snap or self._snap
         key = (int(tenant), field)
         bmax = self._bcast_max()
 
@@ -1324,8 +1322,7 @@ class Index(SegmentStore):
             return (
                 st is not None
                 and st.key == key
-                and st.meta is self._meta
-                and st.seq == getattr(self, "_meta_seq", 0)
+                and st.meta is snap.meta
                 and (st.loaded or st.est_bytes > bmax)
             )
 
@@ -1336,13 +1333,9 @@ class Index(SegmentStore):
             st = self._serve_slot
             if usable(st):
                 return st
-            while True:
-                meta, seq = self._meta, getattr(self, "_meta_seq", 0)
-                C, quant = self.centroids[field], self.quantizers[field]
-                docs = self._docs().filter(F.col("tenant") == int(tenant))
-                if self._meta is meta:
-                    break
-            same = st is not None and st.key == key and st.meta is meta and st.seq == seq
+            quant = snap.quantizers[field]
+            docs = self._docs(snap.meta).filter(F.col("tenant") == int(tenant))
+            same = st is not None and st.key == key and st.meta is snap.meta
             est = st.est_bytes if same else self._serve_estimate(docs, field, quant)
             table = None
             if est <= bmax:
@@ -1353,7 +1346,9 @@ class Index(SegmentStore):
                     f"{field}__num_tokens",
                     *[f.name for f in self.schema.scalar_fields()],
                 ).toArrow()
-            new = serve.ServeState(key, meta, seq, est, C, quant, field, table)
+            new = serve.ServeState(
+                key, snap.meta, est, snap.centroids[field], quant, field, table
+            )
             self._serve_slot = new
             if st is not None:
                 st.release()
@@ -1385,7 +1380,7 @@ class Index(SegmentStore):
         )
 
     def _decoded_token_rows(
-        self, field: str, cand: DataFrame, normalize: bool = True
+        self, field: str, cand: DataFrame, snap: _Snapshot, normalize: bool = True
     ) -> DataFrame:
         """Decode candidate docs' quantized tokens into per-token rows
         (doc_id, token_idx, vec), L2-normalized when ``normalize`` (the
@@ -1393,14 +1388,14 @@ class Index(SegmentStore):
         reconstructions SearchOptions.normalize selects on the plaid
         path) — ONE Arrow-batched mapInPandas; everything downstream
         stays declarative. ``cand`` must carry (doc_id,
-        <field>__codes, __residuals, __num_tokens)."""
+        <field>__codes, __residuals, __num_tokens) of ``snap``."""
         codes_c, res_c, nt_c = (
             f"{field}__codes",
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-        quant = self.quantizers[field]
-        bc_c = self._bc(self.centroids[field])
+        quant = snap.quantizers[field]
+        bc_c = self._bc(snap.centroids[field])
 
         def decode_tokens(batches):
             # one kernels.decode per Arrow batch — the cascade's
@@ -1451,32 +1446,21 @@ class Index(SegmentStore):
         from lintdb_spark.operators import scoring as _scoring
 
         opts = opts or SearchOptions()
+        snap = self._snap
         qmats = {int(qid): np.asarray(q, dtype=np.float32) for qid, q in queries.items()}
         codes_c, res_c, nt_c = (
             f"{field}__codes",
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-        probes_df = self.spark.createDataFrame(
-            [(int(q), int(c)) for q, c in self._top_centroids_batch(field, qmats, opts)],
-            "qid long, centroid_id long",
+        cand_ids, docs = self._batch_candidates(
+            tenant, field, qmats, opts, doc_filter, snap
         )
-        cand_ids = (
-            self._postings_serve(field, tenant)
-            .join(F.broadcast(probes_df), "centroid_id")
-            .select("qid", "doc_id")
-            .distinct()
-        )
-        docs = self._docs().filter(F.col("tenant") == tenant)
-        if doc_filter is not None:
-            docs = docs.join(
-                self._filter_doc_ids(tenant, doc_filter), "doc_id", "left_semi"
-            )
         uniq = cand_ids.select("doc_id").distinct().join(
             docs.select("doc_id", codes_c, res_c, nt_c), "doc_id"
         )
         cand_tokens = self._decoded_token_rows(
-            field, uniq, normalize=opts.normalize
+            field, uniq, snap, normalize=opts.normalize
         ).join(cand_ids, "doc_id")
         # pandas -> Arrow fast path (the tuple-list route serializes
         # row-by-row via py4j: ~4M floats per 1000-query batch)
@@ -1507,29 +1491,54 @@ class Index(SegmentStore):
             topk,
         )
 
-    def _filter_doc_ids(self, tenant: int, node) -> DataFrame:
-        """Compile an arbitrary scalar/Match boolean tree into a doc_id
-        DataFrame (Term -> filtered scan, Match -> inverted-index
-        semi-join, And -> intersection, Or -> union). Used by
+    def _batch_candidates(self, tenant, field, qmats, opts, doc_filter, snap):
+        """The Spark batch paths' inputs from ``snap``: (qid, doc_id)
+        candidates from each query's probed postings, and the tenant's
+        docs narrowed by ``doc_filter``."""
+        C = snap.centroids[field].astype(np.float64)
+        probed = kernels.top_centroids(C, qmats, opts.k_top_centroids, opts.n_probe)
+        # probes are a few rows per query: a tuple list is fine here
+        probes = self.spark.createDataFrame(
+            [(int(q), int(c)) for q, c in probed], "qid long, centroid_id long"
+        )
+        cand_ids = (
+            self._postings_serve(field, tenant, snap.meta)
+            .join(F.broadcast(probes), "centroid_id")
+            .select("qid", "doc_id")
+            .distinct()
+        )
+        docs = self._docs(snap.meta).filter(F.col("tenant") == tenant)
+        if doc_filter is not None:
+            keep = self._filter_doc_ids(tenant, doc_filter, snap.meta)
+            docs = docs.join(keep, "doc_id", "left_semi")
+        return cand_ids, docs
+
+    def _filter_doc_ids(self, tenant: int, node, meta: dict) -> DataFrame:
+        """Compile an arbitrary scalar/Match boolean tree over the
+        snapshot ``meta`` into a doc_id DataFrame (Term -> filtered
+        scan, Match -> inverted-index semi-join, And -> intersection,
+        Or -> union). Used by
         search_batch's doc_filter so Match works at ANY depth of the
         tree, not just top-level."""
         if isinstance(node, MatchQuery):
-            return self._match_scores(tenant, node).select("doc_id")
+            return self._match_scores(tenant, node, meta).select("doc_id")
         if isinstance(node, TermQuery):
             return (
-                self._docs()
+                self._docs(meta)
                 .filter((F.col("tenant") == tenant) & self._scalar_predicate(node))
                 .select("doc_id")
             )
         if isinstance(node, AndQuery):
-            out = self._filter_doc_ids(tenant, node.children[0])
+            out = self._filter_doc_ids(tenant, node.children[0], meta)
             for c in node.children[1:]:
-                out = out.join(self._filter_doc_ids(tenant, c), "doc_id", "left_semi")
+                out = out.join(
+                    self._filter_doc_ids(tenant, c, meta), "doc_id", "left_semi"
+                )
             return out
         if isinstance(node, OrQuery):
-            out = self._filter_doc_ids(tenant, node.children[0])
+            out = self._filter_doc_ids(tenant, node.children[0], meta)
             for c in node.children[1:]:
-                out = out.unionByName(self._filter_doc_ids(tenant, c))
+                out = out.unionByName(self._filter_doc_ids(tenant, c, meta))
             return out.distinct()
         raise TypeError(
             f"doc_filter supports Term/Match/And/Or nodes only, got {type(node).__name__}"
@@ -1580,17 +1589,21 @@ class Index(SegmentStore):
           millions of candidates per query, the declarative twin
           ``scoring.batch_two_phase_topk`` keeps stage-1 codes-only and
           joins residual rows for survivors alone — same semantics,
-          shuffle-lean."""
+          shuffle-lean.
+
+        Every path reads ONE snapshot, captured once."""
         self._refresh_meta_if_stale()
         opts = opts or SearchOptions()
+        check_k(k)
         if opts.scoring_method == "xtr":
             return self.search_batch_xtr(
                 tenant, field, queries, k=k, opts=opts, doc_filter=doc_filter
             )
         if opts.scoring_method != "plaid":
             raise ValueError(f"unknown scoring_method: {opts.scoring_method!r}")
+        snap = self._snap
         qmats = {int(qid): np.asarray(q, dtype=np.float32) for qid, q in queries.items()}
-        quant = self.quantizers[field]
+        quant = snap.quantizers[field]
         use_adc = self._use_adc(quant, opts)
         stored = self._stored_fields()
         doc_schema = self.schema.doc_spark_schema()
@@ -1607,12 +1620,12 @@ class Index(SegmentStore):
         # corpus size (an unmeasured fallback is a latency cliff
         # candidate), and an operator can pin it when executor memory
         # is tighter than the threshold suggests.
-        state = self._local_state(tenant, field)
+        state = self._local_state(tenant, field, snap)
         if state is not None:
             sc = self.spark.sparkContext
             mask = None
             if doc_filter is not None:
-                keep = self._filter_doc_ids(tenant, doc_filter).toArrow()
+                keep = self._filter_doc_ids(tenant, doc_filter, snap.meta).toArrow()
                 mask = np.isin(state.doc_ids, keep.column("doc_id").to_numpy())
             bc_state = state.broadcast(sc, self._bc)
             bc_q = self._bc((qmats, mask))
@@ -1637,25 +1650,11 @@ class Index(SegmentStore):
             f"{field}__residuals",
             f"{field}__num_tokens",
         )
-        # probes are a few rows per query: a tuple list is fine here;
-        # the query tokens below go through pandas -> Arrow
-        probes_df = self.spark.createDataFrame(
-            [(int(q), int(c)) for q, c in self._top_centroids_batch(field, qmats, opts)],
-            "qid long, centroid_id long",
+        cand_ids, docs = self._batch_candidates(
+            tenant, field, qmats, opts, doc_filter, snap
         )
-        cand_ids = (
-            self._postings_serve(field, tenant)
-            .join(F.broadcast(probes_df), "centroid_id")
-            .select("qid", "doc_id")
-            .distinct()
-        )
-        docs = self._docs().filter(F.col("tenant") == tenant)
-        if doc_filter is not None:
-            docs = docs.join(
-                self._filter_doc_ids(tenant, doc_filter), "doc_id", "left_semi"
-            )
         n_parts = self.spark.sparkContext.defaultParallelism
-        bc_c = self._bc(self.centroids[field])
+        bc_c = self._bc(snap.centroids[field])
         cand = cand_ids.join(docs.select("doc_id", codes_c, res_c, nt_c), "doc_id")
         # explicit qid partitioning ahead of the cogroup: the Python
         # cascade is CPU-bound per group, and AQE (which only sees

@@ -37,6 +37,18 @@ class SearchOptions:
     # None = auto (on exactly when those conditions hold).
     use_adc: bool | None = None
 
+    def __post_init__(self):
+        for name in ("n_probe", "k_top_centroids", "num_second_pass",
+                     "nearest_tokens_to_fetch"):
+            if getattr(self, name) < 0:
+                raise ValueError(f"{name} must be >= 0, got {getattr(self, name)}")
+
+
+def check_k(k: int) -> None:
+    """Every search path rejects a negative k the same way."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
 
 @dataclass
 class TermQuery:

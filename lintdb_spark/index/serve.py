@@ -6,9 +6,9 @@ its own process from posting lists hot in RocksDB's block cache
 and merges top-k at the driver).
 
 A ``ServeState`` is built once per committed snapshot (the Index keys
-it on the tenant, the field, the meta object and ``_meta_seq``) and its
-data is never mutated after, so a search that grabbed one reads exactly
-one generation. It holds:
+it on the tenant, the field and the identity of the adopted meta dict)
+and its data is never mutated after, so a search that grabbed one
+reads exactly one generation. It holds:
 
 - the tenant's doc blobs (codes, residual bytes, n_tokens per doc);
 - postings by centroid, inverted from the docs' codes (the postings
@@ -39,8 +39,8 @@ class ServeState:
     columns), or None when the size estimate is over the broadcast
     threshold — such a state only remembers ``est_bytes``."""
 
-    def __init__(self, key, meta, seq, est_bytes, C, quant, field, table=None):
-        self.key, self.meta, self.seq, self.est_bytes = key, meta, seq, est_bytes
+    def __init__(self, key, meta, est_bytes, C, quant, field, table=None):
+        self.key, self.meta, self.est_bytes = key, meta, est_bytes
         self.C, self.quant = C, quant
         self.C64 = C.astype(np.float64)
         self.loaded = table is not None

@@ -14,7 +14,10 @@ rewrites and top-level counters alike — flips it and only then adopts
 it, so no caller writes the live meta before its flip. Writers
 across processes serialize via an O_EXCL lockfile with ownership
 tokens and stale takeover; readers follow external commits by statting
-the meta file per serve call. Each commit also records its segments'
+the meta file per serve call. The adopted meta dict is the snapshot
+token: each commit or refresh installs a new one, with its sidecar
+state, by one reference assignment, and every cache keys on its
+identity. Each commit also records its segments'
 parquet leaf files (the manifest), so readers open tables without any
 partition-discovery listing job.
 
@@ -142,13 +145,15 @@ class SegmentStore:
     # per segment on every new snapshot
     _exact_schema_tables: tuple[str, ...] = ()
 
-    def __init__(self, spark: SparkSession, path: str):
-        import threading
-
+    def __init__(
+        self, spark: SparkSession, path: str, meta: dict | None = None, sidecars=None
+    ):
         self.spark = spark
         self.path = path
-        self._meta: dict = {"versions": {}}
+        # guards every adoption (_adopt): a commit holds it from its
+        # meta write until it adopts, a refresh while it reloads
         self._refresh_lock = threading.Lock()
+        self._adopt(meta or {"versions": {}}, None, sidecars)
         # active writer-lock hold for THIS thread: (lockpath, token)
         # while inside _writer_lock, else None (thread-local so a
         # reader thread never sees a writer thread's hold)
@@ -192,20 +197,15 @@ class SegmentStore:
     def _fs_exists(self, path: str) -> bool:
         return self.fs.exists(path)
 
-    def _normalize_meta(self, meta: dict | None = None) -> None:
-        """Hook: normalize a freshly (re)loaded meta dict in place.
-        Subclass overrides must call super() first — the base decodes
-        the dictionary-coded on-disk manifests back to the plain
-        rel-path lists every in-memory consumer reads.
-
-        ``meta`` (ADVICE r14): the refresh path passes the NOT-YET-
-        PUBLISHED dict so normalization runs before the single atomic
-        ``self._meta = m`` assignment — a concurrent serve thread
-        (IndexServer reads take no lock) must never observe encoded
-        dict manifests where every consumer expects plain lists.
-        ``None`` keeps the load()-time behavior of normalizing
-        ``self._meta`` in place."""
-        meta = self._meta if meta is None else meta
+    def _normalize_meta(self, meta: dict) -> None:
+        """Hook: normalize a freshly loaded, NOT-YET-ADOPTED meta dict
+        in place. Subclass overrides must call super() first — the
+        base decodes the dictionary-coded on-disk manifests back to
+        the plain rel-path lists every in-memory consumer reads.
+        Normalization runs before the adoption (ADVICE r14): a
+        concurrent serve thread (IndexServer reads take no lock) must
+        never observe encoded dict manifests where every consumer
+        expects plain lists."""
         meta.setdefault("versions", {})
         man = meta.get("manifests")
         if man:
@@ -214,10 +214,28 @@ class SegmentStore:
                     if isinstance(enc, dict):
                         per[seg] = _decode_manifest(enc)
 
-    def _on_meta_reloaded(self) -> None:
-        """Hook: reload sidecar state after an external commit was
-        picked up by _refresh_meta_if_stale (the Index reloads trained
-        centroid/quantizer sidecars here)."""
+    def _on_meta_reloaded(self, meta: dict):
+        """Hook: load the sidecar state a loaded ``meta`` was published
+        with (the Index's trained centroid/quantizer sidecars); the
+        result is adopted together with the meta (_adopt)."""
+
+    def _adopt(self, meta: dict, stat, sidecars=None) -> None:
+        """Install a committed meta (and ``sidecars``, subclass state
+        published with it) by one reference assignment, with the meta
+        file's identity ``stat``; callers past __init__ hold
+        _refresh_lock."""
+        self._meta_stat = stat
+        self._meta = meta
+
+    def _load_meta(self, stat) -> None:
+        """Read, normalize and adopt the committed meta and sidecars.
+        ``stat`` is taken BEFORE the read: read-then-stat could pair
+        stale bytes with a concurrent commit's identity, making the
+        staleness check skip the reload and a CAS flip silently erase
+        that commit."""
+        m = json.loads(self.fs.open_read(os.path.join(self.path, "_meta.json")))
+        self._normalize_meta(m)
+        self._adopt(m, stat, self._on_meta_reloaded(m))
 
     def _stat_meta(self):
         """(mtime_ns, size, inode) identity of the committed
@@ -233,42 +251,27 @@ class SegmentStore:
         may commit segments to the same index path. The atomic
         `_meta.json` flip is the commit point, so stat'ing that one
         file per serve call detects any such commit; on change the
-        meta is reloaded and `_meta_seq` bumped, invalidating the
-        serve-blob cache. This guard makes READERS follow external
+        meta and its sidecars are reloaded and adopted as a new
+        snapshot, which every serve cache keys on. This guard makes READERS follow external
         commits instead of serving a stale snapshot forever; WRITERS
         serialize via the `_writer.lock` file (_writer_lock), which
         re-runs this refresh after acquisition so every commit builds
         on the latest published meta."""
         cur = self._stat_meta()
-        if cur is None:
+        if cur is None or cur == getattr(self, "_meta_stat", None):
             return
-        if cur == getattr(self, "_meta_stat", None):
-            return
-        with self._refresh_lock:  # one refresher at a time
+        # one refresher at a time; a commit of this store holds the
+        # lock from its flip to its adoption, so a refresh waiting here
+        # finds its own commit adopted and reloads nothing
+        with self._refresh_lock:
             cur = self._stat_meta()
-            if cur == getattr(self, "_meta_stat", None):
+            if cur is None or cur == self._meta_stat:
                 return
             try:
-                # normalize BEFORE publishing (ADVICE r14): decode the
-                # dictionary-coded manifests on a local dict, then
-                # install with ONE reference assignment — unlocked
-                # serve-thread readers see the old meta or the fully
-                # decoded new one, never an intermediate encoded state.
-                m = json.loads(
-                    self.fs.open_read(os.path.join(self.path, "_meta.json"))
-                )
-                self._normalize_meta(m)
-                self._meta = m
-                # an external commit may have RE-TRAINED (new centroid
-                # matrices / quantizer params), not just added
-                # segments. Any read failure (mid-replace race) leaves
-                # _meta_stat UNCHANGED so the next call retries the
-                # whole refresh instead of pinning a torn state.
-                self._on_meta_reloaded()
-            except Exception:  # noqa: BLE001 — retry on next serve call
+                self._load_meta(cur)
+            except Exception:  # noqa: BLE001 — a read failure (mid-replace
+                # race) adopts nothing: the next serve call retries
                 return
-            self._meta_stat = cur
-            self._meta_seq = getattr(self, "_meta_seq", 0) + 1
 
     def _writer_lock(self):
         """Mutual exclusion for the commit protocol ACROSS PROCESSES —
@@ -408,16 +411,16 @@ class SegmentStore:
         except OSError:
             pass
 
-    def _save_meta(self, meta: dict | None = None) -> None:
-        """Atomic _meta.json flip via fs.write_atomic (locally: temp
-        file + fsync + os.replace — rename is atomic on POSIX; on an
-        object store: a whole-object conditional put), so a crash at
-        ANY point leaves either the old or the new meta, never a torn
-        write. This is the only file the commit protocol's atomicity
-        rests on, so it is the one write that must not be in-place.
-        Pass ``meta`` to durably write a CANDIDATE dict before
-        adopting it in memory (commit paths do this so a failed flip
-        leaves self._meta consistent with disk).
+    def _save_meta(self, meta: dict):
+        """Atomic _meta.json flip of the CANDIDATE ``meta`` via
+        fs.write_atomic (locally: temp file + fsync + os.replace —
+        rename is atomic on POSIX; on an object store: a whole-object
+        conditional put), so a crash at ANY point leaves either the old
+        or the new meta, never a torn write. This is the only file the
+        commit protocol's atomicity rests on, so it is the one write
+        that must not be in-place. Returns the written file's identity;
+        _commit_segments, the only caller, adopts the candidate with it
+        (a failed flip leaves self._meta consistent with disk).
 
         On a CAS-capable backend (fs.supports_cas — object stores with
         conditional puts; MemoryFS models them) the flip is a
@@ -429,7 +432,7 @@ class SegmentStore:
         the losing writer refreshes and retries its whole commit."""
         self._assert_and_touch_writer_lock()
         meta_path = os.path.join(self.path, "_meta.json")
-        target = self._meta if meta is None else meta
+        target = meta
         # self-cleaning commit-time stats (round 13): per-segment row
         # counts / byte totals / spart byte maps are recorded by
         # _record_manifest; segments leave the lists through many
@@ -451,8 +454,8 @@ class SegmentStore:
                     del sr[t]
         # dictionary-code large manifests for the on-disk payload only
         # (the in-memory dict keeps plain lists — see _encode_manifest);
-        # shallow-copy the layers the encoding replaces so a passed
-        # candidate dict and self._meta are never mutated
+        # shallow-copy the layers the encoding replaces so the
+        # candidate's in-memory manifests stay plain lists
         man = target.get("manifests")
         if man:
             enc_man = {
@@ -492,13 +495,7 @@ class SegmentStore:
                 ) from exc
         else:
             self.fs.write_atomic(meta_path, payload)
-        # mutation counter for in-process serve caches (e.g. the
-        # Index's serve state): every committed state
-        # change bumps it, so caches key on it and never serve stale
-        self._meta_seq = getattr(self, "_meta_seq", 0) + 1
-        # snapshot the committed file's identity so
-        # _refresh_meta_if_stale recognizes our own commit
-        self._meta_stat = self._stat_meta()
+        return self._stat_meta()
 
     def _version(self, table: str) -> int:
         return self._meta["versions"].get(table, 0)
@@ -507,8 +504,9 @@ class SegmentStore:
         v = self._version(table) if version is None else version
         return os.path.join(self.path, table, f"v{v}")
 
-    def _segments(self, table: str) -> list[str]:
-        return self._meta.setdefault("segments", {}).get(table, [])
+    def _segments(self, table: str, meta: dict | None = None) -> list[str]:
+        # ``meta``: a snapshot a reader captured (default: the live meta)
+        return (meta or self._meta).get("segments", {}).get(table, [])
 
     def _commit_segments(
         self,
@@ -517,9 +515,11 @@ class SegmentStore:
         replace: list[tuple[str, str]] | tuple = (),
         retire: dict[str, list[str]] | None = None,
         meta: dict | None = None,
+        sidecars=None,
     ) -> None:
-        """THE commit point of both stores: every mutation and every
-        maintenance rewrite builds its candidate meta here, flips
+        """THE commit point of both stores and the only caller of
+        _save_meta: every mutation, every maintenance rewrite, index
+        creation and (re)training builds its candidate meta here, flips
         _meta.json once and adopts the result. Everything before this
         call is invisible staging.
 
@@ -533,14 +533,18 @@ class SegmentStore:
         keys that ride the same flip (counters, revisions, coverage
         lists); ``stream_batch`` (add's idempotency token) likewise —
         segments, counters and replay watermark commit together or
-        not at all.
+        not at all. ``sidecars`` is subclass state adopted with the
+        meta (the Index's new centroids and quantizers).
 
         The candidate is a COPY, adopted only after the durable flip
         succeeds: a failed flip (ENOSPC, fsync error) leaves self._meta
         equal to disk, so a retry cannot double-commit, and callers
         never write the live meta — a lock-free reader sees the old or
         the new dict via one atomic assignment, never the next
-        commit's counters beside the previous commit's segments."""
+        commit's counters beside the previous commit's segments. The
+        flip and the adoption run under _refresh_lock: a reader's
+        staleness check that sees the new file in between waits, then
+        finds this commit adopted."""
         import copy
 
         new_meta = copy.deepcopy(self._meta)
@@ -570,8 +574,8 @@ class SegmentStore:
             new_meta.setdefault("stream_batches", {})[key] = int(bid)
         if meta:
             new_meta.update(copy.deepcopy(meta))
-        self._save_meta(new_meta)
-        self._meta = new_meta
+        with self._refresh_lock:
+            self._adopt(new_meta, self._save_meta(new_meta), sidecars)
 
     def _run_writes(self, thunks: list) -> None:
         """Run independent segment-write thunks through a small
@@ -779,11 +783,13 @@ class SegmentStore:
         import copy
 
         with self._writer_lock():
-            new_meta = copy.deepcopy(self._meta)
-            man = new_meta.setdefault("manifests", {})
+            man, sr, sb = (
+                copy.deepcopy(self._meta.get(k, {}))
+                for k in ("manifests", "seg_rows", "seg_bytes")
+            )
             added = 0
             for table in self._all_tables():
-                for seg in new_meta.get("segments", {}).get(table, []):
+                for seg in self._segments(table):
                     if seg in man.get(table, {}):
                         continue
                     root = os.path.join(self.path, table, seg)
@@ -796,11 +802,9 @@ class SegmentStore:
                         root, prefer_local=False
                     )
                     added += 1
-            sr = new_meta.setdefault("seg_rows", {})
-            sb = new_meta.setdefault("seg_bytes", {})
             counter = getattr(self.fs, "parquet_num_rows", None)
             for table in self._all_tables():
-                for seg in new_meta.get("segments", {}).get(table, []):
+                for seg in self._segments(table):
                     rel = man.get(table, {}).get(seg)
                     if rel is None:
                         continue
@@ -824,12 +828,9 @@ class SegmentStore:
                         if b is not None:
                             sb.setdefault(table, {})[seg] = b
                             added += 1
-            for stats_key in ("seg_rows", "seg_bytes"):
-                if not new_meta[stats_key]:
-                    del new_meta[stats_key]
             if added:
-                self._save_meta(new_meta)
-                self._meta = new_meta
+                stats = {k: v for k, v in (("seg_rows", sr), ("seg_bytes", sb)) if v}
+                self._commit_segments([], meta={"manifests": man, **stats})
             return added
 
     def _read_manifest_files(
@@ -878,8 +879,11 @@ class SegmentStore:
                 else:
                     conf.set(key, old)
 
-    def _read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
-        """Open a table's committed segments as one DataFrame.
+    def _read(
+        self, table: str, schema: T.StructType | None = None, meta: dict | None = None
+    ) -> DataFrame:
+        """Open a table's committed segments in ``meta`` (a snapshot a
+        reader captured; default: the live meta) as one DataFrame.
 
         The OPENED frame is memoized per (table, segment list): file
         listing for a heavily partitioned table is a Spark job with
@@ -889,31 +893,31 @@ class SegmentStore:
         relation makes listing a once-per-snapshot cost — the Spark
         analogue of the reference keeping its index open in RAM
         (index.cpp:40-58 opens RocksDB once, not per query). Any
-        commit changes the segment list (or bumps versions), which
-        changes the key; _refresh_meta_if_stale reloads meta, so
-        external commits re-key too. Entries are plain lazy frames —
-        no persisted data, just the resolved file index."""
+        commit changes the segment list, which changes the key.
+        Entries are plain lazy frames — no persisted data, just the
+        resolved file index."""
         cache = getattr(self, "_read_cache", None)
         if cache is None:
             cache = self._read_cache = {}
         # schema participates in the key: today every table is read
         # with one fixed schema, but a call site passing a different
         # one must not silently get the first-cached frame
+        meta = meta or self._meta
         key = (
             table,
-            tuple(self._segments(table)),
-            self._version(table),
+            tuple(self._segments(table, meta)),
+            meta["versions"].get(table, 0),
             None if schema is None else schema.json(),
         )
         hit = cache.get(key)
         if hit is not None:
             return hit
-        out = self._read_uncached(table, schema)
+        out = self._read_uncached(table, schema, meta=meta)
         cache[key] = out
-        # drop superseded snapshots of the same table (old segment
-        # lists can never be served again)
-        for k in [k for k in cache if k[0] == table and k != key]:
-            del cache[k]
+        # keep one snapshot per table (a reader still on an older one
+        # re-opens it); list() and pop(): concurrent readers share it
+        for k in [k for k in list(cache) if k[0] == table and k != key]:
+            cache.pop(k, None)
         return out
 
     def _read_uncached(
@@ -921,10 +925,12 @@ class SegmentStore:
         table: str,
         schema: T.StructType | None = None,
         segs: list[str] | None = None,
+        meta: dict | None = None,
     ) -> DataFrame:
         """``segs`` restricts the read to a SUBSET of the table's
-        committed segments (e.g. the deferred-verify flush reads only
-        the cand_pairs segments pending); default is all of them. The
+        committed segments in ``meta`` (default: the live meta), e.g.
+        the deferred-verify flush reads only the cand_pairs segments
+        pending; default is all of them. The
         manifest-first protocol, the moved-dir listing fallback, and
         the footerless-dir guard apply identically either way."""
         def _has_parquet(p: str) -> bool:
@@ -936,9 +942,10 @@ class SegmentStore:
                     return True
             return False
 
-        man = self._meta.get("manifests", {}).get(table, {})
+        meta = meta or self._meta
+        man = meta.get("manifests", {}).get(table, {})
         frames = []
-        for s in self._segments(table) if segs is None else segs:
+        for s in self._segments(table, meta) if segs is None else segs:
             root = os.path.join(self.path, table, s)
             rel = man.get(s)
             if rel is not None:

@@ -289,8 +289,7 @@ class DedupArtifacts(SegmentStore):
         num_perms: int | None = None,
         simhash_bits: int = 32,
     ):
-        super().__init__(spark, path)
-        self._meta = {
+        super().__init__(spark, path, {
             "versions": {},
             "n_docs": 0,
             "nd_shingled": 0,
@@ -321,7 +320,7 @@ class DedupArtifacts(SegmentStore):
             # round-10 layout (flip lookups scan the doc-keyed shingle
             # table). compact()/migrate_layout backfill and upgrade.
             "flip_rev": 2,
-        }
+        })
         self._verified_lock = threading.Lock()
         # self-triggering compaction (round 10): update() compacts +
         # vacuums inline once segments-per-table or outstanding flip
@@ -383,14 +382,14 @@ class DedupArtifacts(SegmentStore):
         exactness on demand, and compact() flushes first."""
         store = cls(spark, path, num_perms)
         store.fs.makedirs(path, exist_ok=False)
+        meta = {"pair_stats_live": bool(maintain_pairs)}
+        meta["verify_every"] = max(1, int(verify_every))
         if bucket_parts is not None:
-            store._meta["bucket_parts"] = int(bucket_parts)
+            meta["bucket_parts"] = int(bucket_parts)
         if doc_parts is not None:
-            store._meta["doc_parts"] = int(doc_parts)
+            meta["doc_parts"] = int(doc_parts)
         if shingle_parts is not None:
-            store._meta["shingle_parts"] = int(shingle_parts)
-        store._meta["pair_stats_live"] = bool(maintain_pairs)
-        store._meta["verify_every"] = max(1, int(verify_every))
+            meta["shingle_parts"] = int(shingle_parts)
         # which shingles segments the inverted shingle_docs table
         # reflects (round 11): batch commits append to shingles ONLY —
         # the flip lookup reads uncovered batch segments doc-keyed
@@ -401,37 +400,20 @@ class DedupArtifacts(SegmentStore):
         # WITHOUT this key is a pre-fix flip_rev-2 store whose
         # shingle_docs was maintained in lockstep every commit
         # (covers everything; uncovered = []).
-        store._meta["shingle_docs_covers"] = []
-        store._save_meta()
+        meta["shingle_docs_covers"] = []
+        store._commit_segments([], meta=meta)
         return store
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "DedupArtifacts":
-        import json
-
         store = cls(spark, path)
-        # stat BEFORE read: a commit landing between the two leaves
-        # _meta newer than _meta_stat, which the next staleness check
-        # harmlessly re-reads. The reverse order (read then stat) could
-        # pair stale bytes with the NEWER identity — the staleness
-        # check then skips the reload and, on a CAS backend, the meta
-        # flip's write_if_match PASSES against the concurrent commit
-        # and silently erases it (the exact lost update the
-        # conditional put exists to make loud).
-        store._meta_stat = store._stat_meta()
-        store._meta = json.loads(
-            store.fs.open_read(os.path.join(path, "_meta.json"))
-        )
-        store._normalize_meta()
+        store._load_meta(store._stat_meta())
         return store
 
     def _all_tables(self) -> list[str]:
         return list(self.TABLES)
 
-    def _normalize_meta(self, meta: dict | None = None) -> None:
-        # operates on `meta` (may be a not-yet-published dict from the
-        # staleness refresh — see SegmentStore._normalize_meta)
-        meta = self._meta if meta is None else meta
+    def _normalize_meta(self, meta: dict) -> None:
         super()._normalize_meta(meta)  # versions + on-disk manifest decode
         meta.setdefault("n_docs", 0)
         meta.setdefault("nd_shingled", 0)
@@ -3764,7 +3746,7 @@ class DedupArtifacts(SegmentStore):
         flush_pairs() forces exactness. The round-8
         behavior — a full verify per snapshot (141 s at the sf10
         probe's 500k docs), memoized under a lock keyed on
-        (_meta_seq, knobs) — remains as the fallback for legacy stores
+        (snapshot, knobs) — remains as the fallback for legacy stores
         that have not run migrate_layout."""
         self._refresh_meta_if_stale()
         self._require_single_tenant(tenant, "verified_pairs")
@@ -3779,16 +3761,14 @@ class DedupArtifacts(SegmentStore):
                 tenant,
                 cols=("doc_a", "doc_b"),
             )
-        key = (
-            getattr(self, "_meta_seq", 0),
-            float(min_jaccard),
-            int(min_overlap),
-            tenant,
-        )
+        # keyed on the adopted meta's identity: every commit and every
+        # refresh adopts a new dict
+        key = (float(min_jaccard), int(min_overlap), tenant)
+        meta = self._meta
         with self._verified_lock:
             cached = getattr(self, "_verified_cache", None)
-            if cached is not None and cached[0] == key:
-                return cached[1]
+            if cached is not None and cached[0] is meta and cached[1] == key:
+                return cached[2]
             df = dedup.jaccard_verify_pairs(
                 self.capped_shingles(tenant=tenant),
                 None,
@@ -3798,10 +3778,10 @@ class DedupArtifacts(SegmentStore):
             ).persist()
             if cached is not None:
                 try:
-                    cached[1].unpersist(blocking=False)
+                    cached[2].unpersist(blocking=False)
                 except Exception:  # noqa: BLE001 — best-effort
                     pass
-            self._verified_cache = (key, df)
+            self._verified_cache = (meta, key, df)
             return df
 
     def cluster_map(

@@ -20,8 +20,9 @@ Endpoints (parity with `lintdb/server/openapi.yaml` and
 
 Failures answer ``{"error": ...}``: 400 for a malformed request (a
 body that is not JSON, a non-integer tenant; for search a query node
-the translator rejects, options that do not construct SearchOptions, a
-non-integer k; for mutations ``documents`` or ``ids`` that is not a
+the translator rejects, options that do not construct SearchOptions
+(negative counts included), a k that is not a non-negative integer;
+for mutations ``documents`` or ``ids`` that is not a
 list, a document without an integer ``id``, an unknown field name, a
 tensor whose length is not a multiple of the field's dimensions), 500
 for anything else.
@@ -34,7 +35,8 @@ reference never wired). Tensor values arrive as a flat float list plus
 
 Concurrency: requests are handled on server threads; Spark job
 submission from multiple threads is safe (each action is an
-independent job). The reference uses 12 Drogon threads
+independent job). Every search reads one committed snapshot, whichever
+path it takes, while writes commit. The reference uses 12 Drogon threads
 (`server/main.cpp:44`); here the executor pool is the real concurrency
 boundary.
 """
@@ -55,6 +57,7 @@ from lintdb_spark.index.query import (
     OrQuery,
     TermQuery,
     VectorQuery,
+    check_k,
 )
 
 
@@ -102,14 +105,10 @@ class IndexServer:
         self.index = index
         # Mutations (add/update/remove) are read-modify-write of the
         # index meta + a meta-file flip; serialize them. Searches stay
-        # lock-free. A search on the driver-local path (a bare TENSOR
-        # or AND(TERM..., TENSOR) tree within the broadcast threshold)
-        # reads ONE snapshot: it scores from a serve state built from a
-        # single meta generation and installed by one reference
-        # assignment. Trees on the Spark plan remain read-committed:
-        # commits adopt their meta via ONE dict assignment, so a reader
-        # never sees a per-table partial, but a search spanning
-        # several _read calls can straddle one commit.
+        # lock-free and read ONE snapshot on every path: a commit
+        # adopts its meta and trained state by one reference
+        # assignment, and a search captures that snapshot once and
+        # opens every table from it.
         self._write_lock = threading.Lock()
         outer = self
 
@@ -173,7 +172,8 @@ class IndexServer:
     def _search(self, tenant: int, payload: dict) -> dict:
         try:
             query = query_node_from_json(payload["query"])
-            k = int(payload.get("k", 10))
+            k = _int(payload.get("k", 10), "k")
+            check_k(k)
             # the reference's body key is "options" (openapi.yaml);
             # accept "search_options" as an alias. Unknown keys (e.g.
             # the reference's colbert_field, which here lives on the

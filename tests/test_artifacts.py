@@ -257,9 +257,7 @@ def test_update_prunes_to_batch_partitions(spark, corpus, tmp_path):
 
     path = str(tmp_path / "store_prune")
     st = DedupArtifacts.create(spark, path)
-    st._meta["bucket_parts"] = 4
-    st._meta["doc_parts"] = 4
-    st._save_meta()
+    st._commit_segments([], meta={"bucket_parts": 4, "doc_parts": 4})
     st.update(corpus.limit(60))
     # the fine (hive-partitioned) layout is the COMPACTED segments'
     # job — per-batch segments stage coarse (batch-sized scans)
@@ -375,8 +373,7 @@ def test_migrate_layout_from_rev1(spark, corpus, tmp_path):
     path = str(tmp_path / "store_rev1")
     st = DedupArtifacts.create(spark, path)
     # forge a rev-1 store: strip the rev marker and the new tables
-    st._meta["schema_rev"] = 1
-    st._save_meta()
+    st._commit_segments([], meta={"schema_rev": 1})
     b1 = corpus.filter(F.col("doc_id") % 2 == 0).limit(40)
     b2 = corpus.filter(F.col("doc_id") % 2 == 1).limit(40)
     st.update(b1)
@@ -422,8 +419,7 @@ def test_verified_pairs_memo_is_thread_safe(spark, corpus, tmp_path, monkeypatch
     path = str(tmp_path / "store_lock")
     st = DedupArtifacts.create(spark, path)
     st.update(corpus.limit(80))
-    st._meta["pair_stats_live"] = False
-    st._save_meta()
+    st._commit_segments([], meta={"pair_stats_live": False})
 
     calls = []
     real = art_mod.dedup.jaccard_verify_pairs
@@ -639,8 +635,7 @@ def test_point_path_defers_shingle_unpersist_past_flush(
     SparkDF = type(spark.range(1))  # the concrete (classic) DataFrame
 
     st = DedupArtifacts.create(spark, str(tmp_path / "store_legacy_point"))
-    st._meta["pair_rev"] = 2
-    st._save_meta()
+    st._commit_segments([], meta={"pair_rev": 2})
     events, results, persisted, inside = [], [], set(), []
     orig_point = DedupArtifacts._stage_pair_stats_point
     orig_write = DedupArtifacts._write_segments_one_pass
@@ -859,8 +854,7 @@ def test_remove_on_rev1_store_raises(spark, corpus, tmp_path):
 
     path = str(tmp_path / "store_rev1_rm")
     st = DedupArtifacts.create(spark, path)
-    st._meta["schema_rev"] = 1
-    st._save_meta()
+    st._commit_segments([], meta={"schema_rev": 1})
     st.update(corpus.limit(10))
     with pytest.raises(ValueError, match="migrate_layout"):
         st.remove([0, 1])
@@ -1356,8 +1350,7 @@ def test_legacy_flip_rev1_upgrades_on_compact(spark, tmp_path):
     st = DedupArtifacts.create(spark, path)
     # simulate a round-10 store: downgrade BEFORE any data lands
     with st._writer_lock():
-        st._meta["flip_rev"] = 1
-        st._save_meta()
+        st._commit_segments([], meta={"flip_rev": 1})
     st.update(spark.createDataFrame(rows1, "doc_id long, text string"))
     assert not st._segments("shingle_docs")
     assert not st._segments("pair_docs")

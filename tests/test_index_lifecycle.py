@@ -798,7 +798,7 @@ def test_update_publishes_in_one_flip(spark, tmp_path, monkeypatch):
 
 def test_mutations_with_nothing_to_do_commit_nothing(spark, tmp_path):
     """remove() of no ids and update() of a zero-row frame leave
-    _meta.json, the commit sequence, the docs version and the serve
+    _meta.json, the adopted meta, the docs version and the serve
     state as they were."""
     idx = Index.create(spark, str(tmp_path / "noop"), make_schema("none"))
     docs = make_docs(spark, range(6))
@@ -808,13 +808,13 @@ def test_mutations_with_nothing_to_do_commit_nothing(spark, tmp_path):
     state = idx._serve_slot
 
     def snapshot():
-        return (_meta_bytes(idx), idx._meta_seq, idx._version("docs"), idx._meta)
+        return (_meta_bytes(idx), idx._version("docs"), idx._meta)
 
     before = snapshot()
     idx.remove(0, [])
-    assert snapshot() == before
+    assert snapshot() == before and idx._meta is before[-1]
     idx.update(spark.createDataFrame([], docs.schema))
-    assert snapshot() == before
+    assert snapshot() == before and idx._meta is before[-1]
     assert idx._serve_state(0, "colbert") is state
 
 
@@ -936,9 +936,7 @@ def test_serve_follows_external_retrain(spark, tmp_path):
     writer2.train(docs2)
     # transplant the NEW trained state + data into the original path
     # via the public API (train + full re-add on the same Index object)
-    writer.centroids = dict(writer2.centroids)
-    writer.quantizers = dict(writer2.quantizers)
-    writer._save_sidecars()
+    writer._save_sidecars(dict(writer2.centroids), dict(writer2.quantizers), True)
     writer.update(docs)  # rewrite under the new model (bumps meta)
     writer.add(make_docs(spark, [7]))
 
@@ -1098,7 +1096,7 @@ def test_writer_lock_stolen_release_spares_thief(spark, tmp_path):
             # thief replaced our lockfile with its own
             with open(lock, "w") as f:
                 f.write(thief)
-            idx._save_meta()  # must refuse the flip
+            idx._commit_segments([])  # must refuse the flip
     # release must leave the thief's lockfile untouched
     assert os.path.exists(lock)
     assert json.load(open(lock))["token"] == "thief-token"
@@ -1118,7 +1116,7 @@ def test_writer_lock_flip_touches_mtime(spark, tmp_path):
     with idx._writer_lock():
         old = time.time() - 5_000
         os.utime(lock, (old, old))
-        idx._save_meta()
+        idx._commit_segments([])
         assert time.time() - os.path.getmtime(lock) < 60
     assert not os.path.exists(lock)
 
@@ -1149,7 +1147,7 @@ def test_train_serializes_via_writer_lock(spark, tmp_path):
 
 def test_postings_serve_cache_reuses_and_rekeys_on_commit(spark, tmp_path):
     """_postings_serve (round 7): repeated serves on an unchanged index
-    reuse ONE persisted postings slice; a commit bumps _meta_seq and
+    reuse ONE persisted postings slice; a commit adopts a new meta and
     the next serve rebuilds (and unpersists the stale frame) — stale
     candidates would otherwise hide newly added docs."""
     path = str(tmp_path / "idx_pcache")

@@ -127,6 +127,30 @@ def test_local_matches_spark_plan(idx):
                 assert all(d % 2 == want for d, _, _ in got), name
 
 
+def test_bad_knobs_raise_alike_and_zero_agrees(spark, tmp_path):
+    """A negative k or count raises the same ValueError on the local
+    path and on the Spark plan (force_cogroup), for search and
+    search_batch; the boundary value 0 answers alike on both."""
+    idx = build(spark, tmp_path / "knobs", "none")
+    q = trees()["tensor"]
+    for force in (False, True):
+        idx.force_cogroup = force
+        try:
+            with pytest.raises(ValueError, match="k must be >= 0, got -1"):
+                idx.search(0, q, k=-1, opts=SearchOptions(**BASE))
+            with pytest.raises(ValueError, match="k must be >= 0, got -1"):
+                idx.search_batch(0, "colbert", {0: q.query_tokens}, k=-1)
+        finally:
+            idx.force_cogroup = False
+    for knob in ("n_probe", "k_top_centroids", "num_second_pass", "nearest_tokens_to_fetch"):
+        with pytest.raises(ValueError, match=f"{knob} must be >= 0, got -1"):
+            SearchOptions(**{**BASE, knob: -1})
+    assert assert_parity(idx, q, 0, SearchOptions(**BASE)) == []
+    for knob in ("n_probe", "num_second_pass"):
+        assert assert_parity(idx, q, 5, SearchOptions(**{**BASE, knob: 0})) == [], knob
+    assert assert_parity(idx, q, 5, SearchOptions(**{**BASE, "k_top_centroids": 0}))
+
+
 def test_local_survivor_cut_below_candidate_count(spark, tmp_path):
     idx = build(spark, tmp_path / "cut", "binarizer")
     opts = SearchOptions(**{**BASE, "num_second_pass": 3}, centroid_score_threshold=0.0)
@@ -236,8 +260,8 @@ def test_released_state_broadcasts_per_call(spark, tmp_path, monkeypatch):
     picked = []
     real = Index._serve_state
 
-    def replaced_after_pick(self, tenant, field):
-        picked.append(real(self, tenant, field))
+    def replaced_after_pick(self, tenant, field, snap=None):
+        picked.append(real(self, tenant, field, snap))
         real(self, 1, field)  # another tenant's search
         return picked[-1]
 

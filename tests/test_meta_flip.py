@@ -1,15 +1,22 @@
-"""One meta flip per commit, in both segment stores.
+"""One meta flip per commit, in both segment stores, and one snapshot
+per read.
 
-Every mutation and maintenance rewrite of the Index and the dedup
-artifact store builds its candidate meta in
+Every mutation, maintenance rewrite and (re)training of the Index and
+the dedup artifact store builds its candidate meta in
 ``SegmentStore._commit_segments`` and adopts it only after the flip:
 
 - the live meta a lock-free reader holds is the previous commit's,
   counters and segment lists alike, until the flip lands;
+- a reader's staleness check in the window between the meta write and
+  the adoption reloads nothing: each commit adopts exactly its own
+  meta;
 - a failed flip leaves the live meta, the meta file and every read as
   they were, and a retry succeeds;
-- REST searches on the driver-local path answer from one committed
-  snapshot while add, remove, update and both compactions run."""
+- a search during a re-train scores with the trained state adopted
+  with its snapshot, and a Spark-plan search opens every table from
+  the snapshot it captured;
+- REST searches answer from one committed snapshot while add, remove,
+  update and both compactions run."""
 
 from __future__ import annotations
 
@@ -21,11 +28,13 @@ import threading
 import numpy as np
 import pytest
 
-from lintdb_spark.index import Index, VectorQuery
+from lintdb_spark.index import Index, OrQuery, VectorQuery
 from lintdb_spark.operators.artifacts import DedupArtifacts
 from lintdb_spark.server import IndexServer
 from tests.test_artifacts import _rows, _two_group_rows
-from tests.test_index_lifecycle import NUM_TOKENS, OPTS, doc_tokens, make_docs, make_schema
+from tests.test_index_lifecycle import (
+    DIM, NUM_TOKENS, OPTS, doc_tokens, make_docs, make_schema, search_ids,
+)
 from tests.test_server import _post
 
 PAIR_COLS = ["doc_a", "doc_b", "n_common", "jaccard"]
@@ -55,7 +64,7 @@ def test_artifact_commits_keep_live_meta_until_flip(spark, tmp_path, monkeypatch
 
     def spy(meta=None):
         at_flip.append(copy.deepcopy(st._meta))
-        real(meta)
+        return real(meta)
 
     monkeypatch.setattr(st, "_save_meta", spy)
     ops = [
@@ -77,6 +86,125 @@ def test_artifact_commits_keep_live_meta_until_flip(spark, tmp_path, monkeypatch
         assert st._meta != before, name  # the op did commit
     assert st._meta["n_docs"] == len(rows1) + len(rows2) - 2
     assert st.pending_pair_batches() == 0
+
+
+def test_refresh_in_the_flip_window_reloads_nothing(spark, tmp_path, monkeypatch):
+    """A reader's staleness check that runs after the writer wrote
+    _meta.json but before it adopted the new meta (here: from the meta
+    write itself) must not take the writer's own flip for an external
+    commit: the writer's candidate is the one adopted, no sidecar
+    reload runs and the commit adopts exactly one meta."""
+    idx = Index.create(spark, str(tmp_path / "idx"), make_schema("none"))
+    flipped, adopted, reloaded = [], [], []
+    real_save, real_adopt = idx._save_meta, idx._adopt
+    real_write = idx.fs.write_atomic
+    checked = threading.Event()
+
+    def refresh():
+        idx._refresh_meta_if_stale()
+        checked.set()
+
+    reader = threading.Thread(target=refresh)
+
+    def write_atomic(path, data):
+        real_write(path, data)
+        if path.endswith("_meta.json") and reader.ident is None:
+            reader.start()
+            checked.wait(timeout=1.0)  # the reader either finishes or waits
+
+    def save(meta=None):
+        flipped.append(meta)
+        return real_save(meta)
+
+    def adopt(meta, stat, sidecars=None):
+        adopted.append(meta)
+        real_adopt(meta, stat, sidecars)
+
+    monkeypatch.setattr(idx.fs, "write_atomic", write_atomic)
+    monkeypatch.setattr(idx, "_save_meta", save)
+    monkeypatch.setattr(idx, "_adopt", adopt)
+    monkeypatch.setattr(idx, "_on_meta_reloaded", lambda *a: reloaded.append(a))
+    idx.set_coarse_quantizer("colbert", np.eye(8, DIM, dtype=np.float32))
+    reader.join(timeout=30)
+    assert not reader.is_alive() and checked.is_set()
+    assert reloaded == []
+    assert len(flipped) == 1 and idx._meta is flipped[0]
+    assert len(adopted) == 1 and adopted[0] is flipped[0]
+    assert idx._meta["trained"] and idx.centroids["colbert"].shape == (8, DIM)
+
+
+@pytest.mark.parametrize("op", ["set_coarse_quantizer", "train"])
+def test_search_during_retrain_scores_with_the_adopted_snapshot(
+    spark, tmp_path, monkeypatch, op
+):
+    """A search that runs while a re-train has written its sidecar
+    files but not yet flipped builds its serve state from the adopted
+    snapshot: the old centroid matrix and the old meta. The first
+    search after the flip scores with the new centroids."""
+    idx = Index.create(spark, str(tmp_path / "idx"), make_schema("none"))
+    docs = make_docs(spark, range(12))
+    idx.train(docs)
+    idx.auto_compact = False
+    idx.add(docs)
+    old_c, old_meta = idx.centroids["colbert"], idx._meta
+    in_window = []
+    real_write = idx.fs.write_atomic
+
+    def write_atomic(path, data):
+        real_write(path, data)
+        if "centroids" in path and not in_window:
+            assert search_ids(idx, VectorQuery("colbert", doc_tokens(3)))
+            in_window.append(idx._serve_slot)
+
+    monkeypatch.setattr(idx.fs, "write_atomic", write_atomic)
+    if op == "train":
+        idx.train(make_docs(spark, range(40, 52)))
+    else:
+        idx.set_coarse_quantizer("colbert", old_c[::-1].copy())
+    monkeypatch.undo()
+    (state,) = in_window
+    assert state.meta is old_meta
+    np.testing.assert_array_equal(state.C, old_c)
+    new_c = idx.centroids["colbert"]
+    assert not np.array_equal(new_c, old_c)
+    search_ids(idx, VectorQuery("colbert", doc_tokens(3)))
+    assert idx._serve_slot.meta is idx._meta
+    np.testing.assert_array_equal(idx._serve_slot.C, new_c)
+
+
+def test_spark_plan_search_reads_one_snapshot(spark, tmp_path, monkeypatch):
+    """A commit landing after a Spark-plan search opened the docs table
+    and before it opened the postings (here: a remove of the top doc,
+    run from the postings open) does not change that search's answer:
+    both tables come from the snapshot it captured. The next search
+    sees the remove."""
+    idx = Index.create(spark, str(tmp_path / "idx"), make_schema("none"))
+    docs = make_docs(spark, range(12))
+    idx.train(docs)
+    idx.auto_compact = False
+    idx.add(docs)
+    tree = OrQuery([VectorQuery("colbert", doc_tokens(3)), VectorQuery("colbert", doc_tokens(5))])
+
+    def answer():
+        return [(r.doc_id, r.score) for r in idx.search(0, tree, k=5, opts=OPTS).collect()]
+
+    before = answer()
+    top = before[0][0]
+    real = idx._postings_serve
+
+    def postings_serve(*args, **kwargs):
+        if not removed:
+            removed.append(top)
+            idx.remove(0, [top])
+        return real(*args, **kwargs)
+
+    removed: list = []
+    monkeypatch.setattr(idx, "_postings_serve", postings_serve)
+    assert answer() == before
+    assert removed == [top]
+    monkeypatch.undo()
+    after = answer()
+    assert top not in [d for d, _ in after] and len(after) == 5
 
 
 @pytest.fixture(scope="module")
@@ -105,8 +233,7 @@ def _rev1_store(spark, path, request):
     rows1, rows2 = _two_group_rows()
     st = DedupArtifacts.create(spark, path)
     st.auto_compact = False
-    st._meta["schema_rev"] = 1
-    st._save_meta()
+    st._commit_segments([], meta={"schema_rev": 1})
     st.update(_texts(spark, rows1))
     st.update(_texts(spark, rows2))
     return st
@@ -171,7 +298,7 @@ def test_failed_flip_leaves_meta_and_reads(spark, tmp_path, monkeypatch, request
         calls.append(1)
         if len(calls) == 1:
             raise OSError("injected flip failure")
-        real(meta)
+        return real(meta)
 
     monkeypatch.setattr(st, "_save_meta", flaky)
     with pytest.raises(OSError, match="injected"):
@@ -204,13 +331,14 @@ def _docs_frame(spark, docs):
     )
 
 
-def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
-    """REST searches (TENSOR and AND(TERM, TENSOR), the driver-local
-    path) run while add, minor_compact(force=True), remove, update and
-    compact commit. Every written doc is orthogonal to every query
-    token and every removed or updated doc is such a doc, so each
-    query's exact answer is the same in every snapshot: each answer
-    must equal it."""
+def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path, monkeypatch):
+    """REST searches (TENSOR and AND(TERM, TENSOR) on the driver-local
+    path, OR(TERM, TENSOR) on the Spark plan) run while add,
+    minor_compact(force=True), remove, update and compact commit.
+    Every written doc is orthogonal to every query token and every
+    removed or updated doc is such a doc, so each query's exact answer
+    is the same in every snapshot: each answer must equal it. Each
+    commit adopts exactly its own meta, readers running or not."""
     qids = (1, 4, 9)
     Q = np.vstack([doc_tokens(q) for q in qids]).astype(np.float64)
     null = np.linalg.svd(Q)[2][Q.shape[0]:]
@@ -240,6 +368,14 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
             "options": opts,
         }
         for q in qids
+    ] + [
+        {
+            "query": {"type": "OR", "children": [
+                {"type": "TERM", "name": "category", "value": "odd"}, tensor(q)]},
+            "k": 5,
+            "options": opts,
+        }
+        for q in qids
     ]
 
     def answer(body):
@@ -250,6 +386,8 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
         want = [answer(b) for b in bodies]
         # the fixed answer is the exact MaxSim top-5 over the base docs
         for body, got in zip(bodies, want):
+            if body["query"]["type"] == "OR":
+                continue  # pinned by staying equal to its first answer
             qv = np.asarray(body["query"].get("value") or body["query"]["children"][1]["value"])
             qv = qv.reshape(NUM_TOKENS, -1)
             pool = [d for d, _, cat, _ in base
@@ -259,7 +397,19 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
             assert got[-1][1] > 0.05  # far docs (score 0) rank below
         assert idx._serve_slot is not None and idx._serve_slot.loaded
 
-        seq0 = idx._meta_seq
+        flipped, adopted = [], []
+        real_save, real_adopt = idx._save_meta, idx._adopt
+
+        def save(meta):
+            flipped.append(meta)
+            return real_save(meta)
+
+        def adopt(meta, stat, sidecars=None):
+            adopted.append(meta)
+            real_adopt(meta, stat, sidecars)
+
+        monkeypatch.setattr(idx, "_save_meta", save)
+        monkeypatch.setattr(idx, "_adopt", adopt)
         writes = [
             lambda: idx.add(_docs_frame(
                 spark, [(d, _far_tokens(null, d), "far", f"far-{d}") for d in range(200, 204)])),
@@ -285,7 +435,7 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
             except BaseException as exc:  # noqa: BLE001 — reported below
                 errors.append(exc)
 
-        readers = [threading.Thread(target=reader, args=(o,)) for o in (0, 3)]
+        readers = [threading.Thread(target=reader, args=(o,)) for o in (0, 3, 6)]
         for t in readers:
             t.start()
         try:
@@ -297,10 +447,13 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path):
                 t.join(timeout=120)
         assert not errors, errors[0]
         assert answered[0] >= len(writes)
-        # every write committed (a reader's staleness refresh racing a
-        # flip may reload the just-written meta and bump the sequence
-        # once more)
-        assert idx._meta_seq >= seq0 + len(writes)
+        # one flip per write (auto_compact is off: no maintenance
+        # commit), and each flip adopted exactly its own candidate — no
+        # reader's staleness refresh adopted a reloaded copy
+        assert len(flipped) == len(writes)
+        assert len(adopted) == len(flipped)
+        assert all(a is f for a, f in zip(adopted, flipped))
+        assert idx._meta is flipped[-1]
         assert len(idx._segments("docs")) == 1
         assert [answer(b) for b in bodies] == want
         assert sorted(r.doc_id for r in idx._docs().select("doc_id").collect()) == (

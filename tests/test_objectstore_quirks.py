@@ -391,24 +391,21 @@ def test_cas_meta_flip_rejects_lost_update_on_object_store(spark):
     path = _path("cas")
     w1 = _S(spark, path)
     assert w1.fs.supports_cas
-    w1._save_meta()  # put-if-absent
+    w1._commit_segments([])  # put-if-absent
     assert w1._meta_stat is not None
 
     w2 = _S(spark, path)
     w2._meta = json.loads(w2.fs.open_read(path + "/_meta.json"))
     w2._meta_stat = w2._stat_meta()
-    w2._meta["n"] = 2
-    w2._save_meta()
+    w2._commit_segments([], meta={"n": 2})
 
-    w1._meta["n"] = 1
     with pytest.raises(RuntimeError, match="lost a commit race"):
-        w1._save_meta()
+        w1._commit_segments([], meta={"n": 1})
     assert json.loads(w1.fs.open_read(path + "/_meta.json"))["n"] == 2
 
     w1._refresh_meta_if_stale()
     assert w1._meta["n"] == 2
-    w1._meta["n"] = 3
-    w1._save_meta()
+    w1._commit_segments([], meta={"n": 3})
     assert json.loads(w1.fs.open_read(path + "/_meta.json"))["n"] == 3
 
     # raw primitive: put-if-absent refuses an existing object
@@ -816,15 +813,13 @@ def test_write_if_match_degrades_without_backend_etag():
 
     st = _S(None, _path("noetag"))
     assert st.fs.supports_cas  # put_if_match exists
-    st._save_meta()  # put-if-absent: backend-verifiable, real CAS
+    st._commit_segments([])  # put-if-absent: backend-verifiable, real CAS
     sid = st._meta_stat
     assert isinstance(sid[2], str) and sid[2].startswith("md5!")
     # the second and third flips carry a fabricated expected tag —
     # before the fix these raised ConditionalPutConflict every time
-    st._meta["n"] = 1
-    st._save_meta()
-    st._meta["n"] = 2
-    st._save_meta()
+    st._commit_segments([], meta={"n": 1})
+    st._commit_segments([], meta={"n": 2})
     assert json.loads(st.fs.open_read(st.path + "/_meta.json"))["n"] == 2
 
 
@@ -1068,8 +1063,7 @@ def test_build_manifests_backfills_seg_rows(spark, sf_dir, tmp_path):
     truth = dict(st._meta["seg_rows"])
     assert truth
     # simulate a pre-round-13 meta: strip the counts and re-commit
-    del st._meta["seg_rows"]
-    st._save_meta()
+    st._save_meta({k: v for k, v in st._meta.items() if k != "seg_rows"})
     st2 = DedupArtifacts.load(spark, st.path)
     assert "seg_rows" not in st2._meta
     assert st2.build_manifests() > 0

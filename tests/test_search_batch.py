@@ -422,15 +422,14 @@ def test_batch_serve_cache_reuses_and_invalidates(spark, tmp_path):
 
 
 def test_batched_probe_selection_matches_sequential_reference():
-    """_top_centroids_batch (round-7 vectorization) must select exactly
+    """kernels.top_centroids (round-7 vectorization) must select exactly
     what the sequential per-query algorithm selected — including on
     EXACT score ties (duplicated centroid vectors), where the contract
     is ascending-centroid_id tie-breaks at both the per-token
     nomination cut and the final n_probe cut. Pure numpy — no Spark."""
     import numpy as np
 
-    from lintdb_spark.index.index import Index
-    from lintdb_spark.index import SearchOptions
+    from lintdb_spark.index import SearchOptions, kernels
 
     rng = np.random.RandomState(7)
     M, dim = 50, 8
@@ -438,9 +437,6 @@ def test_batched_probe_selection_matches_sequential_reference():
     C[13] = C[4]  # exact duplicates -> guaranteed rounded-score ties
     C[37] = C[4]
     C[22] = C[9]
-
-    idx = Index.__new__(Index)
-    idx.centroids = {"f": C}
 
     def sequential(qtok, opts):
         # the pre-round-7 per-query algorithm, verbatim
@@ -463,6 +459,8 @@ def test_batched_probe_selection_matches_sequential_reference():
         # ties are dense
         qmats[3][0] = C[4]
         qmats[5][1] = C[9]
-        got = idx._top_centroids_batch("f", qmats, opts)
+        got = kernels.top_centroids(
+            C.astype(np.float64), qmats, opts.k_top_centroids, opts.n_probe
+        )
         want = [(qid, c) for qid in qmats for c in sequential(qmats[qid], opts)]
         assert got == want, (k_top, n_probe)

@@ -97,19 +97,19 @@ def test_add_update_remove_roundtrip(server):
 
 def test_empty_mutations_commit_nothing(server):
     """A remove of no ids and an update of no documents answer ok and
-    leave _meta.json and the commit sequence untouched."""
+    leave _meta.json and the adopted meta untouched."""
     import os
 
     meta_path = os.path.join(server.index.path, "_meta.json")
 
     def snapshot():
         with open(meta_path, "rb") as f:
-            return f.read(), server.index._meta_seq
+            return f.read(), server.index._meta
 
     before = snapshot()
     assert _post(server.port, "/v1/Index/remove/0", {"ids": []})["ok"]
     assert _post(server.port, "/v1/Index/update/0", {"documents": []})["ok"]
-    assert snapshot() == before
+    assert snapshot() == before and server.index._meta is before[1]
 
 
 def test_search_error_shape(server):
@@ -149,8 +149,19 @@ def _post_status(port: int, path: str, data: bytes) -> tuple[int, dict]:
         lambda b: b.update(k="ten"),
         lambda b: b.update(options={"n_probe": 4, "colbert_field": "x"}, k=None),
         lambda b: b.update(query=[1, 2]),
+        lambda b: b.update(k=-1),
+        lambda b: b.update(k=2.5),
+        lambda b: b.update(k=True),
+        lambda b: b["search_options"].update(n_probe=-1),
+        lambda b: b["search_options"].update(k_top_centroids=-2),
+        lambda b: b["search_options"].update(num_second_pass=-1),
+        lambda b: b["search_options"].update(nearest_tokens_to_fetch=-1),
     ],
-    ids=["no-query", "bad-tensor", "bad-k", "null-k", "query-not-object"],
+    ids=[
+        "no-query", "bad-tensor", "bad-k", "null-k", "query-not-object",
+        "negative-k", "float-k", "bool-k", "negative-n-probe",
+        "negative-k-top-centroids", "negative-second-pass", "negative-xtr-fetch",
+    ],
 )
 def test_malformed_search_answers_400(server, mutate):
     body = _search_body(0)

@@ -318,29 +318,26 @@ def test_conditional_put_meta_flip_rejects_lost_update(spark):
 
     w1 = _Store(spark, path)
     w1.fs.makedirs(path, exist_ok=False)
-    w1._save_meta()  # put-if-absent: the file must not exist yet
+    w1._commit_segments([])  # put-if-absent: the file must not exist yet
     assert w1._meta_stat is not None
 
     # second process on the same path
     w2 = _Store(spark, path)
     w2._meta = json.loads(w2.fs.open_read(path + "/_meta.json"))
     w2._meta_stat = w2._stat_meta()
-    w2._meta["n"] = 2
-    w2._save_meta()  # normal CAS flip
+    w2._commit_segments([], meta={"n": 2})  # normal CAS flip
 
     # w1 still holds the pre-w2 identity: its flip must be REFUSED and
     # w2's meta must survive untouched
-    w1._meta["n"] = 1
     with _pytest.raises(RuntimeError, match="lost a commit race"):
-        w1._save_meta()
+        w1._commit_segments([], meta={"n": 1})
     assert json.loads(w1.fs.open_read(path + "/_meta.json"))["n"] == 2
 
     # refresh -> retry lands (and w2's field is preserved in the
     # reloaded base)
     w1._refresh_meta_if_stale()
     assert w1._meta["n"] == 2
-    w1._meta["n"] = 3
-    w1._save_meta()
+    w1._commit_segments([], meta={"n": 3})
     assert json.loads(w1.fs.open_read(path + "/_meta.json"))["n"] == 3
 
     # the raw primitive: put-if-absent refuses an existing object
@@ -544,7 +541,7 @@ def test_save_meta_encodes_on_disk_only_and_reload_decodes():
 
     with tempfile.TemporaryDirectory() as tmp:
         st = _S(tmp)
-        st._save_meta()
+        st._save_meta(st._meta)
         assert st._meta["manifests"]["t"]["v1"] == rel  # untouched
         raw = json.loads(open(os.path.join(tmp, "_meta.json")).read())
         assert isinstance(raw["manifests"]["t"]["v1"], dict)
@@ -553,7 +550,7 @@ def test_save_meta_encodes_on_disk_only_and_reload_decodes():
         assert raw.get("manifest_rev") == 2
         st2 = _S(tmp)
         st2._meta = raw
-        st2._normalize_meta()
+        st2._normalize_meta(raw)
         assert st2._meta["manifests"]["t"]["v1"] == rel
 
 
@@ -597,16 +594,14 @@ def test_refresh_publishes_meta_only_after_normalize(spark):
         "segments": {"t": ["v1"]},
         "manifests": {"t": {"v1": list(rel)}},
     }
-    w._save_meta()
-    w._meta_stat = w._stat_meta()
+    w._commit_segments([])
 
     # an "external" commit with a coded manifest lands on disk
     other = _Store(spark, path)
     other._meta = json.loads(other.fs.open_read(path + "/_meta.json"))
-    other._normalize_meta()
+    other._normalize_meta(other._meta)
     other._meta_stat = other._stat_meta()
-    other._meta["n"] = 7
-    other._save_meta()
+    other._commit_segments([], meta={"n": 7})
 
     _Store.observed = []
     w._refresh_meta_if_stale()
