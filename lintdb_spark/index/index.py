@@ -6,8 +6,11 @@ Physical layout (SURVEY.md §7 target architecture):
 
     <path>/_schema.json                  — Schema (index.cpp:331-333)
     <path>/_meta.json                    — table versions + trained flag
-    <path>/centroids/<field>.parquet     — IVF centroids (broadcastable)
-    <path>/quantizers/<field>.json       — residual quantizer params
+    <path>/centroids/<field>-<gen>.parquet — IVF centroids (broadcastable)
+    <path>/quantizers/<field>-<gen>.json   — residual quantizer params;
+                                           one generation per (re)train,
+                                           named by the meta it was
+                                           published with
     <path>/docs/v<N>/                    — forward store, partitioned by
                                            tenant: scalars + per-colbert
                                            codes/residuals/num_tokens
@@ -53,6 +56,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,7 +81,7 @@ from lintdb_spark.index.quantizers import (
     quantizer_to_json,
 )
 from lintdb_spark.index.schema import DataType, FieldType, QuantizerType, Schema
-from lintdb_spark.index.store import SegmentStore
+from lintdb_spark.index.store import APPENDED, REPLACED, UNCHANGED, Delta, SegmentStore
 
 
 def _parse_byte_conf(value, default: int) -> int:
@@ -186,6 +190,14 @@ class _Snapshot(NamedTuple):
 class Index(SegmentStore):
     def __init__(self, spark: SparkSession, path: str, schema: Schema):
         self.schema = schema
+        # the driver-local serve state (serve.ServeState): one slot, for
+        # the (tenant, field) searched last; read lock-free, built,
+        # carried and installed under _serve_lock, which every adoption
+        # holds so the slot and the snapshot move together
+        self._serve_slot = None
+        self._serve_lock = threading.Lock()
+        self._serve_rebuilds = 0
+        self._serve_carries = 0
         super().__init__(spark, path, {"versions": {}, "trained": False}, ({}, {}))
         # per-call broadcast tracking: a THREAD-local list, non-None
         # only while that thread is inside a @_tags_broadcasts serve
@@ -195,11 +207,6 @@ class Index(SegmentStore):
         # guards the _postings_serve LRU (lookup/insert/evict) against
         # concurrent server threads
         self._postings_cache_lock = threading.Lock()
-        # the driver-local serve state (serve.ServeState): one slot, for
-        # the (tenant, field) searched last; read lock-free, built and
-        # installed under _serve_lock
-        self._serve_slot = None
-        self._serve_lock = threading.Lock()
 
     @property
     def _exact_schema_tables(self) -> tuple[str, ...]:
@@ -216,10 +223,19 @@ class Index(SegmentStore):
     centroids = property(lambda self: self._snap.centroids)
     quantizers = property(lambda self: self._snap.quantizers)
 
-    def _adopt(self, meta: dict, stat, sidecars=None) -> None:
-        self._meta_stat = stat
-        c, q = (self.centroids, self.quantizers) if sidecars is None else sidecars
-        self._snap = _Snapshot(meta, c, q)
+    def _adopt(self, meta: dict, stat, sidecars=None, carried=None) -> None:
+        # the serve state _carry derived for ``meta`` takes the slot in
+        # the same critical section: a search that misses on the slot
+        # waits here and then finds the new snapshot's state
+        with self._serve_lock:
+            self._meta_stat = stat
+            c, q = (self.centroids, self.quantizers) if sidecars is None else sidecars
+            self._snap = _Snapshot(meta, c, q)
+            if carried is not None:
+                old, self._serve_slot = self._serve_slot, carried
+                self._serve_carries += 1
+                if old is not None:
+                    old.release()
 
     def _bc(self, obj):
         """Broadcast ``obj``, registering the handle with the current
@@ -280,33 +296,42 @@ class Index(SegmentStore):
                     os.path.join(self.path, t, f"v{versions.get(t, 0)}")
                 )
             }
+        if "sidecar_files" not in meta:
+            # written before the trained-state files were versioned:
+            # each field's files carry the unversioned names
+            fields = [f.name for f in self.schema.colbert_fields()]
+            meta["sidecar_files"] = {
+                "centroids": {f: f"centroids/{f}.parquet" for f in fields},
+                "quantizers": {f: f"quantizers/{f}.json" for f in fields},
+            }
 
     def _on_meta_reloaded(self, meta: dict):
-        """Centroids + quantizers from disk, adopted with the loaded
-        meta — by load() and the cross-process staleness refresh (an
-        external RE-TRAIN commit changes these, not just the segment
-        lists; scoring new postings against old centroid matrices would
-        return garbage or IndexError)."""
+        """Centroids + quantizers from the files ``meta`` names
+        (``sidecar_files``: {"centroids" | "quantizers": {field: path
+        relative to the index}}), adopted with it — by load() and the
+        cross-process staleness refresh (an external RE-TRAIN commit
+        changes these, not just the segment lists; scoring new postings
+        against old centroid matrices would return garbage or
+        IndexError)."""
         # rebuilt from SCRATCH each (re)load: an external commit that
-        # deleted or renamed a field's sidecar must drop that field's
-        # trained state here, not leave the reader serving it forever
-        # (merging into copies of the old dicts did exactly that)
+        # dropped a field's trained state must drop it here too, not
+        # leave the reader serving it forever
         import io
 
+        files = meta["sidecar_files"]
         new_c: dict[str, np.ndarray] = {}
         new_q: dict[str, object] = {}
-        for fld in self.schema.colbert_fields():
-            cpath = os.path.join(self.path, "centroids", f"{fld.name}.parquet")
+        for name, rel in files["centroids"].items():
+            cpath = os.path.join(self.path, rel)
             if self.fs.exists(cpath):
                 pdf = pd.read_parquet(
                     io.BytesIO(self.fs.open_read(cpath))
                 ).sort_values("centroid_id")
-                new_c[fld.name] = np.vstack(pdf["vec"].to_numpy()).astype(np.float32)
-            qpath = os.path.join(self.path, "quantizers", f"{fld.name}.json")
+                new_c[name] = np.vstack(pdf["vec"].to_numpy()).astype(np.float32)
+        for name, rel in files["quantizers"].items():
+            qpath = os.path.join(self.path, rel)
             if self.fs.exists(qpath):
-                new_q[fld.name] = quantizer_from_json(
-                    self.fs.open_read(qpath).decode()
-                )
+                new_q[name] = quantizer_from_json(self.fs.open_read(qpath).decode())
         return new_c, new_q
 
     def copy_trained(self, path: str) -> "Index":
@@ -321,10 +346,14 @@ class Index(SegmentStore):
     def _save_sidecars(self, centroids: dict, quantizers: dict, trained: bool) -> None:
         """A9 save(): schema + centroids + quantizer params
         (index.cpp:317-357), then ONE flip publishes ``trained`` and
-        adopts the new dicts with its meta — until then searches score
-        with the adopted snapshot's. Heavy (rewrites centroid
-        matrices): create/train/set-quantizer time only."""
+        the new files' names and adopts the new dicts with its meta —
+        until then searches score with the adopted snapshot's. Each
+        call writes a new generation of files (``<field>-<gen>``), so
+        a flip that fails leaves every meta paired with the files it
+        names; vacuum collects superseded generations. Heavy (rewrites
+        centroid matrices): create/train/set-quantizer time only."""
         import io
+        import uuid
 
         self.fs.write_atomic(
             os.path.join(self.path, "_schema.json"),
@@ -335,26 +364,56 @@ class Index(SegmentStore):
         # sidecars first, each atomically, THEN the _meta.json flip:
         # the meta flip is the one commit point a cross-process reader
         # keys its staleness refresh on, so every byte the refresh will
-        # reload must already be durable when the flip lands (flipping
-        # first let a racing reader load OLD or torn centroid files and
-        # pin them until the next commit)
+        # reload must already be durable when the flip lands
+        gen = uuid.uuid4().hex[:12]
+        files: dict[str, dict[str, str]] = {"centroids": {}, "quantizers": {}}
         for name, C in centroids.items():
             buf = io.BytesIO()
             pd.DataFrame(
                 {"centroid_id": np.arange(len(C)), "vec": list(C)}
             ).to_parquet(buf)
-            self.fs.write_atomic(
-                os.path.join(self.path, "centroids", f"{name}.parquet"),
-                buf.getvalue(),
-            )
+            rel = files["centroids"][name] = f"centroids/{name}-{gen}.parquet"
+            self.fs.write_atomic(os.path.join(self.path, rel), buf.getvalue())
         for name, q in quantizers.items():
+            rel = files["quantizers"][name] = f"quantizers/{name}-{gen}.json"
             self.fs.write_atomic(
-                os.path.join(self.path, "quantizers", f"{name}.json"),
-                quantizer_to_json(q).encode(),
+                os.path.join(self.path, rel), quantizer_to_json(q).encode()
             )
         self._commit_segments(
-            [], meta={"trained": trained}, sidecars=(centroids, quantizers)
+            [],
+            meta={"trained": trained, "sidecar_files": files},
+            sidecars=(centroids, quantizers),
         )
+
+    def vacuum(self, min_age_s: float = 3600.0) -> list[str]:
+        """SegmentStore.vacuum, plus the trained-state files no longer
+        named by the committed meta (superseded generations, the files
+        of a re-train whose flip failed), under the same age guard: a
+        re-train in flight has written files its flip does not yet
+        name."""
+        import time as _time
+
+        removed = super().vacuum(min_age_s)
+        live = {
+            rel
+            for per in self._meta.get("sidecar_files", {}).values()
+            for rel in per.values()
+        }
+        now = _time.time()
+        for sub in ("centroids", "quantizers"):
+            root = os.path.join(self.path, sub)
+            if not self.fs.isdir(root):
+                continue
+            for child in self.fs.listdir(root):
+                rel = f"{sub}/{child}"
+                full = os.path.join(root, child)
+                try:
+                    if rel not in live and now - self.fs.getmtime(full) >= min_age_s:
+                        self.fs.unlink(full)
+                        removed.append(rel)
+                except OSError:
+                    continue  # a concurrent writer or vacuum touched it
+        return removed
 
     # ---------------- table paths / segments ----------------
 
@@ -564,7 +623,10 @@ class Index(SegmentStore):
                 finally:
                     out.unpersist()
                 self._commit_segments(
-                    staged, stream_batch=idempotency_token, replace=rewrites
+                    staged,
+                    stream_batch=idempotency_token,
+                    replace=rewrites,
+                    delta=REPLACED if replace else APPENDED,
                 )
             finally:
                 for b in ingest_bcs:
@@ -700,6 +762,7 @@ class Index(SegmentStore):
                     [(t, df.filter(~cond)) for t, df in self._committed()],
                     rewrite=True,
                 ),
+                delta=Delta(removed=(int(tenant), ids)),
             )
 
     def update(self, docs_df: DataFrame) -> None:
@@ -777,7 +840,9 @@ class Index(SegmentStore):
         dirs."""
         with self._writer_lock():
             self._commit_segments(
-                [], replace=self._stage(self._committed(), rewrite=True)
+                [],
+                replace=self._stage(self._committed(), rewrite=True),
+                delta=UNCHANGED,
             )
 
     def get_mapping(self, tenant: int, doc_id: int, field: str | None = None) -> list[int]:
@@ -811,7 +876,7 @@ class Index(SegmentStore):
             if oq is None or quantizer_to_json(q) != quantizer_to_json(oq):
                 raise ValueError(f"merge requires identical quantizers (field {name})")
         with self._writer_lock():
-            self._commit_segments(self._stage(self._committed(other)))
+            self._commit_segments(self._stage(self._committed(other)), delta=APPENDED)
 
     # ---------------- search (C1-C9, D1-D8) ----------------
 
@@ -1256,21 +1321,34 @@ class Index(SegmentStore):
             default=32 * 1024 * 1024,
         )
 
-    def _serve_estimate(self, docs: DataFrame, field: str, quant) -> int:
-        """Driver-memory estimate of ``docs`` as a serve state: per
+    def _estimate(self, toks: int, nd: int, text: int, quant) -> int:
+        """Driver-memory estimate of a serve state of ``nd`` docs with
+        ``toks`` tokens and ``text`` UTF-8 bytes of TEXT values: per
         token the code bytes, the int64 centroid id and its postings
         entry; per doc 256 B of Python objects (code view, residual
         bytes) plus the doc_id and scalar columns as Arrow holds them
         (8 B per fixed-width value, a 4 B offset plus the UTF-8 bytes
-        per TEXT value). One distributed job with no shuffle: the
-        needed columns are scanned into a noop sink while an
-        Observation sums them (a global aggregate would add a shuffle
-        stage, and with AQE a second job)."""
+        per TEXT value)."""
+        fields = self.schema.scalar_fields()
+        n_text = len(self._text_scalars())
+        per_doc = 256 + 8 + 8 * (len(fields) - n_text) + 4 * n_text
+        return toks * (quant.code_size + 16) + nd * per_doc + text
+
+    def _text_scalars(self) -> list[str]:
+        return [
+            f.name for f in self.schema.scalar_fields()
+            if f.data_type == DataType.TEXT.value
+        ]
+
+    def _serve_estimate(self, docs: DataFrame, field: str, quant) -> int:
+        """_estimate of ``docs`` as a serve state, in one distributed
+        job with no shuffle: the needed columns are scanned into a noop
+        sink while an Observation sums them (a global aggregate would
+        add a shuffle stage, and with AQE a second job)."""
         from pyspark.sql import Observation
 
         nt_c = f"{field}__num_tokens"
-        fields = self.schema.scalar_fields()
-        texts = [f.name for f in fields if f.data_type == DataType.TEXT.value]
+        texts = self._text_scalars()
         aggs = [F.sum(nt_c).alias("toks"), F.count(F.lit(1)).alias("nd")]
         if texts:
             aggs.append(
@@ -1286,12 +1364,21 @@ class Index(SegmentStore):
             .save()
         )
         got = obs.get
-        per_doc = 256 + 8 + 8 * (len(fields) - len(texts)) + 4 * len(texts)
-        return (
-            int(got["toks"] or 0) * (quant.code_size + 16)
-            + int(got["nd"] or 0) * per_doc
-            + int(got.get("text") or 0)
+        return self._estimate(
+            int(got["toks"] or 0), int(got["nd"] or 0), int(got.get("text") or 0), quant
         )
+
+    @property
+    def serve_rebuilds(self) -> int:
+        """Serve states built with Spark jobs (the size estimate, then
+        an Arrow collect of the tenant's docs when they fit)."""
+        return self._serve_rebuilds
+
+    @property
+    def serve_carries(self) -> int:
+        """Serve states carried across an in-process commit by its
+        delta, with no Spark job."""
+        return self._serve_carries
 
     def _serve_state(
         self, tenant: int, field: str, snap: _Snapshot | None = None
@@ -1300,20 +1387,26 @@ class Index(SegmentStore):
         (default: the adopted one).
 
         One slot holds the state of the (tenant, field) searched last.
-        It is current while its key matches and it was built from
-        ``snap``'s meta dict: every commit adopts a new one, so the
-        first search after a commit rebuilds, lazily — never inside
-        the commit. The doc data is only loaded when the
-        size estimate fits the broadcast threshold, which so bounds the
-        driver memory the slot holds. Building takes at most two Spark jobs (the
-        estimate, then one Arrow collect of the tenant's doc rows).
+        It is current while its key matches and it belongs to ``snap``'s
+        meta dict, or to the adopted one (a commit that landed after the
+        caller captured ``snap``: the state is still one committed
+        snapshot). An in-process commit that names its delta carries
+        the slot's state to the new snapshot as it adopts it (_carry);
+        train, set_coarse_quantizer, an external commit adopted by the
+        staleness refresh and a commit without a delta leave the slot
+        stale, and the first search after them rebuilds it, lazily.
+        The doc data is only loaded when the size estimate fits the
+        broadcast threshold, which so bounds the driver memory the slot
+        holds. A rebuild takes at most two Spark jobs (the estimate,
+        then one Arrow collect of the tenant's doc rows).
 
-        Concurrency: the slot is read without a lock; builds run under
-        ``_serve_lock`` and are installed by one reference assignment,
-        so a concurrent search sees the old state or the new one, never
-        a partial build. The replaced state is released (its owned
-        broadcast unpersisted); a search still holding it keeps reading
-        its data. Docs, centroids and quantizer all come from ``snap``."""
+        Concurrency: the slot is read without a lock; rebuilds and
+        adoptions run under ``_serve_lock`` and install a state by one
+        reference assignment, so a concurrent search sees the old state
+        or the new one, never a partial build. The replaced state is
+        released (its owned broadcast unpersisted); a search still
+        holding it keeps reading its data. Docs, centroids and
+        quantizer all come from ``snap``."""
         snap = snap or self._snap
         key = (int(tenant), field)
         bmax = self._bcast_max()
@@ -1322,7 +1415,7 @@ class Index(SegmentStore):
             return (
                 st is not None
                 and st.key == key
-                and st.meta is snap.meta
+                and (st.meta is snap.meta or st.meta is self._meta)
                 and (st.loaded or st.est_bytes > bmax)
             )
 
@@ -1337,22 +1430,96 @@ class Index(SegmentStore):
             docs = self._docs(snap.meta).filter(F.col("tenant") == int(tenant))
             same = st is not None and st.key == key and st.meta is snap.meta
             est = st.est_bytes if same else self._serve_estimate(docs, field, quant)
-            table = None
+            rows = None
             if est <= bmax:
-                table = docs.select(
-                    "doc_id",
-                    f"{field}__codes",
-                    f"{field}__residuals",
-                    f"{field}__num_tokens",
-                    *[f.name for f in self.schema.scalar_fields()],
-                ).toArrow()
+                rows = serve.doc_rows(
+                    docs.select(
+                        "doc_id",
+                        f"{field}__codes",
+                        f"{field}__residuals",
+                        f"{field}__num_tokens",
+                        *[f.name for f in self.schema.scalar_fields()],
+                    ).toArrow(),
+                    field,
+                )
             new = serve.ServeState(
-                key, snap.meta, est, snap.centroids[field], quant, field, table
+                key, snap.meta, est, snap.centroids[field], quant, rows
             )
+            self._serve_rebuilds += 1
             self._serve_slot = new
             if st is not None:
                 st.release()
             return new
+
+    def _carry(self, meta: dict, staged: list[tuple[str, str]], delta: Delta):
+        """The serve state of the candidate ``meta``, carried from the
+        slot's state of the adopted (parent) snapshot by ``delta``: the
+        removed or replaced keys leave, the rows of the appended docs
+        segments join, read in the driver (_read_appended, no Spark
+        job), and ``est_bytes`` is _estimate over the arrays in hand.
+        A carried state over the broadcast threshold is unloaded, as a
+        rebuilt one is. None — the next search rebuilds — when the
+        slot holds no loaded state of the parent, or the carry fails."""
+        st = self._serve_slot
+        if st is None or not st.loaded or st.meta is not self._meta:
+            return None
+        tenant, field = st.key
+        try:
+            new = None
+            if delta.appended:
+                docs_segs = [s for t, s in staged if t == "docs"]
+                new = self._read_appended(meta, docs_segs, tenant, field, st.scalars.schema)
+            drop = ()
+            if delta.removed is not None and int(delta.removed[0]) == tenant:
+                drop = delta.removed[1]
+            elif delta.replaces and new is not None:
+                drop = new.doc_ids
+            rows = serve.carry_rows(st.rows, drop, new)
+            text = sum(
+                pc.sum(pc.binary_length(rows.scalars.column(c))).as_py() or 0
+                for c in self._text_scalars()
+            )
+            est = self._estimate(int(rows.nts.sum()), len(rows.doc_ids), text, st.quant)
+        except Exception:  # noqa: BLE001 — never fail the commit: rebuild
+            logging.getLogger("lintdb_spark.index").warning(
+                "serve state not carried; the next search rebuilds it", exc_info=True
+            )
+            return None
+        return serve.ServeState(
+            st.key, meta, est, st.C, st.quant, rows if est <= self._bcast_max() else None
+        )
+
+    def _read_appended(
+        self, meta: dict, segs: list[str], tenant: int, field: str, schema
+    ) -> serve.DocRows | None:
+        """The ``tenant`` rows of the committed-in-``meta`` docs
+        segments ``segs`` as DocRows, scalars typed as ``schema`` (the
+        parent state's): each segment's ``tenant=<t>/`` files from its
+        manifest, read with pyarrow through the store's filesystem.
+        None when no segment holds the tenant."""
+        import io
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        vec = [f"{field}__codes", f"{field}__residuals", f"{field}__num_tokens"]
+        cols = ["doc_id", *vec, *schema.names[1:]]
+        prefix = f"tenant={int(tenant)}/"
+        parts = []
+        for seg in segs:
+            root = os.path.join(self.path, "docs", seg)
+            for rel in meta["manifests"]["docs"][seg]:
+                if rel.replace(os.sep, "/").startswith(prefix):
+                    parts.append(pq.read_table(
+                        io.BytesIO(self.fs.open_read(os.path.join(root, rel))),
+                        columns=cols,
+                        coerce_int96_timestamp_unit="us",
+                    ))
+        if not parts:
+            return None
+        t = pa.concat_tables(parts)
+        rows = serve.doc_rows(t.select(cols), field)
+        return rows._replace(scalars=rows.scalars.cast(schema))
 
     @_tags_broadcasts
     def search_xtr(
@@ -1622,10 +1789,13 @@ class Index(SegmentStore):
         # is tighter than the threshold suggests.
         state = self._local_state(tenant, field, snap)
         if state is not None:
+            # the state may belong to a commit adopted after ``snap``
+            # was captured: the filter reads the state's own snapshot
             sc = self.spark.sparkContext
+            use_adc = self._use_adc(state.quant, opts)
             mask = None
             if doc_filter is not None:
-                keep = self._filter_doc_ids(tenant, doc_filter, snap.meta).toArrow()
+                keep = self._filter_doc_ids(tenant, doc_filter, state.meta).toArrow()
                 mask = np.isin(state.doc_ids, keep.column("doc_id").to_numpy())
             bc_state = state.broadcast(sc, self._bc)
             bc_q = self._bc((qmats, mask))

@@ -5,10 +5,14 @@ its own process from posting lists hot in RocksDB's block cache
 (index.cpp:360-405; REPOSE, ICDE 2021, scores against a local index
 and merges top-k at the driver).
 
-A ``ServeState`` is built once per committed snapshot (the Index keys
-it on the tenant, the field and the identity of the adopted meta dict)
+A ``ServeState`` belongs to one committed snapshot (the Index keys it
+on the tenant, the field and the identity of the adopted meta dict)
 and its data is never mutated after, so a search that grabbed one
-reads exactly one generation. It holds:
+reads exactly one generation. It is built from Spark once, then
+carried from commit to commit: an in-process commit that names its
+delta (rows appended, ids removed, keys replaced, or nothing) derives
+the next snapshot's state from the parent's (``carry_rows``). It
+holds:
 
 - the tenant's doc blobs (codes, residual bytes, n_tokens per doc);
 - postings by centroid, inverted from the docs' codes (the postings
@@ -25,6 +29,7 @@ once (``broadcast``) and calls it there once per query.
 from __future__ import annotations
 
 import threading
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -33,44 +38,98 @@ import pyarrow.compute as pc
 from lintdb_spark.index import kernels
 
 
-class ServeState:
-    """One (tenant, field) serving snapshot. ``table`` is the tenant's
-    doc rows as Arrow (doc_id, codes, residuals, num_tokens, scalar
-    columns), or None when the size estimate is over the broadcast
-    threshold — such a state only remembers ``est_bytes``."""
+class DocRows(NamedTuple):
+    """One tenant's doc rows as a serve state holds them, doc_id
+    ascending: ``code_arrs`` and ``blobs`` hold one entry per doc (its
+    centroid codes and residual bytes), ``scalars`` is an Arrow table
+    of doc_id and the scalar columns."""
 
-    def __init__(self, key, meta, est_bytes, C, quant, field, table=None):
+    doc_ids: np.ndarray
+    code_arrs: list
+    blobs: list
+    nts: np.ndarray
+    scalars: pa.Table
+
+
+def doc_rows(table: pa.Table, field: str) -> DocRows:
+    """The DocRows of an Arrow table of (doc_id, <field>__codes,
+    <field>__residuals, <field>__num_tokens, scalar columns), sorted by
+    doc_id."""
+    table = table.sort_by("doc_id")
+    # per-doc code arrays: zero-copy views into one flat buffer
+    codes = table.column(f"{field}__codes").combine_chunks()
+    flat = codes.flatten().to_numpy().astype(np.int64, copy=False)
+    offs = codes.offsets.to_numpy()
+    offs = offs - offs[0]
+    return DocRows(
+        table.column("doc_id").to_numpy().astype(np.int64),
+        [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)],
+        table.column(f"{field}__residuals").to_pylist(),
+        table.column(f"{field}__num_tokens").to_numpy().astype(np.int64),
+        table.drop_columns(
+            [f"{field}__codes", f"{field}__residuals", f"{field}__num_tokens"]
+        ),
+    )
+
+
+def carry_rows(old: DocRows, drop, new: DocRows | None) -> DocRows:
+    """``old`` minus the docs whose id is in ``drop``, plus ``new``,
+    doc_id ascending (stable: a kept row sorts before an appended row
+    with its id). The kept entries are shared with ``old``, which is
+    returned as is when nothing changes."""
+    if new is None and not len(drop):
+        return old
+    keep = np.flatnonzero(~np.isin(old.doc_ids, np.fromiter(drop, dtype=np.int64)))
+    src = [(old, keep)] + ([] if new is None else [(new, np.arange(len(new.doc_ids)))])
+    doc_ids = np.concatenate([r.doc_ids[idx] for r, idx in src])
+    order = np.argsort(doc_ids, kind="stable")
+
+    def cat(name):
+        vals = [getattr(r, name)[i] for r, idx in src for i in idx]
+        return [vals[i] for i in order]
+
+    return DocRows(
+        doc_ids[order],
+        cat("code_arrs"),
+        cat("blobs"),
+        np.concatenate([r.nts[idx] for r, idx in src])[order],
+        pa.concat_tables([r.scalars.take(pa.array(idx, type=pa.int64())) for r, idx in src])
+        .take(pa.array(order, type=pa.int64()))
+        .combine_chunks(),
+    )
+
+
+class ServeState:
+    """One (tenant, field) serving snapshot. ``rows`` holds the
+    tenant's docs (DocRows), or is None when the size estimate is over
+    the broadcast threshold — such a state only remembers
+    ``est_bytes``."""
+
+    def __init__(self, key, meta, est_bytes, C, quant, rows: DocRows | None = None):
         self.key, self.meta, self.est_bytes = key, meta, est_bytes
         self.C, self.quant = C, quant
         self.C64 = C.astype(np.float64)
-        self.loaded = table is not None
+        self.loaded = rows is not None
         self._bc = None
         self._released = False
         self._bc_lock = threading.Lock()
-        if table is None:
+        if rows is None:
             return
-        table = table.sort_by("doc_id")
-        self.doc_ids = table.column("doc_id").to_numpy().astype(np.int64)
-        # per-doc code arrays: zero-copy views into one flat buffer
-        codes = table.column(f"{field}__codes").combine_chunks()
-        flat = codes.flatten().to_numpy().astype(np.int64, copy=False)
-        offs = codes.offsets.to_numpy()
-        offs = offs - offs[0]
-        self.code_arrs = [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-        self.blobs = table.column(f"{field}__residuals").to_pylist()
-        self.nts = table.column(f"{field}__num_tokens").to_numpy().astype(np.int64)
-        self.scalars = table.drop_columns(
-            [f"{field}__codes", f"{field}__residuals", f"{field}__num_tokens"]
-        )
+        self.doc_ids, self.code_arrs, self.blobs, self.nts, self.scalars = rows
         # postings CSR: distinct (centroid, row) pairs, rows ascending
         # within each centroid's list
         n = len(self.doc_ids)
-        lens = np.diff(offs)
+        lens = np.fromiter(map(len, self.code_arrs), dtype=np.int64, count=n)
+        flat = np.concatenate(self.code_arrs) if n else np.empty(0, dtype=np.int64)
         pairs = np.unique(flat * max(n, 1) + np.repeat(np.arange(n, dtype=np.int64), lens))
         cents = pairs // max(n, 1)
         self.post_rows = pairs % max(n, 1)
         self.post_ptr = np.zeros(C.shape[0] + 1, dtype=np.int64)
         np.cumsum(np.bincount(cents, minlength=C.shape[0]), out=self.post_ptr[1:])
+
+    @property
+    def rows(self) -> DocRows:
+        return DocRows(self.doc_ids, self.code_arrs, self.blobs, self.nts, self.scalars)
 
     def candidates(self, probes) -> np.ndarray:
         """Rows (ascending, so doc_id ascending) of the docs in any

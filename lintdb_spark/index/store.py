@@ -17,7 +17,10 @@ tokens and stale takeover; readers follow external commits by statting
 the meta file per serve call. The adopted meta dict is the snapshot
 token: each commit or refresh installs a new one, with its sidecar
 state, by one reference assignment, and every cache keys on its
-identity. Each commit also records its segments'
+identity. A commit that names its ``Delta`` also hands in-memory state
+built for the parent snapshot to the new one (``_carry``; the Index's
+serve state) instead of leaving it to be rebuilt. Each commit also
+records its segments'
 parquet leaf files (the manifest), so readers open tables without any
 partition-discovery listing job.
 
@@ -33,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -125,6 +129,27 @@ def _seg_level(seg: str) -> int | None:
         if head.isdigit():
             return int(head)
     return 0
+
+
+class Delta(NamedTuple):
+    """The change a commit makes to a store's rows, named by the
+    committing call so that in-memory state built for the parent
+    snapshot (the Index's serve state) is carried to the new snapshot
+    instead of rebuilt. ``appended``: the commit's staged segments hold
+    new rows; ``replaces``: those rows replace the committed rows with
+    their keys (update); ``removed``: a ``(tenant, ids)`` pair whose
+    rows leave. ``Delta()`` changes no row (compaction). A commit that
+    names no delta is carried by nothing: such state is rebuilt."""
+
+    appended: bool = False
+    replaces: bool = False
+    removed: tuple | None = None
+
+
+APPENDED = Delta(appended=True)
+REPLACED = Delta(appended=True, replaces=True)
+UNCHANGED = Delta()
+
 
 # serializes the parallel-discovery-threshold bump in
 # _read_manifest_files across ALL stores in the process — the conf is
@@ -219,13 +244,21 @@ class SegmentStore:
         with (the Index's trained centroid/quantizer sidecars); the
         result is adopted together with the meta (_adopt)."""
 
-    def _adopt(self, meta: dict, stat, sidecars=None) -> None:
+    def _adopt(self, meta: dict, stat, sidecars=None, carried=None) -> None:
         """Install a committed meta (and ``sidecars``, subclass state
         published with it) by one reference assignment, with the meta
         file's identity ``stat``; callers past __init__ hold
-        _refresh_lock."""
+        _refresh_lock. ``carried`` is what _carry derived for this
+        meta."""
         self._meta_stat = stat
         self._meta = meta
+
+    def _carry(self, meta: dict, staged: list[tuple[str, str]], delta: Delta):
+        """Hook: derive in-memory state for the candidate ``meta`` from
+        the state held for the adopted one, by the commit's ``delta``
+        and its ``staged`` segments; runs before the flip and its
+        result is adopted with ``meta``. Default: nothing to carry."""
+        return None
 
     def _load_meta(self, stat) -> None:
         """Read, normalize and adopt the committed meta and sidecars.
@@ -516,6 +549,7 @@ class SegmentStore:
         retire: dict[str, list[str]] | None = None,
         meta: dict | None = None,
         sidecars=None,
+        delta: Delta | None = None,
     ) -> None:
         """THE commit point of both stores and the only caller of
         _save_meta: every mutation, every maintenance rewrite, index
@@ -534,7 +568,11 @@ class SegmentStore:
         lists); ``stream_batch`` (add's idempotency token) likewise —
         segments, counters and replay watermark commit together or
         not at all. ``sidecars`` is subclass state adopted with the
-        meta (the Index's new centroids and quantizers).
+        meta (the Index's new centroids and quantizers). ``delta`` names
+        the commit's change to the rows (Delta): _carry derives the new
+        snapshot's in-memory state from it (the Index's serve state)
+        and the adoption installs it; without one that state is rebuilt
+        on its next use.
 
         The candidate is a COPY, adopted only after the durable flip
         succeeds: a failed flip (ENOSPC, fsync error) leaves self._meta
@@ -574,8 +612,9 @@ class SegmentStore:
             new_meta.setdefault("stream_batches", {})[key] = int(bid)
         if meta:
             new_meta.update(copy.deepcopy(meta))
+        carried = None if delta is None else self._carry(new_meta, staged, delta)
         with self._refresh_lock:
-            self._adopt(new_meta, self._save_meta(new_meta), sidecars)
+            self._adopt(new_meta, self._save_meta(new_meta), sidecars, carried)
 
     def _run_writes(self, thunks: list) -> None:
         """Run independent segment-write thunks through a small
@@ -830,7 +869,9 @@ class SegmentStore:
                             added += 1
             if added:
                 stats = {k: v for k, v in (("seg_rows", sr), ("seg_bytes", sb)) if v}
-                self._commit_segments([], meta={"manifests": man, **stats})
+                self._commit_segments(
+                    [], meta={"manifests": man, **stats}, delta=UNCHANGED
+                )
             return added
 
     def _read_manifest_files(
@@ -1499,7 +1540,7 @@ class SegmentStore:
                     lv += 1
             if not staged and not any(retire.values()):
                 return {}  # nothing merged, nothing dropped
-            self._commit_segments(staged, retire=retire, meta=meta)
+            self._commit_segments(staged, retire=retire, meta=meta, delta=UNCHANGED)
         return merged
 
     def _auto_maintain(self) -> dict:

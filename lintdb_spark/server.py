@@ -22,10 +22,13 @@ Failures answer ``{"error": ...}``: 400 for a malformed request (a
 body that is not JSON, a non-integer tenant; for search a query node
 the translator rejects, options that do not construct SearchOptions
 (negative counts included), a k that is not a non-negative integer;
-for mutations ``documents`` or ``ids`` that is not a
-list, a document without an integer ``id``, an unknown field name, a
-tensor whose length is not a multiple of the field's dimensions), 500
-for anything else.
+for mutations ``documents``, ``ids`` or a document's ``fields`` that
+is not a list, a document without an integer ``id``, a field entry that
+is not an object with a ``name`` and a ``value``, an unknown field
+name, a missing tensor field, a tensor with non-numeric values or
+whose length is not a positive multiple of the field's dimensions, a
+scalar value that does not match its field's type), 500 for anything
+else.
 
 Query-node JSON translation mirrors
 `server/controllers/v1/query_node_translator.h:12-52` (TERM, TENSOR,
@@ -216,7 +219,8 @@ class IndexServer:
     def _documents_df(self, tenant: int, documents: list[dict]):
         """Document JSON -> one ingest DataFrame (Document::fromJson
         analogue): tensor fields arrive flat and are reshaped by the
-        schema's declared dimensions."""
+        schema's declared dimensions. Every malformed document raises
+        BadRequest here, before anything is written."""
         schema = self.index.schema
         dims = {f.name: f.parameters.dimensions for f in schema.colbert_fields()}
         names = {f.name for f in schema.scalar_fields()} | set(dims)
@@ -225,26 +229,40 @@ class IndexServer:
             if not isinstance(d, dict) or "id" not in d:
                 raise BadRequest(f"document without an id: {d!r:.80}")
             row = {"tenant": tenant, "doc_id": _int(d["id"], "document id")}
-            for f in d.get("fields", []):
+            for f in _list(d, "fields"):
+                if not isinstance(f, dict) or "name" not in f or "value" not in f:
+                    raise BadRequest(f"field without a name and a value: {f!r:.80}")
                 name, value = f["name"], f["value"]
                 if name not in names:
                     raise BadRequest(f"unknown field: {name!r}")
                 if name in dims:
-                    flat = np.asarray(value, dtype=np.float32)
-                    if flat.size % dims[name]:
+                    try:
+                        flat = np.asarray(value, dtype=np.float32)
+                    except (TypeError, ValueError) as exc:
+                        raise BadRequest(
+                            f"tensor field {name!r} has non-numeric values: {exc}"
+                        ) from exc
+                    if flat.size == 0 or flat.size % dims[name]:
                         raise BadRequest(
                             f"tensor field {name!r} has {flat.size} values, not a "
-                            f"multiple of its {dims[name]} dimensions"
+                            f"positive multiple of its {dims[name]} dimensions"
                         )
                     row[name] = [
                         [float(x) for x in tok] for tok in flat.reshape(-1, dims[name])
                     ]
                 else:
                     row[name] = value
+            missing = sorted(set(dims) - set(row))
+            if missing:
+                raise BadRequest(f"document {row['doc_id']} has no tensor for {missing}")
             rows.append(row)
-        return self.index.spark.createDataFrame(
-            rows, schema=schema.ingest_spark_schema()
-        )
+        try:
+            # the schema check refuses a scalar value of the wrong type
+            return self.index.spark.createDataFrame(
+                rows, schema=schema.ingest_spark_schema()
+            )
+        except TypeError as exc:
+            raise BadRequest(f"field value does not match its type: {exc}") from exc
 
     # ---- lifecycle ----
 

@@ -325,6 +325,44 @@ def test_load_migrates_pre_segment_meta(spark, tmp_path):
     assert not any("/v" in r for r in removed)
 
 
+def test_load_reads_unversioned_legacy_sidecars(spark, tmp_path):
+    """A meta written before the trained-state files were versioned
+    names none: load reads centroids/<field>.parquet and
+    quantizers/<field>.json, vacuum keeps them (they are live), and the
+    next re-train publishes a versioned generation."""
+    import json as _json
+    import os
+    import shutil
+
+    idx = Index.create(spark, str(tmp_path / "legacy_sc"), make_schema("binarizer"))
+    docs = make_docs(spark, range(8))
+    idx.train(docs)
+    idx.add(docs)
+    want = search_ids(idx, VectorQuery("colbert", doc_tokens(3)))
+    meta_path = os.path.join(idx.path, "_meta.json")
+    with open(meta_path) as f:
+        meta = _json.load(f)
+    for rel, legacy in (
+        (meta["sidecar_files"]["centroids"]["colbert"], "centroids/colbert.parquet"),
+        (meta["sidecar_files"]["quantizers"]["colbert"], "quantizers/colbert.json"),
+    ):
+        shutil.move(os.path.join(idx.path, rel), os.path.join(idx.path, legacy))
+    del meta["sidecar_files"]
+    with open(meta_path, "w") as f:
+        _json.dump(meta, f)
+
+    old = Index.load(spark, idx.path)
+    np.testing.assert_array_equal(old.centroids["colbert"], idx.centroids["colbert"])
+    assert search_ids(old, VectorQuery("colbert", doc_tokens(3))) == want
+    assert old.vacuum(min_age_s=0) == []
+    old.set_coarse_quantizer("colbert", idx.centroids["colbert"])
+    assert old._meta["sidecar_files"]["centroids"]["colbert"] != "centroids/colbert.parquet"
+    assert sorted(old.vacuum(min_age_s=0)) == [
+        "centroids/colbert.parquet", "quantizers/colbert.json"
+    ]
+    assert search_ids(Index.load(spark, idx.path), VectorQuery("colbert", doc_tokens(3))) == want
+
+
 def test_load_migrates_add_only_legacy_index(spark, tmp_path):
     """An ADD-ONLY pre-segment index never wrote versions (the old
     add() appended into implicit v0 dirs) — meta is {'versions': {},

@@ -332,36 +332,37 @@ def test_local_search_follows_commits_with_few_jobs(spark, tmp_path):
     assert got[0][0] == 3 and jobs == 0
     old = weakref.ref(idx._serve_slot)
 
+    # each commit carries the serve state: the first search after it
+    # runs no Spark job
     idx.add(make_docs(spark, [500]))
     got, jobs = _jobs(spark, lambda: top(500))
-    assert got[0][0] == 500
-    assert jobs <= 2  # one serve-state rebuild: estimate + Arrow collect
+    assert got[0][0] == 500 and jobs == 0
     gc.collect()
     assert old() is None  # the replaced state is not kept alive
 
     idx.update(make_docs(spark, [500]).withColumn("title", F.lit("retitled")))
-    got = top(500)
-    assert got[0][0] == 500 and got[0][2] == "retitled"
+    got, jobs = _jobs(spark, lambda: top(500))
+    assert got[0][0] == 500 and got[0][2] == "retitled" and jobs == 0
 
     idx.remove(0, [500])
-    assert all(d != 500 for d, _, _ in top(500, k=NUM))
+    got, jobs = _jobs(spark, lambda: top(500, k=NUM))
+    assert all(d != 500 for d, _, _ in got) and jobs == 0
 
 
-def test_concurrent_searches_share_one_rebuild(spark, tmp_path, monkeypatch):
+def test_concurrent_searches_share_one_rebuild(spark, tmp_path):
     idx = build(spark, tmp_path / "conc", "none")
     opts = SearchOptions(**BASE, centroid_score_threshold=0.0)
     q = VectorQuery("colbert", doc_tokens(9))
     idx.search(0, q, k=5, opts=opts).collect()
+    assert (idx.serve_carries, idx.serve_rebuilds) == (0, 1)
+    # an add carries the state: no search rebuilds it
     idx.add(make_docs(spark, [600]))
+    assert rows(idx.search(0, VectorQuery("colbert", doc_tokens(600)), k=1, opts=opts))[0][0] == 600
+    assert (idx.serve_carries, idx.serve_rebuilds) == (1, 1)
+    # a re-train's commit must rebuild: the concurrent first searches
+    # after it share one rebuild
+    idx.set_coarse_quantizer("colbert", idx.centroids["colbert"][::-1].copy())
 
-    builds = []
-    real = Index._serve_estimate
-
-    def counting(self, *a, **kw):
-        builds.append(1)
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(Index, "_serve_estimate", counting)
     n = 2 * (os.cpu_count() or 4)
     barrier = threading.Barrier(n)
     results, errors = [None] * n, []
@@ -385,7 +386,7 @@ def test_concurrent_searches_share_one_rebuild(spark, tmp_path, monkeypatch):
         sys.setswitchinterval(old_switch)
     assert not any(t.is_alive() for t in threads)
     assert not errors
-    assert len(builds) == 1
+    assert (idx.serve_carries, idx.serve_rebuilds) == (1, 2)
     assert all(r == results[0] for r in results)
     # the state every thread read is the post-commit snapshot
     state = idx._serve_slot

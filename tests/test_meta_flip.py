@@ -15,8 +15,11 @@ the dedup artifact store builds its candidate meta in
 - a search during a re-train scores with the trained state adopted
   with its snapshot, and a Spark-plan search opens every table from
   the snapshot it captured;
+- a re-train whose flip fails leaves every meta on disk paired with
+  the trained-state files it names;
 - REST searches answer from one committed snapshot while add, remove,
-  update and both compactions run."""
+  update and both compactions run, and no write makes a reader
+  rebuild the serve state."""
 
 from __future__ import annotations
 
@@ -116,9 +119,9 @@ def test_refresh_in_the_flip_window_reloads_nothing(spark, tmp_path, monkeypatch
         flipped.append(meta)
         return real_save(meta)
 
-    def adopt(meta, stat, sidecars=None):
+    def adopt(meta, *rest):
         adopted.append(meta)
-        real_adopt(meta, stat, sidecars)
+        real_adopt(meta, *rest)
 
     monkeypatch.setattr(idx.fs, "write_atomic", write_atomic)
     monkeypatch.setattr(idx, "_save_meta", save)
@@ -170,6 +173,45 @@ def test_search_during_retrain_scores_with_the_adopted_snapshot(
     search_ids(idx, VectorQuery("colbert", doc_tokens(3)))
     assert idx._serve_slot.meta is idx._meta
     np.testing.assert_array_equal(idx._serve_slot.C, new_c)
+
+
+def test_failed_retrain_flip_keeps_the_trained_state_on_disk(spark, tmp_path, monkeypatch):
+    """set_coarse_quantizer whose flip fails: a fresh load still reads
+    the centroids the committed meta was published with and answers as
+    before. vacuum keeps that live generation and collects the failed
+    one's files; the retry publishes the new centroids."""
+    idx = Index.create(spark, str(tmp_path / "idx"), make_schema("none"))
+    docs = make_docs(spark, range(12))
+    idx.train(docs)
+    idx.auto_compact = False
+    idx.add(docs)
+    tree = OrQuery([VectorQuery("colbert", doc_tokens(3)), VectorQuery("colbert", doc_tokens(5))])
+
+    def answer(ix):
+        return [(r.doc_id, r.score) for r in ix.search(0, tree, k=5, opts=OPTS).collect()]
+
+    before, old_c = answer(idx), idx.centroids["colbert"]
+    new_c = old_c[::-1].copy()
+
+    def flaky(meta):
+        raise OSError("injected flip failure")
+
+    monkeypatch.setattr(idx, "_save_meta", flaky)
+    with pytest.raises(OSError, match="injected"):
+        idx.set_coarse_quantizer("colbert", new_c)
+    monkeypatch.undo()
+    fresh = Index.load(spark, idx.path)
+    np.testing.assert_array_equal(fresh.centroids["colbert"], old_c)
+    assert answer(fresh) == before
+
+    removed = fresh.vacuum(min_age_s=0)
+    assert sorted(r.split("/")[0] for r in removed) == ["centroids", "quantizers"]
+    fresh = Index.load(spark, idx.path)
+    np.testing.assert_array_equal(fresh.centroids["colbert"], old_c)
+    assert answer(fresh) == before
+
+    idx.set_coarse_quantizer("colbert", new_c)
+    np.testing.assert_array_equal(Index.load(spark, idx.path).centroids["colbert"], new_c)
 
 
 def test_spark_plan_search_reads_one_snapshot(spark, tmp_path, monkeypatch):
@@ -404,9 +446,9 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path, monkeypa
             flipped.append(meta)
             return real_save(meta)
 
-        def adopt(meta, stat, sidecars=None):
+        def adopt(meta, *rest):
             adopted.append(meta)
-            real_adopt(meta, stat, sidecars)
+            real_adopt(meta, *rest)
 
         monkeypatch.setattr(idx, "_save_meta", save)
         monkeypatch.setattr(idx, "_adopt", adopt)
@@ -435,6 +477,7 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path, monkeypa
             except BaseException as exc:  # noqa: BLE001 — reported below
                 errors.append(exc)
 
+        rebuilds = idx.serve_rebuilds
         readers = [threading.Thread(target=reader, args=(o,)) for o in (0, 3, 6)]
         for t in readers:
             t.start()
@@ -454,6 +497,10 @@ def test_rest_searches_read_one_snapshot_during_writes(spark, tmp_path, monkeypa
         assert len(adopted) == len(flipped)
         assert all(a is f for a, f in zip(adopted, flipped))
         assert idx._meta is flipped[-1]
+        # every write carried the serve state: no reader rebuilt it
+        assert idx.serve_rebuilds == rebuilds
+        assert idx.serve_carries == len(writes)
+        assert idx._serve_slot.meta is idx._meta
         assert len(idx._segments("docs")) == 1
         assert [answer(b) for b in bodies] == want
         assert sorted(r.doc_id for r in idx._docs().select("doc_id").collect()) == (

@@ -205,11 +205,27 @@ def _doc(**over) -> dict:
             {"documents": [_doc(fields=[{"name": "colbert", "value": [0.5] * (DIM + 3)}])]},
         ),
         ("/v1/Index/remove/0", [1, 2]),
+        ("/v1/Index/add/0", {"documents": [_doc(fields={"name": "title", "value": "t"})]}),
+        ("/v1/Index/add/0", {"documents": [_doc(fields=["title"])]}),
+        ("/v1/Index/add/0", {"documents": [_doc(fields=[{"value": "t"}])]}),
+        ("/v1/Index/update/0", {"documents": [_doc(fields=[{"name": "title"}])]}),
+        (
+            "/v1/Index/add/0",
+            {"documents": [_doc(fields=[{"name": "colbert", "value": ["x"] * DIM}])]},
+        ),
+        ("/v1/Index/add/0", {"documents": [_doc(fields=[{"name": "colbert", "value": []}])]}),
+        ("/v1/Index/add/0", {"documents": [_doc(fields=[{"name": "title", "value": "t"}])]}),
+        (
+            "/v1/Index/add/0",
+            {"documents": [_doc(fields=_doc()["fields"] + [{"name": "rank_i", "value": "seven"}])]},
+        ),
     ],
     ids=[
         "tenant-word", "tenant-float", "documents-object", "documents-string",
         "ids-int", "doc-no-id", "doc-not-object", "id-string", "id-float",
         "ids-string", "unknown-field", "tensor-length", "body-not-object",
+        "fields-object", "field-not-object", "field-no-name", "field-no-value",
+        "tensor-non-numeric", "tensor-empty", "tensor-missing", "scalar-type",
     ],
 )
 def test_malformed_mutation_answers_400(server, path, body):
